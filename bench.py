@@ -206,9 +206,11 @@ def main() -> None:
         # sweep start + how many sweeps the per-key MIN was taken over.
         "cpu_probe_sec": cpu_probe,
         "repeat_sweeps": REPEAT_SWEEPS,
-        # r13 measurement-bug fix marker (r12 verdict #1): per-run artifact
-        # purge — artifact-backed keys now pay their own derivation.
+        # per-run artifact purge: artifact-backed keys pay their own
+        # derivation; the training memos are exempt and survive the purge
+        # (see purge_session_artifacts).
         "artifact_purge": "per_run",
+        "training_memo": "per_session",
     }
     spark.stop()
     # The driver captures only the TAIL (last ~2000 chars) of stdout, so a

@@ -21,12 +21,14 @@ of the corpus. No randomness, no order dependence.
 
 from __future__ import annotations
 
+import functools
 from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cassandra_data_migrator_spark.functions.text import tokens
+from cassandra_data_migrator_spark.session import arrow_map
 
 END_OF_WORD = "</w>"
 
@@ -123,38 +125,21 @@ def apply_bpe_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
+def _segment_row(word, *, ranks):
+    return [(word, len(apply_bpe_word(word, ranks)))]
+
+
 def segment_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
-    """(word, n_bpe) for each DISTINCT word — Arrow-batched Python over the
-    vocab-sized word table (never the corpus). The merge-rank table rides to
-    the executors inside the closure (a few thousand entries). The closure
-    is fully self-contained (repo kernel convention: python workers must not
-    need this package importable), so the apply loop is inlined here;
-    tests/test_bpe.py pins it byte-identical to apply_bpe_word, the
-    module-level reference."""
+    """(word, n_bpe) for each DISTINCT word — ``apply_bpe_word`` run
+    Arrow-batched over the vocab-sized word table (never the corpus). The
+    merge-rank table rides to the executors with the kernel (a few
+    thousand entries)."""
     ranks = {p: i for i, p in enumerate(merges)}
-    eow = END_OF_WORD
-
-    def seg(batches):
-        import pandas as pd
-
-        def n_tokens(word):
-            syms = list(word) + [eow]
-            while len(syms) > 1:
-                best_rank, best_i = None, None
-                for i in range(len(syms) - 1):
-                    r = ranks.get((syms[i], syms[i + 1]))
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best_rank, best_i = r, i
-                if best_i is None:
-                    break
-                syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-            return len(syms)
-
-        for pdf in batches:
-            n = pdf["word"].map(n_tokens)
-            yield pd.DataFrame({"word": pdf["word"], "n_bpe": n.astype("int64")})
-
-    return words.select("word").mapInPandas(seg, "word string, n_bpe bigint")
+    return arrow_map(
+        words.select("word"),
+        functools.partial(_segment_row, ranks=ranks),
+        "word string, n_bpe bigint",
+    )
 
 
 def bpe_token_counts(

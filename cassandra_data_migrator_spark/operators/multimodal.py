@@ -1,16 +1,15 @@
-"""Multimodal column plumbing (north-star mandate): image/audio/video as
-opaque ``binary`` columns with typed metadata, processed by Arrow-batched
-Pandas functions over ``mapInPandas``.
+"""Multimodal column plumbing: image/audio/video as opaque ``binary``
+columns with typed metadata, processed by Arrow-batched kernels.
 
-The Spark-side machinery here is real and tested: schemas, batch iteration,
-partition-preserving transforms. Binary PPM (P6) images, RIFF/WAVE PCM
-audio, and YUV4MPEG2 mono video decode FOR REAL — pure Python parsers
-(decode_ppm / decode_wav / decode_y4m and their Arrow kernels), no codec
-libs, each oracled end-to-end by its multimodal_* key. Compressed-codec
-work (PIL/ffmpeg/torchaudio) is NOT in this container, so those paths
-remain stubbed behind
-``NotImplementedError`` with a deterministic fake used by tests — swapping
-in a real decoder changes one function, not the pipeline.
+Binary PPM (P6), 8-bit truecolor PNG, baseline and progressive JPEG,
+RIFF/WAVE PCM audio and YUV4MPEG2 mono video decode FOR REAL — pure
+Python parsers (decode_ppm / decode_png / decode_jpeg / decode_wav /
+decode_y4m), no codec libs, each oracled end-to-end by its multimodal_*
+key. Every DataFrame kernel here is a per-row module function run through
+``session.arrow_map``, so each decoder and encoder has one implementation.
+Compressed-codec work beyond these (PIL/ffmpeg/torchaudio) is NOT in this
+container; those paths stay stubbed behind ``NotImplementedError`` with a
+deterministic fake used by tests.
 
 Design for 100 TB: binary payloads never pass through Python row-at-a-time —
 mapInPandas streams Arrow record batches; metadata-only operations (filtering
@@ -20,8 +19,13 @@ touch the payload bytes.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import hashlib
+import math
+import struct
+import zlib
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -33,6 +37,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from cassandra_data_migrator_spark.session import arrow_map
 
 MEDIA_SCHEMA = StructType(
     [
@@ -56,8 +62,7 @@ FEATURE_SCHEMA = StructType(
 
 
 def decode_ppm(payload: bytes) -> tuple[int, int, int, bytes]:
-    """REAL image decode for binary PPM (P6) — pure Python, no codec libs
-    (round-5 verdict #5: retire the stub for one uncompressed format).
+    """REAL image decode for binary PPM (P6) — pure Python, no codec libs.
 
     Parses the NetPBM P6 header (magic, whitespace/comment-tolerant width,
     height, maxval, exactly one whitespace byte, then raw interleaved RGB)
@@ -255,9 +260,6 @@ def encode_png(width: int, height: int, rgb: bytes, *, n_idat: int = 2) -> bytes
     just the filter-0 fast path. IDAT is split into ``n_idat`` chunks to
     force multi-IDAT concatenation in decoders. Every chunk carries its
     CRC-32 per the spec."""
-    import struct
-    import zlib
-
     if width < 1 or height < 1:
         raise ValueError(f"invalid PNG dimensions {width}x{height}")
     bpp = 3  # bytes per pixel (8-bit RGB)
@@ -323,8 +325,7 @@ def encode_png(width: int, height: int, rgb: bytes, *, n_idat: int = 2) -> bytes
 
 def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
     """REAL PNG decode — pure Python (stdlib zlib inflate + full filter
-    reconstruction), retiring the round-6 compressed-codec stub for the
-    dominant web image format (round-6 verdict next-round #2). Supports
+    reconstruction) for the dominant web image format. Supports
     the profile a training corpus scrubber actually needs deterministic
     bytes from: 8-bit truecolor (color type 2), non-interlaced. Walks the
     chunk list verifying EVERY chunk's CRC-32, requires IHDR first and
@@ -335,9 +336,6 @@ def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
     unsupported IHDR profile, short/long inflate output, or trailing
     garbage — a corrupt image must fail loudly, never yield silent
     garbage pixels."""
-    import struct
-    import zlib
-
     if len(payload) < len(PNG_SIGNATURE) or not payload.startswith(PNG_SIGNATURE):
         raise ValueError("not a PNG (signature missing)")
     i, n = len(PNG_SIGNATURE), len(payload)
@@ -424,7 +422,7 @@ def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
     return width, height, depth, bytes(out)
 
 
-# --- baseline JPEG (r07): real huffman + dequant + IDCT, stdlib-only -----
+# --- baseline JPEG: real huffman + dequant + IDCT, stdlib-only -----
 
 # Annex K.1 luminance quantization table, with the DC step forced to 8:
 # a FLAT 8x8 block has only a DC coefficient (8·(v−128)), so quantizing it
@@ -469,6 +467,14 @@ JPEG_ZIGZAG = [
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ]
 
+# float IDCT tables shared by both decode paths: cos((2x+1)·u·π/16) and
+# the C(u) normalization
+_IDCT_COS = [
+    [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
+    for x in range(8)
+]
+_IDCT_C = [1 / math.sqrt(2)] + [1.0] * 7
+
 
 def _jpeg_huff_encode_map(bits, vals):
     """(value -> (code, length)) from a (BITS, HUFFVAL) table pair."""
@@ -494,7 +500,14 @@ def _jpeg_huff_decode_table(bits, vals):
     return out
 
 
+# encode maps built once: every encoder call reuses them
+_LUMA_DC_MAP = _jpeg_huff_encode_map(JPEG_DC_BITS, JPEG_DC_VALS)
+_LUMA_AC_MAP = _jpeg_huff_encode_map(JPEG_AC_BITS, JPEG_AC_VALS)
+
+
 class _JpegBitWriter:
+    __slots__ = ("buf", "acc", "n")
+
     def __init__(self):
         self.buf = bytearray()
         self.acc = 0
@@ -533,15 +546,12 @@ def encode_jpeg_gray(width: int, height: int, blocks: bytes) -> bytes:
     quantization by JPEG_QTABLE, Annex-K huffman DC coding, EOB AC coding,
     byte stuffing). Flat blocks make the lossy pipeline EXACT: DC = 8·s
     quantized by 8 stores s verbatim. Emits SOI/DQT/SOF0/DHT×2/SOS/EOI."""
-    import struct
-
     if width % 8 or height % 8 or width < 8 or height < 8:
         raise ValueError(f"flat-block JPEG needs multiple-of-8 dims, got {width}x{height}")
     bw, bh = width // 8, height // 8
     if len(blocks) != bw * bh:
         raise ValueError(f"block section is {len(blocks)} bytes, expected {bw * bh}")
-    dc_map = _jpeg_huff_encode_map(JPEG_DC_BITS, JPEG_DC_VALS)
-    ac_map = _jpeg_huff_encode_map(JPEG_AC_BITS, JPEG_AC_VALS)
+    dc_map, ac_map = _LUMA_DC_MAP, _LUMA_AC_MAP
     w = _JpegBitWriter()
     prev_dc = 0
     for v in blocks:
@@ -573,15 +583,13 @@ def encode_jpeg_gray_rst(
     width: int, height: int, blocks: bytes, restart_interval: int
 ) -> bytes:
     """``encode_jpeg_gray`` with REAL restart intervals (T.81 §B.2.4.4 /
-    §E.2.4) — the layout real crawl JPEGs overwhelmingly carry (judge r09
-    #5): a DRI segment declares the MCU interval, the scan is split into
+    §E.2.4) — the layout real crawl JPEGs overwhelmingly carry: a DRI
+    segment declares the MCU interval, the scan is split into
     byte-aligned restart segments separated by RST0..RST7 markers cycling
     mod 8, and the DC predictor resets at every boundary (each segment's
     first DC diff is vs 0, not the previous block). Grayscale 1x1
     sampling: one MCU = one 8x8 block. Flat-block exactness is unchanged
     — the interval only re-anchors the DC chain."""
-    import struct
-
     if restart_interval < 1 or restart_interval > 65535:
         raise ValueError(f"restart interval out of range: {restart_interval}")
     if width % 8 or height % 8 or width < 8 or height < 8:
@@ -589,8 +597,7 @@ def encode_jpeg_gray_rst(
     bw, bh = width // 8, height // 8
     if len(blocks) != bw * bh:
         raise ValueError(f"block section is {len(blocks)} bytes, expected {bw * bh}")
-    dc_map = _jpeg_huff_encode_map(JPEG_DC_BITS, JPEG_DC_VALS)
-    ac_map = _jpeg_huff_encode_map(JPEG_AC_BITS, JPEG_AC_VALS)
+    dc_map, ac_map = _LUMA_DC_MAP, _LUMA_AC_MAP
     scan = bytearray()
     w = _JpegBitWriter()
     prev_dc = 0
@@ -635,6 +642,7 @@ def encode_jpeg_gray_rst(
 # six 3-bit codes for EOB0..EOB5 (runs up to 63 blocks)
 JPEG_PROG_AC_BITS = [0, 0, 0, 6, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
 JPEG_PROG_AC_VALS = [0x00, 0x10, 0x20, 0x30, 0x40, 0x50]
+_PROG_AC_MAP = _jpeg_huff_encode_map(JPEG_PROG_AC_BITS, JPEG_PROG_AC_VALS)
 
 
 def _put_eobrun(w, ac_map, run: int) -> None:
@@ -673,8 +681,6 @@ def encode_jpeg_gray_progressive(
     for any int, so the reassembled DC equals the baseline value and the
     decoder recovers the exact pixels. Decoded by decode_jpeg's §G path;
     the DuckDB oracle re-slices the ORIGINAL text bytes."""
-    import struct
-
     if width % 8 or height % 8 or width < 8 or height < 8:
         raise ValueError(
             f"flat-block JPEG needs multiple-of-8 dims, got {width}x{height}"
@@ -684,8 +690,7 @@ def encode_jpeg_gray_progressive(
         raise ValueError(
             f"block section is {len(blocks)} bytes, expected {bw * bh}"
         )
-    dc_map = _jpeg_huff_encode_map(JPEG_DC_BITS, JPEG_DC_VALS)
-    ac_map = _jpeg_huff_encode_map(JPEG_PROG_AC_BITS, JPEG_PROG_AC_VALS)
+    dc_map, ac_map = _LUMA_DC_MAP, _PROG_AC_MAP
     dcs = [v - 128 for v in blocks]
 
     # scan 1: DC first, Al=1 — DPCM chain over the shifted values
@@ -762,8 +767,6 @@ def _decode_progressive_gray(
     the baseline path. Scan-order violations (refinement before first,
     duplicate first scans, non-unit approximation steps, bad bands) and
     restart markers refuse loudly."""
-    import math
-
     n = len(payload)
     if comp_q not in qtables:
         raise ValueError(f"missing quantization table {comp_q}")
@@ -1020,11 +1023,7 @@ def _decode_progressive_gray(
             break  # EOI reached
 
     # ---- dequantize + IDCT (same math as the baseline path) ----
-    cos_t = [
-        [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-        for x in range(8)
-    ]
-    c = [1 / math.sqrt(2)] + [1.0] * 7
+    cos_t, c = _IDCT_COS, _IDCT_C
     out = bytearray(width * height)
     for by in range(bh):
         for bx in range(bw):
@@ -1069,10 +1068,10 @@ def _decode_progressive_gray(
 
 
 def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
-    """REAL baseline JPEG decode — pure Python, stdlib-only: baseline
-    sequential DCT (SOF0), 8-bit, single-component grayscale OR
-    3-component color with per-component sampling factors 1 or 2 —
-    4:4:4, 4:2:2, 4:4:0, AND 4:2:0 (r09 — real camera/web corpora are
+    """REAL baseline JPEG decode — pure Python (numpy only for the color
+    conversion): baseline sequential DCT (SOF0), 8-bit, single-component
+    grayscale OR 3-component color with per-component sampling factors 1
+    or 2 — 4:4:4, 4:2:2, 4:4:0, AND 4:2:0 (real camera/web corpora are
     overwhelmingly 4:2:0). Implements the full pipeline — marker walk
     (APPn/COM skipped by their declared lengths), DQT (8-bit tables),
     DHT huffman table builds (multiple slots), SOS entropy-coded
@@ -1086,19 +1085,15 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
     floor(x+0.5) rounding (chosen over round() so an ANSI-SQL oracle
     computes identical IEEE arithmetic). Returns (width, height,
     n_components, pixel_bytes row-major, RGB-interleaved when
-    n_components == 3). Restart intervals decode (r10, judge r09 #5):
-    DRI (T.81 §B.2.4.4) sets the MCU interval, RSTn markers split the
+    n_components == 3). Restart intervals decode: DRI (T.81 §B.2.4.4) sets the MCU interval, RSTn markers split the
     scan into byte-aligned segments with DC predictors reset per
     interval (§E.2.4); wrong-order / missing / unconsumed segments
-    refuse loudly. Progressive (SOF2, T.81 §G) decodes since r11 for
-    the single-component path — multi-scan coefficient accumulation,
+    refuse loudly. Progressive (SOF2, T.81 §G) decodes for the
+    single-component path — multi-scan coefficient accumulation,
     spectral selection, successive approximation, EOBRUN (see
     _decode_progressive_gray); COLOR progressive and sampling factors
     3/4 stay honest refusals. Bounded: output allocation is
     width*height*nc from SOF0, validated against 65535x65535 max."""
-    import math
-    import struct
-
     if len(payload) < 4 or payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (SOI missing)")
     i, n = 2, len(payload)
@@ -1315,12 +1310,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
             v -= (1 << cat) - 1
         return v
 
-    # precomputed IDCT cosines
-    cos_t = [
-        [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-        for x in range(8)
-    ]
-    c = [1 / math.sqrt(2)] + [1.0] * 7
+    cos_t, c, zigzag = _IDCT_COS, _IDCT_C, JPEG_ZIGZAG
 
     # general interleaved-MCU geometry (T.81 §A.2.3): an MCU covers
     # 8·hmax × 8·vmax full-res pixels and carries h×v blocks per
@@ -1368,8 +1358,8 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                                 raise ValueError(
                                     "JPEG AC run overflows the block"
                                 )
-                            coeffs[JPEG_ZIGZAG[k]] = (
-                                receive_extend(size) * qt[JPEG_ZIGZAG[k]]
+                            coeffs[zigzag[k]] = (
+                                receive_extend(size) * qt[zigzag[k]]
                             )
                             k += 1
                         # sparse IDCT: iterate only the nonzero
@@ -1381,40 +1371,35 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                         nz = [
                             (idx, cf) for idx, cf in enumerate(coeffs) if cf
                         ]
+                        # planes are MCU-padded: every block lands fully
+                        # in bounds, no per-pixel crop here
+                        out = planes[ci]
+                        base = ((my * cvs + vy) * 8) * pw + (mx * chs + hx) * 8
                         if not nz or (len(nz) == 1 and nz[0][0] == 0):
                             # DC-only fast path: every sample = DC/8
                             # (identical to the general path:
                             # c0*c0*DC/4 = DC/8, exact for integer DC)
                             val = int(round(coeffs[0] / 8)) + 128
-                            val = 0 if val < 0 else (255 if val > 255 else val)
-                            block = [float(val)] * 64
-                            flat_done = True
-                        else:
-                            acc = [0.0] * 64
-                            for idx, cf in nz:
-                                v, u = idx // 8, idx % 8
-                                cvu = c[v] * c[u] * cf
-                                for y in range(8):
-                                    cy = cos_t[y][v] * cvu
-                                    row = y * 8
-                                    for x in range(8):
-                                        acc[row + x] += cy * cos_t[x][u]
-                            block = acc
-                            flat_done = False
-                        # planes are MCU-padded: every block lands fully
-                        # in bounds, no per-pixel crop here
-                        out = planes[ci]
-                        base = ((my * cvs + vy) * 8) * pw + (mx * chs + hx) * 8
+                            row8 = bytes(
+                                [0 if val < 0 else (255 if val > 255 else val)]
+                            ) * 8
+                            for y in range(8):
+                                out[base + y * pw : base + y * pw + 8] = row8
+                            continue
+                        acc = [0.0] * 64
+                        for idx, cf in nz:
+                            v, u = idx // 8, idx % 8
+                            cvu = c[v] * c[u] * cf
+                            for y in range(8):
+                                cy = cos_t[y][v] * cvu
+                                row = y * 8
+                                for x in range(8):
+                                    acc[row + x] += cy * cos_t[x][u]
                         for y in range(8):
                             row_off = base + y * pw
                             brow = y * 8
-                            if flat_done:
-                                out[row_off : row_off + 8] = bytes(
-                                    [int(block[0])]
-                                ) * 8
-                                continue
                             for x in range(8):
-                                val = int(round(block[brow + x] / 4)) + 128
+                                val = int(round(acc[brow + x] / 4)) + 128
                                 out[row_off + x] = (
                                     0 if val < 0 else (255 if val > 255 else val)
                                 )
@@ -1430,49 +1415,30 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
         return width, height, 1, bytes(gray)
     # chroma upsampling by sample replication (nearest-neighbor: full-res
     # (x, y) reads component sample (x·h//hmax, y·v//vmax) — integer
-    # scale since h, v ∈ {1, 2}), then JFIF YCbCr -> RGB. floor(x + 0.5)
-    # instead of round(): Python round() is half-even, SQL ROUND is
-    # half-away — floor(+0.5) is the ONE rounding both engines state
-    # identically on identical IEEE doubles.
+    # scale since h, v ∈ {1, 2}), then JFIF YCbCr -> RGB in float64 numpy:
+    # the same IEEE operations, in the same order, as the scalar formula
+    # r = floor(y + 1.402·cr + 0.5). floor(x + 0.5) instead of round():
+    # Python round() is half-even, SQL ROUND is half-away — floor(+0.5)
+    # is the ONE rounding both engines state identically on identical
+    # IEEE doubles.
     full = []
     for ci in range(nc):
-        _, _, chs, cvs = comps[ci]
-        pw = plane_dims[ci][0]
-        sx, sy = hmax // chs, vmax // cvs
-        src = planes[ci]
-        if sx == 1 and sy == 1:
-            if pw == width:
-                full.append(src[: width * height])
-                continue
-            comp_full = bytearray(width * height)
-            for y in range(height):
-                comp_full[y * width : (y + 1) * width] = src[
-                    y * pw : y * pw + width
-                ]
-            full.append(comp_full)
-            continue
-        comp_full = bytearray(width * height)
-        for y in range(height):
-            srow = (y // sy) * pw
-            drow = y * width
-            if sx == 1:
-                comp_full[drow : drow + width] = src[srow : srow + width]
-            else:
-                for x in range(width):
-                    comp_full[drow + x] = src[srow + x // sx]
-        full.append(comp_full)
-    rgb = bytearray(width * height * 3)
-    yp, cbp, crp = full
-    for px in range(width * height):
-        yv, cb, cr = yp[px], cbp[px] - 128, crp[px] - 128
-        r = math.floor(yv + 1.402 * cr + 0.5)
-        g = math.floor(yv - 0.344136 * cb - 0.714136 * cr + 0.5)
-        b = math.floor(yv + 1.772 * cb + 0.5)
-        o = px * 3
-        rgb[o] = 0 if r < 0 else (255 if r > 255 else r)
-        rgb[o + 1] = 0 if g < 0 else (255 if g > 255 else g)
-        rgb[o + 2] = 0 if b < 0 else (255 if b > 255 else b)
-    return width, height, 3, bytes(rgb)
+        pw, ph = plane_dims[ci]
+        arr = np.frombuffer(planes[ci], dtype=np.uint8).reshape(ph, pw)
+        sx, sy = hmax // comps[ci][2], vmax // comps[ci][3]
+        if sy > 1:
+            arr = np.repeat(arr, sy, axis=0)
+        if sx > 1:
+            arr = np.repeat(arr, sx, axis=1)
+        full.append(arr[:height, :width].reshape(-1).astype(np.float64))
+    yv, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
+    rgb = np.empty((width * height, 3), dtype=np.uint8)
+    rgb[:, 0] = np.clip(np.floor(yv + 1.402 * cr + 0.5), 0.0, 255.0)
+    rgb[:, 1] = np.clip(
+        np.floor(yv - 0.344136 * cb - 0.714136 * cr + 0.5), 0.0, 255.0
+    )
+    rgb[:, 2] = np.clip(np.floor(yv + 1.772 * cb + 0.5), 0.0, 255.0)
+    return width, height, 3, rgb.tobytes()
 
 
 # Annex-K recommended chrominance huffman tables (ITU-T T.81 Tables
@@ -1497,6 +1463,14 @@ JPEG_AC_VALS_CHROMA = [
     0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2, 0xF3, 0xF4,
     0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
+# (dc, ac) encode maps per component: luma for Y, chroma for Cb and Cr
+_COLOR_MAPS = [
+    (_LUMA_DC_MAP, _LUMA_AC_MAP),
+    (
+        _jpeg_huff_encode_map(JPEG_DC_BITS_CHROMA, JPEG_DC_VALS_CHROMA),
+        _jpeg_huff_encode_map(JPEG_AC_BITS_CHROMA, JPEG_AC_VALS_CHROMA),
+    ),
+]
 
 
 def encode_jpeg_color(width: int, height: int, blocks: bytes) -> bytes:
@@ -1511,8 +1485,6 @@ def encode_jpeg_color(width: int, height: int, blocks: bytes) -> bytes:
     s−128 verbatim, so decode_jpeg recovers the integer YCbCr planes
     bit-exactly and only the documented floor(x+0.5) RGB conversion adds
     arithmetic an oracle must (and can) replicate."""
-    import struct
-
     if width % 8 or height % 8 or width < 8 or height < 8:
         raise ValueError(
             f"flat-block JPEG needs multiple-of-8 dims, got {width}x{height}"
@@ -1522,16 +1494,7 @@ def encode_jpeg_color(width: int, height: int, blocks: bytes) -> bytes:
         raise ValueError(
             f"block section is {len(blocks)} bytes, expected {bw * bh * 3}"
         )
-    maps = [
-        (
-            _jpeg_huff_encode_map(JPEG_DC_BITS, JPEG_DC_VALS),
-            _jpeg_huff_encode_map(JPEG_AC_BITS, JPEG_AC_VALS),
-        ),
-        (
-            _jpeg_huff_encode_map(JPEG_DC_BITS_CHROMA, JPEG_DC_VALS_CHROMA),
-            _jpeg_huff_encode_map(JPEG_AC_BITS_CHROMA, JPEG_AC_VALS_CHROMA),
-        ),
-    ]
+    maps = _COLOR_MAPS
     w = _JpegBitWriter()
     prev_dc = [0, 0, 0]
     for mcu in range(bw * bh):
@@ -1596,8 +1559,6 @@ def encode_jpeg_color_420(width: int, height: int, mcus: bytes) -> bytes:
     the identity, so decode_jpeg recovers the integer YCbCr planes
     bit-exactly and only the documented floor(x+0.5) RGB conversion adds
     arithmetic an oracle must (and can) replicate."""
-    import struct
-
     if width % 16 or height % 16 or width < 16 or height < 16:
         raise ValueError(
             f"flat-MCU 4:2:0 JPEG needs multiple-of-16 dims, got "
@@ -1608,16 +1569,7 @@ def encode_jpeg_color_420(width: int, height: int, mcus: bytes) -> bytes:
         raise ValueError(
             f"MCU section is {len(mcus)} bytes, expected {mw * mh * 3}"
         )
-    maps = [
-        (
-            _jpeg_huff_encode_map(JPEG_DC_BITS, JPEG_DC_VALS),
-            _jpeg_huff_encode_map(JPEG_AC_BITS, JPEG_AC_VALS),
-        ),
-        (
-            _jpeg_huff_encode_map(JPEG_DC_BITS_CHROMA, JPEG_DC_VALS_CHROMA),
-            _jpeg_huff_encode_map(JPEG_AC_BITS_CHROMA, JPEG_AC_VALS_CHROMA),
-        ),
-    ]
+    maps = _COLOR_MAPS
     w = _JpegBitWriter()
     prev_dc = [0, 0, 0]
     for mcu in range(mw * mh):
@@ -1686,8 +1638,6 @@ def build_exif_app1(
     out-of-line bytes num/den) — then the out-of-line value area. Both
     endiannesses are first-class: real camera files ship both (II from
     most makers, MM from classic TIFF-lineage firmware)."""
-    import struct
-
     bo = ">" if big_endian else "<"
     make_b = make.encode("ascii") + b"\x00"
     n_entries = 3
@@ -1731,8 +1681,6 @@ def parse_exif(payload: bytes) -> tuple[str, int, float, str, int]:
     orientation, xres, make, n_ifd_entries). ValueError on anything
     malformed — truncated IFD, bad magic, out-of-range offsets — never
     silent garbage."""
-    import struct
-
     if len(payload) < 4 or payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (SOI missing)")
     i, n = 2, len(payload)
@@ -1816,225 +1764,42 @@ EXIF_STATS_SCHEMA = StructType(
 )
 
 
+def _jpeg_exif_encode_row(media_id, make):
+    # a flat 8x8 grayscale JPEG whose APP1 follows the SOI
+    jpeg = encode_jpeg_gray(8, 8, bytes([media_id % 95 + 32]))
+    app1 = build_exif_app1(
+        1 + media_id % 8,
+        72 + (media_id % 4) * 72,
+        str(make),
+        big_endian=media_id % 2 == 1,
+    )
+    return [(media_id, jpeg[:2] + app1 + jpeg[2:])]
+
+
 def jpeg_exif_encode(df: DataFrame) -> DataFrame:
-    """Arrow-batched Exif-carrying JPEG encode over mapInPandas: each
-    input row (``media_id``, ``make``) becomes a REAL minimal JPEG — SOI,
-    a genuine Exif APP1 (TIFF header, IFD0 with Make/Orientation/
-    XResolution, out-of-line ASCII + RATIONAL values; byte order
-    alternates II/MM by media_id parity so BOTH endianness paths are
-    exercised at every scale), then the full flat-block grayscale
-    machinery for one 8x8 block and EOI. Orientation = 1 + id%8,
-    XResolution = 72 + (id%4)*72 — the deterministic fixture contract the
-    oracle restates. Closure self-contained (repo kernel convention);
-    pinned byte-identical to build_exif_app1 by tests."""
-    dc_bits, dc_vals = JPEG_DC_BITS, JPEG_DC_VALS
-    ac_bits, ac_vals = JPEG_AC_BITS, JPEG_AC_VALS
-    qtable, zigzag = JPEG_QTABLE, JPEG_ZIGZAG
+    """Arrow-batched Exif-carrying JPEG encode: each input row
+    (``media_id``, ``make``) becomes a REAL minimal JPEG — SOI, a genuine
+    Exif APP1 (``build_exif_app1``; byte order alternates II/MM by
+    media_id parity so BOTH endianness paths are exercised at every
+    scale), then one flat 8x8 grayscale block (``encode_jpeg_gray``) and
+    EOI. Orientation = 1 + id%8, XResolution = 72 + (id%4)*72 — the
+    deterministic fixture contract the oracle restates."""
+    return arrow_map(
+        df.select("media_id", "make"), _jpeg_exif_encode_row, PNG_PAYLOAD_SCHEMA
+    )
 
-    def _batches(it: Iterator) -> Iterator:
-        import struct
 
-        import pandas as pd
-
-        def huff_map(bits, vals):
-            out, code, k = {}, 0, 0
-            for length in range(1, 17):
-                for _ in range(bits[length]):
-                    out[vals[k]] = (code, length)
-                    code += 1
-                    k += 1
-                code <<= 1
-            return out
-
-        dc_map, ac_map = huff_map(dc_bits, dc_vals), huff_map(ac_bits, ac_vals)
-
-        def app1(orientation, xres_num, make, big_endian):
-            bo = ">" if big_endian else "<"
-            make_b = make.encode("ascii") + b"\x00"
-            after_ifd = 8 + 2 + 3 * 12 + 4
-            make_off, rat_off = after_ifd, after_ifd + len(make_b)
-
-            def entry(tag, typ, count, value_bytes):
-                return struct.pack(bo + "HHI", tag, typ, count) + value_bytes
-
-            tiff = (
-                (b"MM" if big_endian else b"II")
-                + struct.pack(bo + "H", 42)
-                + struct.pack(bo + "I", 8)
-                + struct.pack(bo + "H", 3)
-                + entry(0x010F, 2, len(make_b), struct.pack(bo + "I", make_off))
-                + entry(0x0112, 3, 1, struct.pack(bo + "H", orientation) + b"\x00\x00")
-                + entry(0x011A, 5, 1, struct.pack(bo + "I", rat_off))
-                + struct.pack(bo + "I", 0)
-                + make_b
-                + struct.pack(bo + "II", xres_num, 1)
-            )
-            data = b"Exif\x00\x00" + tiff
-            return struct.pack(">HH", 0xFFE1, len(data) + 2) + data
-
-        def seg(marker, data):
-            return struct.pack(">HH", marker, len(data) + 2) + data
-
-        def encode(media_id, make):
-            # one flat 8x8 block: DC diff = level - 128, EOB, 1-pad
-            level = (media_id % 95) + 32
-            dc = level - 128
-            mag, cat = abs(dc), 0
-            while mag:
-                mag >>= 1
-                cat += 1
-            buf, acc, nb = bytearray(), 0, 0
-
-            def put(code, length):
-                nonlocal acc, nb
-                acc = (acc << length) | (code & ((1 << length) - 1))
-                nb += length
-                while nb >= 8:
-                    b = (acc >> (nb - 8)) & 0xFF
-                    buf.append(b)
-                    if b == 0xFF:
-                        buf.append(0x00)
-                    nb -= 8
-
-            code, ln = dc_map[cat]
-            put(code, ln)
-            if cat:
-                put(dc if dc >= 0 else dc + (1 << cat) - 1, cat)
-            code, ln = ac_map[0x00]
-            put(code, ln)
-            if nb:
-                pad = 8 - nb
-                put((1 << pad) - 1, pad)
-            return (
-                b"\xff\xd8"
-                + app1(
-                    1 + media_id % 8,
-                    72 + (media_id % 4) * 72,
-                    make,
-                    media_id % 2 == 1,
-                )
-                + seg(0xFFDB, bytes([0]) + bytes(qtable[zigzag[i]] for i in range(64)))
-                + seg(0xFFC0, struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]))
-                + seg(0xFFC4, bytes([0x00]) + bytes(dc_bits[1:]) + bytes(dc_vals))
-                + seg(0xFFC4, bytes([0x10]) + bytes(ac_bits[1:]) + bytes(ac_vals))
-                + seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-                + bytes(buf)
-                + b"\xff\xd9"
-            )
-
-        for pdf in it:
-            ids, payloads = [], []
-            for media_id, make in zip(pdf["media_id"], pdf["make"]):
-                ids.append(media_id)
-                payloads.append(encode(int(media_id), str(make)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return df.mapInPandas(_batches, PNG_PAYLOAD_SCHEMA)
+def _jpeg_exif_stats_row(media_id, payload):
+    return [(media_id, *parse_exif(bytes(payload)))]
 
 
 def jpeg_exif_stats(df: DataFrame) -> DataFrame:
-    """Arrow-batched REAL Exif parse over mapInPandas: marker walk to
-    APP1, TIFF header validation (byte-order mark, magic 42), IFD0 walk
-    extracting Make (inline-or-offset ASCII), Orientation (inline SHORT)
-    and XResolution (offset RATIONAL, zero denominator rejected) under
-    EITHER endianness. Closure self-contained; pinned identical to
-    parse_exif (the module reference) by tests."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import struct
-
-        import pandas as pd
-
-        def parse(payload: bytes):
-            if len(payload) < 4 or payload[:2] != b"\xff\xd8":
-                raise ValueError("not a JPEG (SOI missing)")
-            i, n = 2, len(payload)
-            app1 = None
-            while i + 4 <= n:
-                if payload[i] != 0xFF:
-                    raise ValueError(f"expected a marker at offset {i}")
-                marker = payload[i + 1]
-                if marker in (0xD8, 0xD9) or marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                    i += 2
-                    continue
-                (seglen,) = struct.unpack(">H", payload[i + 2 : i + 4])
-                if seglen < 2 or i + 2 + seglen > n:
-                    raise ValueError("truncated JPEG segment")
-                if marker == 0xE1:
-                    app1 = payload[i + 4 : i + 2 + seglen]
-                    break
-                if marker == 0xDA:
-                    break
-                i += 2 + seglen
-            if app1 is None:
-                raise ValueError("JPEG has no APP1 segment")
-            if app1[:6] != b"Exif\x00\x00":
-                raise ValueError("APP1 is not Exif")
-            t = app1[6:]
-            if len(t) < 8:
-                raise ValueError("truncated TIFF header")
-            if t[:2] == b"II":
-                bo, bo_name = "<", "II"
-            elif t[:2] == b"MM":
-                bo, bo_name = ">", "MM"
-            else:
-                raise ValueError("bad TIFF byte-order mark")
-            (magic,) = struct.unpack(bo + "H", t[2:4])
-            if magic != 42:
-                raise ValueError("bad TIFF magic")
-            (ifd_off,) = struct.unpack(bo + "I", t[4:8])
-            if ifd_off + 2 > len(t):
-                raise ValueError("IFD offset out of range")
-            (n_entries,) = struct.unpack(bo + "H", t[ifd_off : ifd_off + 2])
-            if ifd_off + 2 + n_entries * 12 + 4 > len(t):
-                raise ValueError("truncated IFD")
-            orientation = xres = make = None
-            for e in range(n_entries):
-                off = ifd_off + 2 + e * 12
-                tag, typ, count = struct.unpack(bo + "HHI", t[off : off + 8])
-                val = t[off + 8 : off + 12]
-                if tag == 0x0112 and typ == 3 and count == 1:
-                    (orientation,) = struct.unpack(bo + "H", val[:2])
-                elif tag == 0x011A and typ == 5 and count == 1:
-                    (roff,) = struct.unpack(bo + "I", val)
-                    if roff + 8 > len(t):
-                        raise ValueError("RATIONAL offset out of range")
-                    num, den = struct.unpack(bo + "II", t[roff : roff + 8])
-                    if den == 0:
-                        raise ValueError("zero-denominator RATIONAL")
-                    xres = num / den
-                elif tag == 0x010F and typ == 2:
-                    if count <= 4:
-                        raw = val[:count]
-                    else:
-                        (soff,) = struct.unpack(bo + "I", val)
-                        if soff + count > len(t):
-                            raise ValueError("ASCII offset out of range")
-                        raw = t[soff : soff + count]
-                    make = raw.split(b"\x00", 1)[0].decode("ascii")
-            if orientation is None or xres is None or make is None:
-                raise ValueError("IFD0 missing Make/Orientation/XResolution")
-            return bo_name, orientation, xres, make, n_entries
-
-        for pdf in it:
-            res = {
-                k: []
-                for k in (
-                    "media_id", "byte_order", "orientation",
-                    "xres", "make", "n_entries",
-                )
-            }
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                bo_name, ori, xr, mk, ne = parse(bytes(payload))
-                res["media_id"].append(media_id)
-                res["byte_order"].append(bo_name)
-                res["orientation"].append(ori)
-                res["xres"].append(xr)
-                res["make"].append(mk)
-                res["n_entries"].append(ne)
-            yield pd.DataFrame(res)
-
-    return df.mapInPandas(_batches, EXIF_STATS_SCHEMA)
+    """Arrow-batched REAL Exif parse (``parse_exif``): marker walk to
+    APP1, TIFF header validation, IFD0 walk extracting Make, Orientation
+    and XResolution under EITHER endianness."""
+    return arrow_map(
+        df.select("media_id", "payload"), _jpeg_exif_stats_row, EXIF_STATS_SCHEMA
+    )
 
 
 CQL_VECTOR_SCHEMA = StructType(
@@ -2055,8 +1820,6 @@ def encode_cql_vector(values) -> bytes:
     v5, the type CDM 6 migrates for vector-search tables): each element is
     one IEEE-754 binary32 in network byte order, concatenated — no length
     prefix (the dimension is fixed by the column type). Pure stdlib."""
-    import struct
-
     return struct.pack(f">{len(values)}f", *values)
 
 
@@ -2064,8 +1827,6 @@ def decode_cql_vector(payload: bytes) -> list[float]:
     """Inverse of encode_cql_vector; ValueError on a buffer that is not a
     whole number of 4-byte floats (a truncated wire value must fail
     loudly, never decode to a shorter vector)."""
-    import struct
-
     if len(payload) % 4:
         raise ValueError(
             f"CQL vector payload is {len(payload)} bytes, not a multiple of 4"
@@ -2073,59 +1834,43 @@ def decode_cql_vector(payload: bytes) -> list[float]:
     return list(struct.unpack(f">{len(payload) // 4}f", payload))
 
 
+def _cql_vector_row(vec_id, embedding):
+    a = np.asarray(embedding, dtype=np.float32)
+    wire = encode_cql_vector(a.tolist())
+    back = np.asarray(decode_cql_vector(wire), dtype=np.float32)
+    if len(back) != len(a) or not np.array_equal(
+        a.view(np.uint32), back.view(np.uint32)
+    ):
+        raise ValueError(f"CQL vector roundtrip corrupted vec_id={vec_id}")
+    d = back.astype(np.float64)
+    return [
+        (
+            vec_id, len(back), len(wire),
+            float(d[0]), float(d[-1]), float(d.min()), float(d.max()),
+        )
+    ]
+
+
 def cql_vector_roundtrip(df: DataFrame) -> DataFrame:
-    """Arrow-batched CQL-vector codec over mapInPandas: each row's
-    ``embedding`` (array<float>) is serialized to the wire format
-    (numpy big-endian float32 — byte-identical to encode_cql_vector,
-    pinned by tests), decoded back, VERIFIED bit-identical in-kernel (a
-    codec that corrupts any element aborts the job), and summarized by
+    """Arrow-batched CQL-vector codec: each row's ``embedding``
+    (array<float>) is serialized to the wire format (``encode_cql_vector``),
+    decoded back (``decode_cql_vector``), VERIFIED bit-identical in-kernel
+    (a codec that corrupts any element aborts the job), and summarized by
     order-independent exact observables (dims, wire bytes, first/last/
     min/max as float64 of the float32 values — binary32→binary64 widening
     is exact, so the oracle recomputes the identical doubles from the raw
     column with no accumulation-order risk)."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        def one(vec_id, emb):
-            a = np.asarray(emb, dtype=np.float32)
-            wire = a.astype(">f4").tobytes()
-            if len(wire) % 4:
-                raise ValueError("CQL vector wire length not a multiple of 4")
-            back = np.frombuffer(wire, dtype=">f4").astype(np.float32)
-            if len(back) != len(a) or not np.array_equal(
-                a.view(np.uint32), back.view(np.uint32)
-            ):
-                raise ValueError(
-                    f"CQL vector roundtrip corrupted vec_id={vec_id}"
-                )
-            d = back.astype(np.float64)
-            return (
-                vec_id, len(back), len(wire),
-                float(d[0]), float(d[-1]), float(d.min()), float(d.max()),
-            )
-
-        cols = (
-            "vec_id", "n_dims", "n_bytes",
-            "first_r", "last_r", "min_r", "max_r",
-        )
-        for pdf in it:
-            rows = [
-                one(int(v), e)
-                for v, e in zip(pdf["vec_id"], pdf["embedding"])
-            ]
-            yield pd.DataFrame(dict(zip(cols, map(list, zip(*rows)))))
-
-    return df.mapInPandas(_batches, CQL_VECTOR_SCHEMA)
+    return arrow_map(
+        df.select("vec_id", "embedding"), _cql_vector_row, CQL_VECTOR_SCHEMA
+    )
 
 
 def decode_image(payload: bytes) -> object:
     """Image decode dispatch: binary PPM, 8-bit truecolor PNG, and
     baseline JPEG decode for real (decode_ppm / decode_png / decode_jpeg
-    — stdlib-only, no PIL; grayscale AND color at sampling factors 1–2,
-    i.e. 4:4:4 / 4:2:2 / 4:4:0 / 4:2:0, since r09); progressive JPEG and
-    sampling factors 3/4 stay honestly unimplemented."""
+    — no PIL; grayscale AND color at sampling factors 1–2, i.e. 4:4:4 /
+    4:2:2 / 4:4:0 / 4:2:0, plus grayscale progressive); color progressive
+    JPEG and sampling factors 3/4 stay honestly unimplemented."""
     if payload and payload.startswith(b"P6"):
         return decode_ppm(payload)
     if payload and payload.startswith(PNG_SIGNATURE):
@@ -2158,93 +1903,39 @@ def filter_by_mime(df: DataFrame, mimes: list[str]) -> DataFrame:
     return df.filter(F.col("mime").isin(mimes))
 
 
+def _feature_row(media_id, mime, payload, *, dim, use_fake):
+    raw = bytes(payload) if payload is not None else b""
+    if use_fake:
+        vec = _fake_feature(raw, dim)
+    elif raw.startswith(b"P6"):
+        # geometry + per-channel means, padded/truncated to dim
+        w, h, maxval, px = decode_ppm(raw)
+        n_pix = w * h
+        vec = [
+            float(w), float(h), float(maxval), float(n_pix),
+            *(s / n_pix for s in _channel_sums(px)),
+        ]
+        vec = (vec + [0.0] * dim)[:dim]
+    else:
+        raise NotImplementedError(
+            "compressed-image decoding requires PIL; "
+            "not available in this env (binary PPM decodes for real)"
+        )
+    digest = hashlib.md5(str([round(x, 6) for x in vec]).encode()).hexdigest()
+    return [(media_id, mime, dim, digest)]
+
+
 def extract_features(df: DataFrame, dim: int = 8, use_fake: bool = False) -> DataFrame:
-    """Arrow-batched feature extraction over mapInPandas.
-
-    Batch shape: pandas DataFrames of the input partition; output conforms to
-    FEATURE_SCHEMA. The real path decodes binary PPM (P6) payloads and
-    emits geometry + per-channel-mean features (exact integer sums divided
-    once at the end); compressed formats still require PIL, absent here,
-    and raise NotImplementedError honestly.
-    """
-    # NB: the batch fn is a self-contained closure (no references to module-
-    # level functions) so cloudpickle ships it by value — Python workers never
-    # need this package importable.
-    def _batches(it: Iterator) -> Iterator:
-        import hashlib
-
-        import pandas as pd
-
-        def fake_feature(payload: bytes) -> list[float]:
-            if not payload:
-                return [0.0] * dim
-            acc = [0] * dim
-            for i, b in enumerate(payload):
-                acc[i % dim] += b
-            total = float(len(payload))
-            return [a / total for a in acc]
-
-        def ppm_feature(payload: bytes) -> list[float]:
-            # real decode: inlined P6 parse (same contract as decode_ppm),
-            # features = [w, h, maxval, n_pix, r_mean, g_mean, b_mean, 0...]
-            # padded/truncated to dim
-            i, n = 2, len(payload)
-            fields: list[int] = []
-            while len(fields) < 3:
-                while i < n and payload[i : i + 1].isspace():
-                    i += 1
-                if i < n and payload[i : i + 1] == b"#":
-                    while i < n and payload[i] != 0x0A:
-                        i += 1
-                    continue
-                j = i
-                while j < n and not payload[j : j + 1].isspace():
-                    j += 1
-                if j == i or not payload[i:j].isdigit():
-                    raise ValueError("malformed PPM header field")
-                fields.append(int(payload[i:j]))
-                i = j
-            if i >= n or not payload[i : i + 1].isspace():
-                raise ValueError("malformed PPM header")
-            i += 1
-            w, h, maxval = fields
-            if w < 1 or h < 1 or not 0 < maxval <= 255:
-                raise ValueError("invalid PPM header values")
-            px = payload[i:]
-            if len(px) != w * h * 3:
-                raise ValueError("PPM pixel section length mismatch")
-            n_pix = w * h
-            vec = [
-                float(w), float(h), float(maxval), float(n_pix),
-                sum(px[0::3]) / n_pix, sum(px[1::3]) / n_pix,
-                sum(px[2::3]) / n_pix,
-            ]
-            return (vec + [0.0] * dim)[:dim]
-
-        for pdf in it:
-            feats = []
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
-                if use_fake:
-                    vec = fake_feature(raw)
-                elif raw.startswith(b"P6"):
-                    vec = ppm_feature(raw)
-                else:
-                    raise NotImplementedError(
-                        "compressed-image decoding requires PIL; "
-                        "not available in this env (binary PPM decodes for real)"
-                    )
-                feats.append(hashlib.md5(str([round(x, 6) for x in vec]).encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "feat_dim": dim,
-                    "feat_norm": feats,
-                }
-            )
-
-    return df.mapInPandas(_batches, FEATURE_SCHEMA)
+    """Arrow-batched feature extraction; output conforms to FEATURE_SCHEMA.
+    The real path decodes binary PPM (P6) payloads and emits geometry +
+    per-channel-mean features (exact integer sums divided once at the
+    end); compressed formats still require PIL, absent here, and raise
+    NotImplementedError honestly."""
+    return arrow_map(
+        df.select("media_id", "mime", "payload"),
+        functools.partial(_feature_row, dim=dim, use_fake=use_fake),
+        FEATURE_SCHEMA,
+    )
 
 
 DIGEST_SCHEMA = StructType(
@@ -2257,36 +1948,22 @@ DIGEST_SCHEMA = StructType(
 )
 
 
+def _digest_row(media_id, mime, payload):
+    raw = bytes(payload) if payload is not None else b""
+    return [(media_id, mime, len(raw), hashlib.md5(raw).hexdigest())]
+
+
 def payload_digest(df: DataFrame) -> DataFrame:
-    """Arrow-batched payload digestion over mapInPandas — the oracle-checkable
-    half of the multimodal path: per-payload byte length and md5, computed in
-    Python from the raw bytes the JVM handed over. Because both outputs are
+    """Arrow-batched payload digestion — the oracle-checkable half of the
+    multimodal path: per-payload byte length and md5, computed in Python
+    from the raw bytes the JVM handed over. Because both outputs are
     exactly reproducible in ANSI SQL (octet_length / md5), the driver's
     DuckDB check verifies the Arrow binary round-trip BYTE-FOR-BYTE — if
-    batching, encoding, or null handling corrupted a single payload byte the
-    hashes would diverge. Same batch shape as extract_features."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in it:
-            n_bytes, digests = [], []
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
-                n_bytes.append(len(raw))
-                digests.append(hashlib.md5(raw).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "n_bytes": n_bytes,
-                    "payload_md5": digests,
-                }
-            )
-
-    return df.mapInPandas(_batches, DIGEST_SCHEMA)
+    batching, encoding, or null handling corrupted a single payload byte
+    the hashes would diverge."""
+    return arrow_map(
+        df.select("media_id", "mime", "payload"), _digest_row, DIGEST_SCHEMA
+    )
 
 
 PPM_STATS_SCHEMA = StructType(
@@ -2303,70 +1980,23 @@ PPM_STATS_SCHEMA = StructType(
 )
 
 
+def _channel_sums(rgb: bytes) -> tuple[int, int, int]:
+    return sum(rgb[0::3]), sum(rgb[1::3]), sum(rgb[2::3])
+
+
+def _ppm_stats_row(media_id, payload):
+    w, h, maxval, px = decode_ppm(bytes(payload))
+    return [(media_id, w, h, maxval, w * h, *_channel_sums(px))]
+
+
 def ppm_stats(df: DataFrame) -> DataFrame:
-    """Arrow-batched REAL image decode over mapInPandas: parse each PPM
-    payload and emit exact integer stats (dimensions, per-channel byte
-    sums) — no floats in the kernel, so the output is bit-reproducible and
-    a downstream JVM projection derives the rounded channel means. The
-    closure inlines the P6 parser (repo kernel convention: python workers
-    must not need this package importable); tests/test_multimodal.py pins
-    it byte-identical to decode_ppm, the module-level reference."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        def parse(payload: bytes):
-            if not payload or not payload.startswith(b"P6"):
-                raise ValueError("not a binary PPM (P6 magic missing)")
-            i, n = 2, len(payload)
-            fields = []
-            while len(fields) < 3:
-                while i < n and payload[i : i + 1].isspace():
-                    i += 1
-                if i < n and payload[i : i + 1] == b"#":
-                    while i < n and payload[i] != 0x0A:
-                        i += 1
-                    continue
-                j = i
-                while j < n and not payload[j : j + 1].isspace():
-                    j += 1
-                if j == i or not payload[i:j].isdigit():
-                    raise ValueError("malformed PPM header field")
-                fields.append(int(payload[i:j]))
-                i = j
-            if i >= n or not payload[i : i + 1].isspace():
-                raise ValueError("malformed PPM header (no separator before pixels)")
-            i += 1
-            width, height, maxval = fields
-            if width < 1 or height < 1:
-                raise ValueError(f"invalid PPM dimensions {width}x{height}")
-            if not 0 < maxval <= 255:
-                raise ValueError(f"unsupported PPM maxval {maxval}")
-            pixels = payload[i:]
-            if len(pixels) != width * height * 3:
-                raise ValueError(
-                    f"PPM pixel section is {len(pixels)} bytes, "
-                    f"expected {width * height * 3}"
-                )
-            return width, height, maxval, pixels
-
-        for pdf in it:
-            out = {k: [] for k in
-                   ("media_id", "width", "height", "maxval", "n_pix",
-                    "r_sum", "g_sum", "b_sum")}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, mx, px = parse(bytes(payload))
-                out["media_id"].append(media_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["maxval"].append(mx)
-                out["n_pix"].append(w * h)
-                out["r_sum"].append(sum(px[0::3]))
-                out["g_sum"].append(sum(px[1::3]))
-                out["b_sum"].append(sum(px[2::3]))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_batches, PPM_STATS_SCHEMA)
+    """Arrow-batched REAL image decode (``decode_ppm``): exact integer
+    stats per payload (dimensions, per-channel byte sums) — no floats in
+    the kernel, so the output is bit-reproducible and a downstream JVM
+    projection derives the rounded channel means."""
+    return arrow_map(
+        df.select("media_id", "payload"), _ppm_stats_row, PPM_STATS_SCHEMA
+    )
 
 
 PPM_DHASH_SCHEMA = StructType(
@@ -2380,6 +2010,23 @@ PPM_DHASH_SCHEMA = StructType(
 )
 
 
+def _ppm_dhash_row(media_id, payload):
+    w, h, _, px = decode_ppm(bytes(payload))
+    if h * (w - 1) > 62:
+        raise ValueError(f"dhash needs h*(w-1) <= 62 bits, got {h * (w - 1)}")
+    digest, bit = 0, 0
+    for r in range(h):
+        row = r * w * 3
+        for c in range(w - 1):
+            o = row + c * 3
+            g1 = (px[o] + px[o + 1] + px[o + 2]) // 3
+            g2 = (px[o + 3] + px[o + 4] + px[o + 5]) // 3
+            if g1 > g2:
+                digest |= 1 << bit
+            bit += 1
+    return [(media_id, w, h, digest, bit)]
+
+
 def ppm_dhash(df: DataFrame) -> DataFrame:
     """Arrow-batched PERCEPTUAL hash (difference hash) over decoded PPM
     pixels — the image near-dup primitive (dHash: Kravetz's gradient hash;
@@ -2389,74 +2036,11 @@ def ppm_dhash(df: DataFrame) -> DataFrame:
     (r+g+b)//3; per row: one bit per adjacent-column pair, set when
     gray[c] > gray[c+1]; bits pack row-major into one BIGINT (fixture
     images are W=4 so a row yields 3 bits and hashes stay well under 63
-    bits — a production W follows the classic 9x8 crop). Integer-only in
-    the kernel (bit-reproducible); the P6 parser is inlined byte-identical
-    to decode_ppm (repo kernel convention: workers can't import the
-    package)."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        def parse(payload: bytes):
-            if not payload or not payload.startswith(b"P6"):
-                raise ValueError("not a binary PPM (P6 magic missing)")
-            i, n = 2, len(payload)
-            fields = []
-            while len(fields) < 3:
-                while i < n and payload[i : i + 1].isspace():
-                    i += 1
-                if i < n and payload[i : i + 1] == b"#":
-                    while i < n and payload[i] != 0x0A:
-                        i += 1
-                    continue
-                j = i
-                while j < n and not payload[j : j + 1].isspace():
-                    j += 1
-                if j == i or not payload[i:j].isdigit():
-                    raise ValueError("malformed PPM header field")
-                fields.append(int(payload[i:j]))
-                i = j
-            if i >= n or not payload[i : i + 1].isspace():
-                raise ValueError("malformed PPM header (no separator before pixels)")
-            i += 1
-            width, height, maxval = fields
-            if width < 1 or height < 1:
-                raise ValueError(f"invalid PPM dimensions {width}x{height}")
-            if not 0 < maxval <= 255:
-                raise ValueError(f"unsupported PPM maxval {maxval}")
-            pixels = payload[i:]
-            if len(pixels) != width * height * 3:
-                raise ValueError(
-                    f"PPM pixel section is {len(pixels)} bytes, "
-                    f"expected {width * height * 3}"
-                )
-            return width, height, maxval, pixels
-
-        for pdf in it:
-            out = {k: [] for k in ("media_id", "width", "height", "dhash", "n_bits")}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, _, px = parse(bytes(payload))
-                if h * (w - 1) > 62:
-                    raise ValueError(
-                        f"dhash needs h*(w-1) <= 62 bits, got {h * (w - 1)}"
-                    )
-                digest, bit = 0, 0
-                for r in range(h):
-                    row = r * w * 3
-                    for c in range(w - 1):
-                        g1 = (px[row + c * 3] + px[row + c * 3 + 1] + px[row + c * 3 + 2]) // 3
-                        g2 = (px[row + c * 3 + 3] + px[row + c * 3 + 4] + px[row + c * 3 + 5]) // 3
-                        if g1 > g2:
-                            digest |= 1 << bit
-                        bit += 1
-                out["media_id"].append(media_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["dhash"].append(digest)
-                out["n_bits"].append(bit)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_batches, PPM_DHASH_SCHEMA)
+    bits — a production W follows the classic 9x8 crop). Integer-only,
+    so bit-reproducible."""
+    return arrow_map(
+        df.select("media_id", "payload"), _ppm_dhash_row, PPM_DHASH_SCHEMA
+    )
 
 
 PNG_PAYLOAD_SCHEMA = StructType(
@@ -2480,244 +2064,55 @@ PNG_STATS_SCHEMA = StructType(
 )
 
 
+def _grid_encode_row(media_id, data, *, encode, per_row, cell_bytes, cell_px, what):
+    """Encode one payload from a row-major grid: ``per_row`` cells of
+    ``cell_bytes`` bytes each per grid row, every cell ``cell_px`` pixels
+    square; ``encode(width, height, data)`` does the real work."""
+    data = bytes(data)
+    row_bytes = per_row * cell_bytes
+    if not data or len(data) % row_bytes:
+        raise ValueError(
+            f"{what} section is {len(data)} bytes, not a multiple of {row_bytes}"
+        )
+    n_rows = len(data) // row_bytes
+    return [(media_id, encode(per_row * cell_px, n_rows * cell_px, data))]
+
+
+def _grid_encode(df: DataFrame, col: str, encode, per_row: int, cell_bytes: int,
+                 cell_px: int, what: str) -> DataFrame:
+    return arrow_map(
+        df.select("media_id", col),
+        functools.partial(
+            _grid_encode_row, encode=encode, per_row=per_row,
+            cell_bytes=cell_bytes, cell_px=cell_px, what=what,
+        ),
+        PNG_PAYLOAD_SCHEMA,
+    )
+
+
 def png_encode_rgb(df: DataFrame, width: int) -> DataFrame:
-    """Arrow-batched REAL PNG encode over mapInPandas: each input row
+    """Arrow-batched REAL PNG encode (``encode_png``): each input row
     carries raw interleaved RGB bytes (``rgb`` column, length a multiple
-    of width*3); the kernel deflates them into a spec-complete 8-bit
-    truecolor PNG — signature, CRC'd IHDR, filter-cycled scanlines
-    (row % 5 → all five filter types), two IDAT chunks, IEND. The closure
-    is self-contained (repo kernel convention: python workers must not
-    need this package importable); tests/test_multimodal.py pins it
-    byte-identical to encode_png, the module-level reference."""
+    of width*3), deflated into a spec-complete 8-bit truecolor PNG —
+    signature, CRC'd IHDR, filter-cycled scanlines (row % 5 → all five
+    filter types), two IDAT chunks, IEND."""
+    return _grid_encode(df, "rgb", encode_png, width, 3, 1, "RGB")
 
-    def _batches(it: Iterator) -> Iterator:
-        import struct
-        import zlib
 
-        import pandas as pd
-
-        bpp = 3
-        stride = width * bpp
-
-        def paeth(a: int, b: int, c: int) -> int:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            if pb <= pc:
-                return b
-            return c
-
-        def chunk(ctype: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data))
-                + ctype
-                + data
-                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-            )
-
-        def encode(rgb: bytes) -> bytes:
-            if not rgb or len(rgb) % stride:
-                raise ValueError(
-                    f"RGB section is {len(rgb)} bytes, not a multiple of {stride}"
-                )
-            height = len(rgb) // stride
-            filtered = bytearray()
-            prev = bytes(stride)
-            for r in range(height):
-                raw = rgb[r * stride : (r + 1) * stride]
-                ftype = r % 5
-                filtered.append(ftype)
-                if ftype == 0:
-                    filtered += raw
-                elif ftype == 1:
-                    filtered += bytes(
-                        (raw[i] - (raw[i - bpp] if i >= bpp else 0)) & 0xFF
-                        for i in range(stride)
-                    )
-                elif ftype == 2:
-                    filtered += bytes(
-                        (raw[i] - prev[i]) & 0xFF for i in range(stride)
-                    )
-                elif ftype == 3:
-                    filtered += bytes(
-                        (raw[i] - ((raw[i - bpp] if i >= bpp else 0) + prev[i]) // 2)
-                        & 0xFF
-                        for i in range(stride)
-                    )
-                else:
-                    filtered += bytes(
-                        (
-                            raw[i]
-                            - paeth(
-                                raw[i - bpp] if i >= bpp else 0,
-                                prev[i],
-                                prev[i - bpp] if i >= bpp else 0,
-                            )
-                        )
-                        & 0xFF
-                        for i in range(stride)
-                    )
-                prev = raw
-            ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
-            compressed = zlib.compress(bytes(filtered), 9)
-            n_idat = max(1, min(2, len(compressed)))
-            step = -(-len(compressed) // n_idat)
-            idats = b"".join(
-                chunk(b"IDAT", compressed[o : o + step])
-                for o in range(0, len(compressed), step)
-            )
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + idats
-                + chunk(b"IEND", b"")
-            )
-
-        for pdf in it:
-            ids, payloads = [], []
-            for media_id, rgb in zip(pdf["media_id"], pdf["rgb"]):
-                ids.append(media_id)
-                payloads.append(encode(bytes(rgb)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return df.mapInPandas(_batches, PNG_PAYLOAD_SCHEMA)
+def _png_stats_row(media_id, payload):
+    w, h, depth, px = decode_png(bytes(payload))
+    return [(media_id, w, h, depth, w * h, *_channel_sums(px))]
 
 
 def png_stats(df: DataFrame) -> DataFrame:
-    """Arrow-batched REAL PNG decode over mapInPandas (round-6 verdict
-    next-round #2 — the compressed-codec stub retired for the dominant
-    web format): zlib-inflate each payload's IDAT stream, verify every
-    chunk CRC, reconstruct ALL FIVE scanline filter types, and emit exact
-    integer stats — no floats in the kernel, so the output is
-    bit-reproducible and a downstream JVM projection derives rounded
-    channel means. The closure is self-contained (repo kernel
-    convention); tests/test_multimodal.py pins it byte-identical to
-    decode_png, the module-level reference."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import struct
-        import zlib
-
-        import pandas as pd
-
-        sig = b"\x89PNG\r\n\x1a\n"
-
-        def paeth(a: int, b: int, c: int) -> int:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            if pb <= pc:
-                return b
-            return c
-
-        def decode(payload: bytes):
-            if len(payload) < len(sig) or not payload.startswith(sig):
-                raise ValueError("not a PNG (signature missing)")
-            i, n = len(sig), len(payload)
-            chunks = []
-            while i < n:
-                if i + 8 > n:
-                    raise ValueError("truncated PNG chunk header")
-                (length,) = struct.unpack(">I", payload[i : i + 4])
-                ctype = payload[i + 4 : i + 8]
-                if i + 12 + length > n:
-                    raise ValueError(f"truncated PNG chunk {ctype!r}")
-                data = payload[i + 8 : i + 8 + length]
-                (crc,) = struct.unpack(
-                    ">I", payload[i + 8 + length : i + 12 + length]
-                )
-                if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-                    raise ValueError(f"CRC mismatch in PNG chunk {ctype!r}")
-                chunks.append((ctype, data))
-                i += 12 + length
-                if ctype == b"IEND":
-                    break
-            if i != n:
-                raise ValueError("trailing bytes after PNG IEND")
-            if not chunks or chunks[0][0] != b"IHDR" or chunks[-1][0] != b"IEND":
-                raise ValueError("PNG must start with IHDR and end with IEND")
-            ihdr = chunks[0][1]
-            if len(ihdr) != 13:
-                raise ValueError(f"IHDR is {len(ihdr)} bytes, expected 13")
-            width, height, depth, ctype_i, comp, filt, interlace = struct.unpack(
-                ">IIBBBBB", ihdr
-            )
-            if width < 1 or height < 1:
-                raise ValueError(f"invalid PNG dimensions {width}x{height}")
-            if (depth, ctype_i, comp, filt, interlace) != (8, 2, 0, 0, 0):
-                raise ValueError(
-                    "unsupported PNG profile (only 8-bit truecolor, "
-                    f"non-interlaced): depth={depth} color={ctype_i} "
-                    f"comp={comp} filter={filt} interlace={interlace}"
-                )
-            idat = b"".join(d for t, d in chunks if t == b"IDAT")
-            if not idat:
-                raise ValueError("PNG contains no IDAT data")
-            bpp = 3
-            stride = width * bpp
-            expected = (stride + 1) * height
-            dec = zlib.decompressobj()
-            raw = dec.decompress(idat, expected + 1)
-            if len(raw) != expected or not dec.eof or dec.unused_data:
-                raise ValueError(
-                    f"inflated PNG stream is {'>' if len(raw) > expected else ''}"
-                    f"{len(raw)} bytes, expected {expected}"
-                )
-            out = bytearray(stride * height)
-            prev_off = -stride
-            for r in range(height):
-                ftype = raw[r * (stride + 1)]
-                line = raw[r * (stride + 1) + 1 : (r + 1) * (stride + 1)]
-                off = r * stride
-                if ftype == 0:
-                    out[off : off + stride] = line
-                elif ftype == 1:
-                    for j in range(stride):
-                        left = out[off + j - bpp] if j >= bpp else 0
-                        out[off + j] = (line[j] + left) & 0xFF
-                elif ftype == 2:
-                    for j in range(stride):
-                        up = out[prev_off + j] if r > 0 else 0
-                        out[off + j] = (line[j] + up) & 0xFF
-                elif ftype == 3:
-                    for j in range(stride):
-                        left = out[off + j - bpp] if j >= bpp else 0
-                        up = out[prev_off + j] if r > 0 else 0
-                        out[off + j] = (line[j] + (left + up) // 2) & 0xFF
-                elif ftype == 4:
-                    for j in range(stride):
-                        left = out[off + j - bpp] if j >= bpp else 0
-                        up = out[prev_off + j] if r > 0 else 0
-                        ul = out[prev_off + j - bpp] if (r > 0 and j >= bpp) else 0
-                        out[off + j] = (line[j] + paeth(left, up, ul)) & 0xFF
-                else:
-                    raise ValueError(f"unknown PNG filter type {ftype} on row {r}")
-                prev_off = off
-            return width, height, depth, bytes(out)
-
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "media_id", "width", "height", "depth",
-                    "n_pix", "r_sum", "g_sum", "b_sum",
-                )
-            }
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, d, px = decode(bytes(payload))
-                out["media_id"].append(media_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["depth"].append(d)
-                out["n_pix"].append(w * h)
-                out["r_sum"].append(sum(px[0::3]))
-                out["g_sum"].append(sum(px[1::3]))
-                out["b_sum"].append(sum(px[2::3]))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_batches, PNG_STATS_SCHEMA)
+    """Arrow-batched REAL PNG decode (``decode_png``): zlib-inflate each
+    payload's IDAT stream, verify every chunk CRC, reconstruct ALL FIVE
+    scanline filter types, and emit exact integer stats — no floats in
+    the kernel, so the output is bit-reproducible and a downstream JVM
+    projection derives rounded channel means."""
+    return arrow_map(
+        df.select("media_id", "payload"), _png_stats_row, PNG_STATS_SCHEMA
+    )
 
 
 JPEG_STATS_SCHEMA = StructType(
@@ -2736,851 +2131,45 @@ JPEG_STATS_SCHEMA = StructType(
 def jpeg_encode_gray(
     df: DataFrame, block_width: int, restart_interval: int = 0
 ) -> DataFrame:
-    """Arrow-batched flat-block JPEG encode over mapInPandas: each input
-    row carries the per-block gray levels (``blocks`` binary column, one
-    byte per 8x8 block, ``block_width`` blocks per row); the kernel runs
-    the full baseline pipeline (DC huffman coding, EOB AC coding, byte
-    stuffing, Annex-K tables). ``restart_interval`` > 0 emits a DRI
-    segment and RST0..RST7 markers every that-many MCUs with the DC
-    predictor re-anchored (r10). Closure captures only data constants
-    (the tables pickle by value) and inlines the logic — python workers
-    never import this package. Pinned byte-identical to
-    encode_jpeg_gray / encode_jpeg_gray_rst."""
-    dc_bits, dc_vals = JPEG_DC_BITS, JPEG_DC_VALS
-    ac_bits, ac_vals = JPEG_AC_BITS, JPEG_AC_VALS
-    qtable, zigzag = JPEG_QTABLE, JPEG_ZIGZAG
-    rst_ri = restart_interval
-
-    def _batches(it: Iterator) -> Iterator:
-        import struct
-
-        import pandas as pd
-
-        def huff_map(bits, vals):
-            out, code, k = {}, 0, 0
-            for length in range(1, 17):
-                for _ in range(bits[length]):
-                    out[vals[k]] = (code, length)
-                    code += 1
-                    k += 1
-                code <<= 1
-            return out
-
-        dc_map, ac_map = huff_map(dc_bits, dc_vals), huff_map(ac_bits, ac_vals)
-
-        def category(v):
-            mag, cat = abs(v), 0
-            while mag:
-                mag >>= 1
-                cat += 1
-            return cat
-
-        def encode(blocks: bytes) -> bytes:
-            bw = block_width
-            if not blocks or len(blocks) % bw:
-                raise ValueError(
-                    f"block section is {len(blocks)} bytes, not a multiple of {bw}"
-                )
-            bh = len(blocks) // bw
-            buf, acc, nb = bytearray(), 0, 0
-
-            def put(code, length):
-                nonlocal acc, nb
-                acc = (acc << length) | (code & ((1 << length) - 1))
-                nb += length
-                while nb >= 8:
-                    b = (acc >> (nb - 8)) & 0xFF
-                    buf.append(b)
-                    if b == 0xFF:
-                        buf.append(0x00)
-                    nb -= 8
-
-            def byte_align():
-                nonlocal acc, nb
-                if nb:
-                    pad = 8 - nb
-                    put((1 << pad) - 1, pad)
-
-            prev_dc = 0
-            rst_n = 0
-            for m, v in enumerate(blocks):
-                if rst_ri and m and m % rst_ri == 0:
-                    byte_align()
-                    buf.append(0xFF)
-                    buf.append(0xD0 + rst_n)
-                    rst_n = (rst_n + 1) % 8
-                    prev_dc = 0
-                dc = v - 128
-                diff = dc - prev_dc
-                prev_dc = dc
-                cat = category(diff)
-                code, ln = dc_map[cat]
-                put(code, ln)
-                if cat:
-                    put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-                code, ln = ac_map[0x00]
-                put(code, ln)
-            byte_align()
-
-            def seg(marker, data):
-                return struct.pack(">HH", marker, len(data) + 2) + data
-
-            width, height = bw * 8, bh * 8
-            dri = seg(0xFFDD, struct.pack(">H", rst_ri)) if rst_ri else b""
-            return (
-                b"\xff\xd8"
-                + seg(0xFFDB, bytes([0]) + bytes(qtable[zigzag[i]] for i in range(64)))
-                + seg(0xFFC0, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-                + seg(0xFFC4, bytes([0x00]) + bytes(dc_bits[1:]) + bytes(dc_vals))
-                + seg(0xFFC4, bytes([0x10]) + bytes(ac_bits[1:]) + bytes(ac_vals))
-                + dri
-                + seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-                + bytes(buf)
-                + b"\xff\xd9"
-            )
-
-        for pdf in it:
-            ids, payloads = [], []
-            for media_id, blocks in zip(pdf["media_id"], pdf["blocks"]):
-                ids.append(media_id)
-                payloads.append(encode(bytes(blocks)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return df.mapInPandas(_batches, PNG_PAYLOAD_SCHEMA)
+    """Arrow-batched flat-block JPEG encode (``encode_jpeg_gray``): each
+    input row carries the per-block gray levels (``blocks`` binary column,
+    one byte per 8x8 block, ``block_width`` blocks per row) through the
+    full baseline pipeline. ``restart_interval`` > 0 encodes with
+    ``encode_jpeg_gray_rst``: a DRI segment and RST0..RST7 markers every
+    that-many MCUs with the DC predictor re-anchored."""
+    encode = (
+        functools.partial(encode_jpeg_gray_rst, restart_interval=restart_interval)
+        if restart_interval
+        else encode_jpeg_gray
+    )
+    return _grid_encode(df, "blocks", encode, block_width, 1, 8, "block")
 
 
 def jpeg_encode_gray_progressive(df: DataFrame, block_width: int) -> DataFrame:
-    """Arrow-batched flat-block PROGRESSIVE (SOF2) JPEG encode over
-    mapInPandas: the five-scan layout of ``encode_jpeg_gray_progressive``
-    (DC first at Al=1, two spectral-selection AC EOBRUN scans, AC
-    refinement, raw-bit DC refinement). Closure captures only data
-    constants and inlines the logic (repo kernel convention); pinned
-    byte-identical to the module encoder by tests."""
-    dc_bits, dc_vals = JPEG_DC_BITS, JPEG_DC_VALS
-    pac_bits, pac_vals = JPEG_PROG_AC_BITS, JPEG_PROG_AC_VALS
-    qtable, zigzag = JPEG_QTABLE, JPEG_ZIGZAG
+    """Arrow-batched flat-block PROGRESSIVE (SOF2) JPEG encode: the
+    five-scan layout of ``encode_jpeg_gray_progressive`` (DC first at
+    Al=1, two spectral-selection AC EOBRUN scans, AC refinement, raw-bit
+    DC refinement) over the same ``blocks`` column as jpeg_encode_gray."""
+    return _grid_encode(
+        df, "blocks", encode_jpeg_gray_progressive, block_width, 1, 8, "block"
+    )
 
-    def _batches(it: Iterator) -> Iterator:
-        import struct
 
-        import pandas as pd
-
-        def huff_map(bits, vals):
-            out, code, k = {}, 0, 0
-            for length in range(1, 17):
-                for _ in range(bits[length]):
-                    out[vals[k]] = (code, length)
-                    code += 1
-                    k += 1
-                code <<= 1
-            return out
-
-        dc_map, ac_map = huff_map(dc_bits, dc_vals), huff_map(pac_bits, pac_vals)
-
-        def category(v):
-            mag, cat = abs(v), 0
-            while mag:
-                mag >>= 1
-                cat += 1
-            return cat
-
-        class Writer:
-            def __init__(self):
-                self.buf, self.acc, self.nb = bytearray(), 0, 0
-
-            def put(self, code, length):
-                self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-                self.nb += length
-                while self.nb >= 8:
-                    b = (self.acc >> (self.nb - 8)) & 0xFF
-                    self.buf.append(b)
-                    if b == 0xFF:
-                        self.buf.append(0x00)
-                    self.nb -= 8
-
-            def flush(self):
-                if self.nb:
-                    pad = 8 - self.nb
-                    self.put((1 << pad) - 1, pad)
-                return bytes(self.buf)
-
-        def put_eobrun(w, run):
-            while run > 0:
-                e = 0
-                while (2 << e) <= run and e < 5:
-                    e += 1
-                take = min(run, (2 << e) - 1)
-                code, length = ac_map[e << 4]
-                w.put(code, length)
-                if e:
-                    w.put(take - (1 << e), e)
-                run -= take
-
-        def encode(blocks: bytes) -> bytes:
-            bw = block_width
-            if not blocks or len(blocks) % bw:
-                raise ValueError(
-                    f"block section is {len(blocks)} bytes, not a multiple of {bw}"
-                )
-            bh = len(blocks) // bw
-            dcs = [v - 128 for v in blocks]
-            w = Writer()
-            prev = 0
-            for dc in dcs:
-                hi = dc >> 1
-                diff = hi - prev
-                prev = hi
-                cat = category(diff)
-                code, ln = dc_map[cat]
-                w.put(code, ln)
-                if cat:
-                    w.put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-            dc_first = w.flush()
-            ac_scans = []
-            for _ in range(3):
-                w = Writer()
-                put_eobrun(w, len(dcs))
-                ac_scans.append(w.flush())
-            w = Writer()
-            for dc in dcs:
-                w.put(dc & 1, 1)
-            dc_refine = w.flush()
-
-            def seg(marker, data):
-                return struct.pack(">HH", marker, len(data) + 2) + data
-
-            def sos(ss, se, ah, al, ta):
-                return seg(0xFFDA, bytes([1, 1, ta, ss, se, (ah << 4) | al]))
-
-            width, height = bw * 8, bh * 8
-            return (
-                b"\xff\xd8"
-                + seg(0xFFDB, bytes([0]) + bytes(qtable[zigzag[i]] for i in range(64)))
-                + seg(0xFFC2, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-                + seg(0xFFC4, bytes([0x00]) + bytes(dc_bits[1:]) + bytes(dc_vals))
-                + seg(0xFFC4, bytes([0x11]) + bytes(pac_bits[1:]) + bytes(pac_vals))
-                + sos(0, 0, 0, 1, 0x00) + dc_first
-                + sos(1, 5, 0, 1, 0x01) + ac_scans[0]
-                + sos(6, 63, 0, 1, 0x01) + ac_scans[1]
-                + sos(1, 63, 1, 0, 0x01) + ac_scans[2]
-                + sos(0, 0, 1, 0, 0x00) + dc_refine
-                + b"\xff\xd9"
-            )
-
-        for pdf in it:
-            ids, payloads = [], []
-            for media_id, blocks in zip(pdf["media_id"], pdf["blocks"]):
-                ids.append(media_id)
-                payloads.append(encode(bytes(blocks)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return df.mapInPandas(_batches, PNG_PAYLOAD_SCHEMA)
+def _jpeg_stats_row(media_id, payload):
+    w, h, nc, px = decode_jpeg(bytes(payload))
+    if nc != 1:
+        raise ValueError("jpeg_stats expects a single-component (grayscale) JPEG")
+    return [(media_id, w, h, w * h, sum(px), min(px), max(px))]
 
 
 def jpeg_stats(df: DataFrame) -> DataFrame:
-    """Arrow-batched REAL baseline-JPEG decode over mapInPandas: full
-    marker walk, huffman DC/AC decode with byte-unstuffing, dequant,
-    zigzag, float IDCT, level shift — exact integer pixel stats out.
-    Closure captures only data constants and inlines the decoder (repo
-    kernel convention); pinned byte-identical to decode_jpeg by
-    tests/test_multimodal.py."""
-    zigzag = JPEG_ZIGZAG
-
-    def _batches(it: Iterator) -> Iterator:
-        import math
-        import struct
-
-        import pandas as pd
-
-        cos_t = [
-            [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-            for x in range(8)
-        ]
-        half_sqrt = 1 / math.sqrt(2)
-        c = [half_sqrt] + [1.0] * 7
-
-        def huff_table(bits, vals):
-            out, code, k = {}, 0, 0
-            for length in range(1, 17):
-                for _ in range(bits[length]):
-                    out[(length, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
-            return out
-
-        def decode_progressive(payload, i, sos_data, qtables, huff,
-                               width, height, comp_q):
-            # §G scan loop, mirroring _decode_progressive_gray (module
-            # reference; pinned identical by tests/test_multimodal.py)
-            n = len(payload)
-            if comp_q not in qtables:
-                raise ValueError(f"missing quantization table {comp_q}")
-            qt = qtables[comp_q]
-            bw, bh = (width + 7) // 8, (height + 7) // 8
-            nblocks = bw * bh
-            coeff = [[0] * 64 for _ in range(nblocks)]
-            dc_al = None
-            ac_al = [None] * 64
-            while True:
-                if len(sos_data) < 6:
-                    raise ValueError("truncated SOS")
-                if sos_data[0] != 1:
-                    raise ValueError(
-                        "progressive scan must cover the single component"
-                    )
-                td, ta = sos_data[2] >> 4, sos_data[2] & 0xF
-                ss, se = sos_data[3], sos_data[4]
-                ah, al = sos_data[5] >> 4, sos_data[5] & 0xF
-                if ss == 0:
-                    if se != 0:
-                        raise ValueError(
-                            "progressive DC scan must have Se=0 (Ss=0,Se=63 "
-                            "is a sequential scan header inside a SOF2 frame)"
-                        )
-                elif not (1 <= ss <= se <= 63):
-                    raise ValueError(f"bad spectral selection band {ss}..{se}")
-                if ah == 0:
-                    if ss == 0:
-                        if dc_al is not None:
-                            raise ValueError(
-                                "duplicate progressive DC first scan"
-                            )
-                        dc_al = al
-                    else:
-                        for k in range(ss, se + 1):
-                            if ac_al[k] is not None:
-                                raise ValueError(
-                                    f"duplicate progressive AC first scan at k={k}"
-                                )
-                            ac_al[k] = al
-                else:
-                    if ah != al + 1:
-                        raise ValueError(
-                            "successive approximation must refine one bit "
-                            f"(Ah={ah}, Al={al})"
-                        )
-                    if ss == 0:
-                        if dc_al != ah:
-                            raise ValueError(
-                                "DC refinement scan without matching first scan"
-                            )
-                        dc_al = al
-                    else:
-                        for k in range(ss, se + 1):
-                            if ac_al[k] != ah:
-                                raise ValueError(
-                                    "AC refinement scan without matching first scan"
-                                )
-                            ac_al[k] = al
-                bits_data = bytearray()
-                j = i
-                while j < n:
-                    b = payload[j]
-                    if b == 0xFF:
-                        if j + 1 >= n:
-                            raise ValueError("truncated JPEG scan")
-                        nxt = payload[j + 1]
-                        if nxt == 0x00:
-                            bits_data.append(0xFF)
-                            j += 2
-                            continue
-                        if 0xD0 <= nxt <= 0xD7:
-                            raise ValueError(
-                                "restart intervals in progressive scans unsupported"
-                            )
-                        break
-                    bits_data.append(b)
-                    j += 1
-                pos = 0
-
-                def read_bit():
-                    nonlocal pos
-                    if pos >> 3 >= len(bits_data):
-                        raise ValueError(
-                            "JPEG entropy stream exhausted mid-block"
-                        )
-                    bit = (bits_data[pos >> 3] >> (7 - (pos & 7))) & 1
-                    pos += 1
-                    return bit
-
-                def read_huff(tbl):
-                    code = 0
-                    for length in range(1, 17):
-                        code = (code << 1) | read_bit()
-                        if (length, code) in tbl:
-                            return tbl[(length, code)]
-                    raise ValueError("invalid huffman code in JPEG scan")
-
-                def receive(cnt):
-                    v = 0
-                    for _ in range(cnt):
-                        v = (v << 1) | read_bit()
-                    return v
-
-                def receive_extend(cat):
-                    if cat == 0:
-                        return 0
-                    v = receive(cat)
-                    if v < (1 << (cat - 1)):
-                        v -= (1 << cat) - 1
-                    return v
-
-                if ss == 0 and ah == 0:
-                    if (0, td) not in huff:
-                        raise ValueError("missing huffman table")
-                    dc_tbl = huff[(0, td)]
-                    prev = 0
-                    for bi in range(nblocks):
-                        prev += receive_extend(read_huff(dc_tbl))
-                        coeff[bi][0] = prev << al
-                elif ss == 0:
-                    for bi in range(nblocks):
-                        if read_bit():
-                            coeff[bi][0] |= 1 << al
-                elif ah == 0:
-                    if (1, ta) not in huff:
-                        raise ValueError("missing huffman table")
-                    ac_tbl = huff[(1, ta)]
-                    eobrun = 0
-                    for bi in range(nblocks):
-                        cb = coeff[bi]
-                        if eobrun:
-                            eobrun -= 1
-                            continue
-                        k = ss
-                        while k <= se:
-                            rs = read_huff(ac_tbl)
-                            r, s = rs >> 4, rs & 0xF
-                            if s == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += receive(r)
-                                break
-                            k += r
-                            if k > se:
-                                raise ValueError(
-                                    "JPEG AC run overflows the band"
-                                )
-                            cb[zigzag[k]] = receive_extend(s) << al
-                            k += 1
-                else:
-                    if (1, ta) not in huff:
-                        raise ValueError("missing huffman table")
-                    ac_tbl = huff[(1, ta)]
-                    p1, m1 = 1 << al, -(1 << al)
-                    eobrun = 0
-                    for bi in range(nblocks):
-                        cb = coeff[bi]
-                        k = ss
-                        if eobrun == 0:
-                            while k <= se:
-                                rs = read_huff(ac_tbl)
-                                r, s = rs >> 4, rs & 0xF
-                                if s:
-                                    if s != 1:
-                                        raise ValueError(
-                                            "AC refinement magnitude must be 1"
-                                        )
-                                    s = p1 if read_bit() else m1
-                                elif r != 15:
-                                    eobrun = 1 << r
-                                    if r:
-                                        eobrun += receive(r)
-                                    break
-                                while k <= se:
-                                    cz = zigzag[k]
-                                    if cb[cz]:
-                                        if read_bit() and not (cb[cz] & p1):
-                                            cb[cz] += p1 if cb[cz] >= 0 else m1
-                                    else:
-                                        if r == 0:
-                                            break
-                                        r -= 1
-                                    k += 1
-                                if s and k <= se:
-                                    cb[zigzag[k]] = s
-                                k += 1
-                        if eobrun > 0:
-                            while k <= se:
-                                cz = zigzag[k]
-                                if cb[cz]:
-                                    if read_bit() and not (cb[cz] & p1):
-                                        cb[cz] += p1 if cb[cz] >= 0 else m1
-                                k += 1
-                            eobrun -= 1
-                if (pos + 7) >> 3 < len(bits_data):
-                    raise ValueError(
-                        "unconsumed bytes after final block in scan"
-                    )
-                i = j
-                sos_data = None
-                while i < n:
-                    if payload[i] != 0xFF:
-                        raise ValueError(f"expected a marker at offset {i}")
-                    marker = payload[i + 1]
-                    i += 2
-                    if marker == 0xD9:
-                        if i != n:
-                            raise ValueError("trailing bytes after JPEG EOI")
-                        break
-                    if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                        raise ValueError(
-                            "restart intervals in progressive scans unsupported"
-                        )
-                    if i + 2 > n:
-                        raise ValueError("truncated JPEG segment header")
-                    seglen = (payload[i] << 8) | payload[i + 1]
-                    if seglen < 2 or i + seglen > n:
-                        raise ValueError("truncated JPEG segment")
-                    data = payload[i + 2 : i + seglen]
-                    i += seglen
-                    if marker == 0xC4:
-                        jj = 0
-                        while jj < len(data):
-                            if jj + 17 > len(data):
-                                raise ValueError("truncated DHT")
-                            tc, th = data[jj] >> 4, data[jj] & 0xF
-                            bits = [0] + list(data[jj + 1 : jj + 17])
-                            nv = sum(bits)
-                            vals = list(data[jj + 17 : jj + 17 + nv])
-                            if len(vals) != nv:
-                                raise ValueError("truncated DHT")
-                            huff[(tc, th)] = huff_table(bits, vals)
-                            jj += 17 + nv
-                    elif marker == 0xDA:
-                        sos_data = data
-                        break
-                    elif marker == 0xDD:
-                        raise ValueError(
-                            "restart intervals in progressive scans unsupported"
-                        )
-                    elif marker == 0xDB:
-                        raise ValueError(
-                            "DQT between progressive scans unsupported"
-                        )
-                    else:
-                        raise ValueError(
-                            f"unexpected marker 0x{marker:02x} between scans"
-                        )
-                else:
-                    raise ValueError("JPEG scan not terminated by EOI")
-                if sos_data is None:
-                    break
-            out = bytearray(width * height)
-            for by in range(bh):
-                for bx in range(bw):
-                    cb = coeff[by * bw + bx]
-                    deq = [cb[idx] * qt[idx] for idx in range(64)]
-                    nz = [(idx, cf) for idx, cf in enumerate(deq) if cf]
-                    if not nz or (len(nz) == 1 and nz[0][0] == 0):
-                        val = int(round(deq[0] / 8)) + 128
-                        val = 0 if val < 0 else (255 if val > 255 else val)
-                        block = [float(val)] * 64
-                        flat_done = True
-                    else:
-                        acc = [0.0] * 64
-                        for idx, cf in nz:
-                            v, u = idx // 8, idx % 8
-                            cvu = c[v] * c[u] * cf
-                            for y in range(8):
-                                cy = cos_t[y][v] * cvu
-                                row = y * 8
-                                for x in range(8):
-                                    acc[row + x] += cy * cos_t[x][u]
-                        block = acc
-                        flat_done = False
-                    for y in range(8):
-                        py = by * 8 + y
-                        if py >= height:
-                            break
-                        row_off = py * width
-                        brow = y * 8
-                        for x in range(8):
-                            px = bx * 8 + x
-                            if px >= width:
-                                continue
-                            if flat_done:
-                                out[row_off + px] = int(block[brow + x])
-                            else:
-                                val = int(round(block[brow + x] / 4)) + 128
-                                out[row_off + px] = (
-                                    0 if val < 0
-                                    else (255 if val > 255 else val)
-                                )
-            return width, height, bytes(out)
-
-        def decode(payload: bytes):
-            if len(payload) < 4 or payload[:2] != b"\xff\xd8":
-                raise ValueError("not a JPEG (SOI missing)")
-            i, n = 2, len(payload)
-            qtables, huff = {}, {}
-            width = height = 0
-            comp_q = 0
-            dc_id = ac_id = 0
-            restart_interval = 0
-            progressive = False
-            scan_start = -1
-            while i < n:
-                if payload[i] != 0xFF:
-                    raise ValueError(f"expected a marker at offset {i}")
-                marker = payload[i + 1]
-                i += 2
-                if marker == 0xD9:
-                    raise ValueError("JPEG has no scan data")
-                if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                    continue
-                if i + 2 > n:
-                    raise ValueError("truncated JPEG segment header")
-                (seglen,) = struct.unpack(">H", payload[i : i + 2])
-                if seglen < 2 or i + seglen > n:
-                    raise ValueError("truncated JPEG segment")
-                data = payload[i + 2 : i + seglen]
-                i += seglen
-                if marker == 0xDB:
-                    j = 0
-                    while j < len(data):
-                        pq, tq = data[j] >> 4, data[j] & 0xF
-                        if pq != 0:
-                            raise ValueError("16-bit quantization tables unsupported")
-                        if j + 65 > len(data):
-                            raise ValueError("truncated DQT")
-                        zz = data[j + 1 : j + 65]
-                        tbl = [0] * 64
-                        for k in range(64):
-                            tbl[zigzag[k]] = zz[k]
-                        qtables[tq] = tbl
-                        j += 65
-                elif marker == 0xC4:
-                    j = 0
-                    while j < len(data):
-                        if j + 17 > len(data):
-                            raise ValueError("truncated DHT")
-                        tc, th = data[j] >> 4, data[j] & 0xF
-                        bits = [0] + list(data[j + 1 : j + 17])
-                        nv = sum(bits)
-                        vals = list(data[j + 17 : j + 17 + nv])
-                        if len(vals) != nv:
-                            raise ValueError("truncated DHT")
-                        huff[(tc, th)] = huff_table(bits, vals)
-                        j += 17 + nv
-                elif marker in (0xC0, 0xC2):
-                    progressive = marker == 0xC2
-                    if len(data) < 9:
-                        raise ValueError("truncated SOF0")
-                    precision, height, width, nc = struct.unpack(">BHHB", data[:6])
-                    if precision != 8:
-                        raise ValueError(f"unsupported JPEG precision {precision}")
-                    if nc != 1:
-                        raise ValueError(
-                            "progressive (SOF2) JPEG decodes single-component "
-                            "(grayscale) only"
-                            if progressive else
-                            "only single-component (grayscale) baseline JPEG decodes"
-                        )
-                    if data[7] != 0x11:
-                        raise ValueError("subsampled JPEG unsupported")
-                    comp_q = data[8]
-                elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                                0xCB, 0xCD, 0xCE, 0xCF):
-                    raise ValueError(
-                        "only baseline sequential (SOF0) or progressive "
-                        "(SOF2) JPEG decodes"
-                    )
-                elif marker == 0xDD:  # DRI
-                    if len(data) != 2:
-                        raise ValueError("malformed DRI segment")
-                    (restart_interval,) = struct.unpack(">H", data)
-                elif marker == 0xDA:
-                    if width == 0:
-                        raise ValueError("SOS before SOF0")
-                    if len(data) < 3:
-                        raise ValueError("truncated SOS")
-                    if progressive:
-                        if restart_interval:
-                            raise ValueError(
-                                "restart intervals in progressive scans unsupported"
-                            )
-                        if (width < 1 or height < 1
-                                or width > 65535 or height > 65535):
-                            raise ValueError(
-                                f"invalid JPEG dimensions {width}x{height}"
-                            )
-                        return decode_progressive(
-                            payload, i, data, qtables, huff,
-                            width, height, comp_q,
-                        )
-                    dc_id, ac_id = data[2] >> 4, data[2] & 0xF
-                    scan_start = i
-                    break
-            if scan_start < 0:
-                raise ValueError("JPEG has no SOS marker")
-            if width < 1 or height < 1 or width > 65535 or height > 65535:
-                raise ValueError(f"invalid JPEG dimensions {width}x{height}")
-            if comp_q not in qtables:
-                raise ValueError(f"missing quantization table {comp_q}")
-            if (0, dc_id) not in huff or (1, ac_id) not in huff:
-                raise ValueError("missing huffman table")
-            qt = qtables[comp_q]
-            dc_tbl, ac_tbl = huff[(0, dc_id)], huff[(1, ac_id)]
-            segs = [bytearray()]
-            expected_rst = 0
-            j = scan_start
-            while j < n:
-                b = payload[j]
-                if b == 0xFF:
-                    if j + 1 >= n:
-                        raise ValueError("truncated JPEG scan")
-                    nxt = payload[j + 1]
-                    if nxt == 0x00:
-                        segs[-1].append(0xFF)
-                        j += 2
-                        continue
-                    if 0xD0 <= nxt <= 0xD7:
-                        if restart_interval == 0:
-                            raise ValueError("RST marker in scan without DRI")
-                        if nxt != 0xD0 + expected_rst:
-                            raise ValueError("RST marker out of sequence")
-                        expected_rst = (expected_rst + 1) % 8
-                        segs.append(bytearray())
-                        j += 2
-                        continue
-                    break
-                segs[-1].append(b)
-                j += 1
-            if payload[j : j + 2] != b"\xff\xd9":
-                raise ValueError("JPEG scan not terminated by EOI")
-            if j + 2 != n:
-                raise ValueError("trailing bytes after JPEG EOI")
-            seg_idx = 0
-            bits_data = segs[0]
-            pos = 0
-
-            def read_bit():
-                nonlocal pos
-                if pos >> 3 >= len(bits_data):
-                    raise ValueError("JPEG entropy stream exhausted mid-block")
-                bit = (bits_data[pos >> 3] >> (7 - (pos & 7))) & 1
-                pos += 1
-                return bit
-
-            def advance_restart():
-                nonlocal seg_idx, bits_data, pos
-                seg_idx += 1
-                if seg_idx >= len(segs):
-                    raise ValueError("missing JPEG restart segment")
-                bits_data = segs[seg_idx]
-                pos = 0
-
-            def read_huff(tbl):
-                code = 0
-                for length in range(1, 17):
-                    code = (code << 1) | read_bit()
-                    if (length, code) in tbl:
-                        return tbl[(length, code)]
-                raise ValueError("invalid huffman code in JPEG scan")
-
-            def receive_extend(cat):
-                if cat == 0:
-                    return 0
-                v = 0
-                for _ in range(cat):
-                    v = (v << 1) | read_bit()
-                if v < (1 << (cat - 1)):
-                    v -= (1 << cat) - 1
-                return v
-
-            bw, bh = (width + 7) // 8, (height + 7) // 8
-            out = bytearray(width * height)
-            prev_dc = 0
-            mcu_index = 0
-            for by in range(bh):
-                for bx in range(bw):
-                    if (restart_interval and mcu_index
-                            and mcu_index % restart_interval == 0):
-                        advance_restart()
-                        prev_dc = 0
-                    mcu_index += 1
-                    coeffs = [0] * 64
-                    cat = read_huff(dc_tbl)
-                    prev_dc += receive_extend(cat)
-                    coeffs[0] = prev_dc * qt[0]
-                    k = 1
-                    while k < 64:
-                        rs = read_huff(ac_tbl)
-                        r, size = rs >> 4, rs & 0xF
-                        if size == 0:
-                            if r == 15:
-                                k += 16
-                                continue
-                            break
-                        k += r
-                        if k > 63:
-                            raise ValueError("JPEG AC run overflows the block")
-                        coeffs[zigzag[k]] = receive_extend(size) * qt[zigzag[k]]
-                        k += 1
-                    nz = [(idx, cf) for idx, cf in enumerate(coeffs) if cf]
-                    if not nz or (len(nz) == 1 and nz[0][0] == 0):
-                        val = int(round(coeffs[0] / 8)) + 128
-                        val = 0 if val < 0 else (255 if val > 255 else val)
-                        block = [float(val)] * 64
-                        flat_done = True
-                    else:
-                        acc = [0.0] * 64
-                        for idx, cf in nz:
-                            v, u = idx // 8, idx % 8
-                            cvu = c[v] * c[u] * cf
-                            for y in range(8):
-                                cy = cos_t[y][v] * cvu
-                                row = y * 8
-                                for x in range(8):
-                                    acc[row + x] += cy * cos_t[x][u]
-                        block = acc
-                        flat_done = False
-                    for y in range(8):
-                        py = by * 8 + y
-                        if py >= height:
-                            break
-                        row_off = py * width
-                        brow = y * 8
-                        for x in range(8):
-                            px = bx * 8 + x
-                            if px >= width:
-                                continue
-                            if flat_done:
-                                out[row_off + px] = int(block[brow + x])
-                            else:
-                                val = int(round(block[brow + x] / 4)) + 128
-                                out[row_off + px] = (
-                                    0 if val < 0 else (255 if val > 255 else val)
-                                )
-            if seg_idx != len(segs) - 1:
-                raise ValueError("unconsumed JPEG restart segment after final MCU")
-            return width, height, bytes(out)
-
-        for pdf in it:
-            res = {
-                k: []
-                for k in (
-                    "media_id", "width", "height", "n_pix",
-                    "px_sum", "px_min", "px_max",
-                )
-            }
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = decode(bytes(payload))
-                res["media_id"].append(media_id)
-                res["width"].append(w)
-                res["height"].append(h)
-                res["n_pix"].append(w * h)
-                res["px_sum"].append(sum(px))
-                res["px_min"].append(min(px))
-                res["px_max"].append(max(px))
-            yield pd.DataFrame(res)
-
-    return df.mapInPandas(_batches, JPEG_STATS_SCHEMA)
+    """Arrow-batched REAL grayscale JPEG decode (``decode_jpeg``, baseline
+    or progressive): full marker walk, huffman DC/AC decode with
+    byte-unstuffing, dequant, zigzag, float IDCT, level shift — exact
+    integer pixel stats out."""
+    return arrow_map(
+        df.select("media_id", "payload"), _jpeg_stats_row, JPEG_STATS_SCHEMA
+    )
 
 
 JPEG_COLOR_STATS_SCHEMA = StructType(
@@ -3599,571 +2188,45 @@ JPEG_COLOR_STATS_SCHEMA = StructType(
 
 
 def jpeg_encode_color(df: DataFrame, block_width: int) -> DataFrame:
-    """Arrow-batched flat-block 4:4:4 COLOR JPEG encode over mapInPandas:
-    each input row carries per-block (Y, Cb, Cr) levels (``blocks`` binary
-    column, THREE bytes per 8x8 block, ``block_width`` blocks per row);
-    the kernel runs the full 3-component baseline pipeline (interleaved
-    MCUs, per-component DC prediction, luma DHT slot 0 + Annex-K chroma
-    slot 1, byte stuffing). Closure captures only data constants and
-    inlines the logic (workers never import this package). Pinned
-    byte-identical to encode_jpeg_color by tests/test_multimodal.py."""
-    dc_bits, dc_vals = JPEG_DC_BITS, JPEG_DC_VALS
-    ac_bits, ac_vals = JPEG_AC_BITS, JPEG_AC_VALS
-    cdc_bits, cdc_vals = JPEG_DC_BITS_CHROMA, JPEG_DC_VALS_CHROMA
-    cac_bits, cac_vals = JPEG_AC_BITS_CHROMA, JPEG_AC_VALS_CHROMA
-    qtable, zigzag = JPEG_QTABLE, JPEG_ZIGZAG
-
-    def _batches(it: Iterator) -> Iterator:
-        import struct
-
-        import pandas as pd
-
-        def huff_map(bits, vals):
-            out, code, k = {}, 0, 0
-            for length in range(1, 17):
-                for _ in range(bits[length]):
-                    out[vals[k]] = (code, length)
-                    code += 1
-                    k += 1
-                code <<= 1
-            return out
-
-        maps = [
-            (huff_map(dc_bits, dc_vals), huff_map(ac_bits, ac_vals)),
-            (huff_map(cdc_bits, cdc_vals), huff_map(cac_bits, cac_vals)),
-        ]
-
-        def category(v):
-            mag, cat = abs(v), 0
-            while mag:
-                mag >>= 1
-                cat += 1
-            return cat
-
-        def encode(blocks: bytes) -> bytes:
-            bw = block_width
-            if not blocks or len(blocks) % (bw * 3):
-                raise ValueError(
-                    f"color block section is {len(blocks)} bytes, not a "
-                    f"multiple of {bw * 3}"
-                )
-            bh = len(blocks) // (bw * 3)
-            buf, acc, nb = bytearray(), 0, 0
-
-            def put(code, length):
-                nonlocal acc, nb
-                acc = (acc << length) | (code & ((1 << length) - 1))
-                nb += length
-                while nb >= 8:
-                    b = (acc >> (nb - 8)) & 0xFF
-                    buf.append(b)
-                    if b == 0xFF:
-                        buf.append(0x00)
-                    nb -= 8
-
-            prev_dc = [0, 0, 0]
-            for mcu in range(bw * bh):
-                for ci in range(3):
-                    dc_map, ac_map = maps[0] if ci == 0 else maps[1]
-                    v = blocks[mcu * 3 + ci]
-                    dc = v - 128
-                    diff = dc - prev_dc[ci]
-                    prev_dc[ci] = dc
-                    cat = category(diff)
-                    code, ln = dc_map[cat]
-                    put(code, ln)
-                    if cat:
-                        put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-                    code, ln = ac_map[0x00]
-                    put(code, ln)
-            if nb:
-                pad = 8 - nb
-                put((1 << pad) - 1, pad)
-
-            def seg(marker, data):
-                return struct.pack(">HH", marker, len(data) + 2) + data
-
-            width, height = bw * 8, bh * 8
-            return (
-                b"\xff\xd8"
-                + seg(0xFFDB, bytes([0]) + bytes(qtable[zigzag[i]] for i in range(64)))
-                + seg(
-                    0xFFC0,
-                    struct.pack(">BHHB", 8, height, width, 3)
-                    + bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]),
-                )
-                + seg(0xFFC4, bytes([0x00]) + bytes(dc_bits[1:]) + bytes(dc_vals))
-                + seg(0xFFC4, bytes([0x10]) + bytes(ac_bits[1:]) + bytes(ac_vals))
-                + seg(0xFFC4, bytes([0x01]) + bytes(cdc_bits[1:]) + bytes(cdc_vals))
-                + seg(0xFFC4, bytes([0x11]) + bytes(cac_bits[1:]) + bytes(cac_vals))
-                + seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-                + bytes(buf)
-                + b"\xff\xd9"
-            )
-
-        for pdf in it:
-            ids, payloads = [], []
-            for media_id, blocks in zip(pdf["media_id"], pdf["blocks"]):
-                ids.append(media_id)
-                payloads.append(encode(bytes(blocks)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return df.mapInPandas(_batches, PNG_PAYLOAD_SCHEMA)
+    """Arrow-batched flat-block 4:4:4 COLOR JPEG encode
+    (``encode_jpeg_color``): each input row carries per-block (Y, Cb, Cr)
+    levels (``blocks`` binary column, THREE bytes per 8x8 block,
+    ``block_width`` blocks per row)."""
+    return _grid_encode(
+        df, "blocks", encode_jpeg_color, block_width, 3, 8, "color block"
+    )
 
 
 def jpeg_encode_color_420(df: DataFrame, mcu_width: int) -> DataFrame:
-    """Arrow-batched flat-MCU 4:2:0 COLOR JPEG encode over mapInPandas:
-    each input row carries per-MCU (Y, Cb, Cr) levels (``mcus`` binary
-    column, THREE bytes per 16x16 MCU, ``mcu_width`` MCUs per row); the
-    kernel runs the full subsampled 3-component baseline pipeline (Y at
-    2x2 sampling → four Y blocks then Cb then Cr per interleaved MCU,
-    per-component DC prediction across all six, luma DHT slot 0 +
-    Annex-K chroma slot 1, byte stuffing). Closure captures only data
-    constants and inlines the logic (workers never import this package).
-    Pinned byte-identical to encode_jpeg_color_420 by
-    tests/test_multimodal.py."""
-    dc_bits, dc_vals = JPEG_DC_BITS, JPEG_DC_VALS
-    ac_bits, ac_vals = JPEG_AC_BITS, JPEG_AC_VALS
-    cdc_bits, cdc_vals = JPEG_DC_BITS_CHROMA, JPEG_DC_VALS_CHROMA
-    cac_bits, cac_vals = JPEG_AC_BITS_CHROMA, JPEG_AC_VALS_CHROMA
-    qtable, zigzag = JPEG_QTABLE, JPEG_ZIGZAG
+    """Arrow-batched flat-MCU 4:2:0 COLOR JPEG encode
+    (``encode_jpeg_color_420``): each input row carries per-MCU (Y, Cb,
+    Cr) levels (``mcus`` binary column, THREE bytes per 16x16 MCU,
+    ``mcu_width`` MCUs per row)."""
+    return _grid_encode(
+        df, "mcus", encode_jpeg_color_420, mcu_width, 3, 16, "4:2:0 MCU"
+    )
 
-    def _batches(it: Iterator) -> Iterator:
-        import struct
 
-        import pandas as pd
-
-        def huff_map(bits, vals):
-            out, code, k = {}, 0, 0
-            for length in range(1, 17):
-                for _ in range(bits[length]):
-                    out[vals[k]] = (code, length)
-                    code += 1
-                    k += 1
-                code <<= 1
-            return out
-
-        maps = [
-            (huff_map(dc_bits, dc_vals), huff_map(ac_bits, ac_vals)),
-            (huff_map(cdc_bits, cdc_vals), huff_map(cac_bits, cac_vals)),
-        ]
-
-        def category(v):
-            mag, cat = abs(v), 0
-            while mag:
-                mag >>= 1
-                cat += 1
-            return cat
-
-        def encode(mcus: bytes) -> bytes:
-            mw = mcu_width
-            if not mcus or len(mcus) % (mw * 3):
-                raise ValueError(
-                    f"4:2:0 MCU section is {len(mcus)} bytes, not a "
-                    f"multiple of {mw * 3}"
-                )
-            mh = len(mcus) // (mw * 3)
-            buf, acc, nb = bytearray(), 0, 0
-
-            def put(code, length):
-                nonlocal acc, nb
-                acc = (acc << length) | (code & ((1 << length) - 1))
-                nb += length
-                while nb >= 8:
-                    b = (acc >> (nb - 8)) & 0xFF
-                    buf.append(b)
-                    if b == 0xFF:
-                        buf.append(0x00)
-                    nb -= 8
-
-            prev_dc = [0, 0, 0]
-            for mcu in range(mw * mh):
-                for ci in range(3):
-                    dc_map, ac_map = maps[0] if ci == 0 else maps[1]
-                    v = mcus[mcu * 3 + ci]
-                    dc = v - 128
-                    n_blocks = 4 if ci == 0 else 1
-                    for _ in range(n_blocks):
-                        diff = dc - prev_dc[ci]
-                        prev_dc[ci] = dc
-                        cat = category(diff)
-                        code, ln = dc_map[cat]
-                        put(code, ln)
-                        if cat:
-                            put(
-                                diff if diff >= 0 else diff + (1 << cat) - 1,
-                                cat,
-                            )
-                        code, ln = ac_map[0x00]
-                        put(code, ln)
-            if nb:
-                pad = 8 - nb
-                put((1 << pad) - 1, pad)
-
-            def seg(marker, data):
-                return struct.pack(">HH", marker, len(data) + 2) + data
-
-            width, height = mw * 16, mh * 16
-            return (
-                b"\xff\xd8"
-                + seg(0xFFDB, bytes([0]) + bytes(qtable[zigzag[i]] for i in range(64)))
-                + seg(
-                    0xFFC0,
-                    struct.pack(">BHHB", 8, height, width, 3)
-                    + bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]),
-                )
-                + seg(0xFFC4, bytes([0x00]) + bytes(dc_bits[1:]) + bytes(dc_vals))
-                + seg(0xFFC4, bytes([0x10]) + bytes(ac_bits[1:]) + bytes(ac_vals))
-                + seg(0xFFC4, bytes([0x01]) + bytes(cdc_bits[1:]) + bytes(cdc_vals))
-                + seg(0xFFC4, bytes([0x11]) + bytes(cac_bits[1:]) + bytes(cac_vals))
-                + seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-                + bytes(buf)
-                + b"\xff\xd9"
-            )
-
-        for pdf in it:
-            ids, payloads = [], []
-            for media_id, mcus in zip(pdf["media_id"], pdf["mcus"]):
-                ids.append(media_id)
-                payloads.append(encode(bytes(mcus)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return df.mapInPandas(_batches, PNG_PAYLOAD_SCHEMA)
+def _jpeg_color_stats_row(media_id, payload):
+    w, h, nc, rgb = decode_jpeg(bytes(payload))
+    if nc != 3:
+        raise ValueError("jpeg_color_stats expects 3-component JPEG")
+    px = np.frombuffer(rgb, dtype=np.uint8).reshape(-1, 3)
+    r_sum, g_sum, b_sum = (int(v) for v in px.sum(axis=0, dtype=np.int64))
+    return [(media_id, w, h, w * h, r_sum, g_sum, b_sum, int(px.min()), int(px.max()))]
 
 
 def jpeg_color_stats(df: DataFrame) -> DataFrame:
-    """Arrow-batched REAL 3-component baseline-JPEG decode over
-    mapInPandas: full marker walk, four-slot huffman decode, interleaved
-    MCUs with per-component sampling factors 1–2 (4:4:4 / 4:2:2 / 4:4:0 /
-    4:2:0) and per-component DC prediction, dequant, zigzag, float IDCT,
-    level shift, replication chroma upsampling, then the JFIF YCbCr→RGB
+    """Arrow-batched REAL 3-component baseline-JPEG decode
+    (``decode_jpeg``): sampling factors 1–2 (4:4:4 / 4:2:2 / 4:4:0 /
+    4:2:0), replication chroma upsampling, then the JFIF YCbCr→RGB
     conversion with floor(x+0.5) rounding (the one rounding an ANSI-SQL
-    oracle restates exactly) — exact integer channel stats out. Closure
-    inlines the decoder (repo kernel convention); pinned byte-identical
-    to decode_jpeg by tests/test_multimodal.py."""
-    zigzag = JPEG_ZIGZAG
-
-    def _batches(it: Iterator) -> Iterator:
-        import math
-        import struct
-
-        import numpy as np
-        import pandas as pd
-
-        cos_t = [
-            [math.cos((2 * x + 1) * u * math.pi / 16) for u in range(8)]
-            for x in range(8)
-        ]
-        half_sqrt = 1 / math.sqrt(2)
-        c = [half_sqrt] + [1.0] * 7
-
-        def huff_table(bits, vals):
-            out, code, k = {}, 0, 0
-            for length in range(1, 17):
-                for _ in range(bits[length]):
-                    out[(length, code)] = vals[k]
-                    code += 1
-                    k += 1
-                code <<= 1
-            return out
-
-        def decode(payload: bytes):
-            if len(payload) < 4 or payload[:2] != b"\xff\xd8":
-                raise ValueError("not a JPEG (SOI missing)")
-            i, n = 2, len(payload)
-            qtables, huff = {}, {}
-            width = height = 0
-            comps, scan_ids = [], []
-            scan_start = -1
-            while i < n:
-                if payload[i] != 0xFF:
-                    raise ValueError(f"expected a marker at offset {i}")
-                marker = payload[i + 1]
-                i += 2
-                if marker == 0xD9:
-                    raise ValueError("JPEG has no scan data")
-                if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                    continue
-                if i + 2 > n:
-                    raise ValueError("truncated JPEG segment header")
-                (seglen,) = struct.unpack(">H", payload[i : i + 2])
-                if seglen < 2 or i + seglen > n:
-                    raise ValueError("truncated JPEG segment")
-                data = payload[i + 2 : i + seglen]
-                i += seglen
-                if marker == 0xDB:
-                    j = 0
-                    while j < len(data):
-                        pq, tq = data[j] >> 4, data[j] & 0xF
-                        if pq != 0:
-                            raise ValueError("16-bit quantization tables unsupported")
-                        if j + 65 > len(data):
-                            raise ValueError("truncated DQT")
-                        zz = data[j + 1 : j + 65]
-                        tbl = [0] * 64
-                        for k in range(64):
-                            tbl[zigzag[k]] = zz[k]
-                        qtables[tq] = tbl
-                        j += 65
-                elif marker == 0xC4:
-                    j = 0
-                    while j < len(data):
-                        if j + 17 > len(data):
-                            raise ValueError("truncated DHT")
-                        tc, th = data[j] >> 4, data[j] & 0xF
-                        bits = [0] + list(data[j + 1 : j + 17])
-                        nv = sum(bits)
-                        vals = list(data[j + 17 : j + 17 + nv])
-                        if len(vals) != nv:
-                            raise ValueError("truncated DHT")
-                        huff[(tc, th)] = huff_table(bits, vals)
-                        j += 17 + nv
-                elif marker == 0xC0:
-                    if len(data) < 6:
-                        raise ValueError("truncated SOF0")
-                    precision, height, width, nc = struct.unpack(">BHHB", data[:6])
-                    if precision != 8:
-                        raise ValueError(f"unsupported JPEG precision {precision}")
-                    if nc != 3:
-                        raise ValueError("jpeg_color_stats expects 3-component JPEG")
-                    if len(data) < 15:
-                        raise ValueError("truncated SOF0")
-                    comps = []
-                    for ci in range(3):
-                        cid, hv, tq = data[6 + 3 * ci : 9 + 3 * ci]
-                        ch, cv = hv >> 4, hv & 0xF
-                        if ch not in (1, 2) or cv not in (1, 2):
-                            raise ValueError(
-                                "only sampling factors 1 and 2 decode "
-                                "(4:4:4 / 4:2:2 / 4:4:0 / 4:2:0)"
-                            )
-                        comps.append((cid, tq, ch, cv))
-                elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                                0xCB, 0xCD, 0xCE, 0xCF):
-                    raise ValueError("only baseline sequential (SOF0) JPEG decodes")
-                elif marker == 0xDD:
-                    raise ValueError("restart intervals unsupported")
-                elif marker == 0xDA:
-                    if width == 0:
-                        raise ValueError("SOS before SOF0")
-                    if len(data) < 1 + 2 * len(comps) + 3:
-                        raise ValueError("truncated SOS")
-                    if data[0] != len(comps):
-                        raise ValueError("SOS component count differs from SOF0")
-                    scan_ids = []
-                    for ci in range(len(comps)):
-                        sel, tids = data[1 + 2 * ci], data[2 + 2 * ci]
-                        if sel != comps[ci][0]:
-                            raise ValueError("SOS component order differs from SOF0")
-                        scan_ids.append((tids >> 4, tids & 0xF))
-                    scan_start = i
-                    break
-            if scan_start < 0:
-                raise ValueError("JPEG has no SOS marker")
-            if width < 1 or height < 1 or width > 65535 or height > 65535:
-                raise ValueError(f"invalid JPEG dimensions {width}x{height}")
-            for ci in range(3):
-                if comps[ci][1] not in qtables:
-                    raise ValueError(f"missing quantization table {comps[ci][1]}")
-                if (0, scan_ids[ci][0]) not in huff or (1, scan_ids[ci][1]) not in huff:
-                    raise ValueError("missing huffman table")
-            bits_data = bytearray()
-            j = scan_start
-            while j < n:
-                b = payload[j]
-                if b == 0xFF:
-                    if j + 1 >= n:
-                        raise ValueError("truncated JPEG scan")
-                    if payload[j + 1] == 0x00:
-                        bits_data.append(0xFF)
-                        j += 2
-                        continue
-                    break
-                bits_data.append(b)
-                j += 1
-            if payload[j : j + 2] != b"\xff\xd9":
-                raise ValueError("JPEG scan not terminated by EOI")
-            if j + 2 != n:
-                raise ValueError("trailing bytes after JPEG EOI")
-            pos = 0
-
-            def read_bit():
-                nonlocal pos
-                if pos >> 3 >= len(bits_data):
-                    raise ValueError("JPEG entropy stream exhausted mid-block")
-                bit = (bits_data[pos >> 3] >> (7 - (pos & 7))) & 1
-                pos += 1
-                return bit
-
-            def read_huff(tbl):
-                code = 0
-                for length in range(1, 17):
-                    code = (code << 1) | read_bit()
-                    if (length, code) in tbl:
-                        return tbl[(length, code)]
-                raise ValueError("invalid huffman code in JPEG scan")
-
-            def receive_extend(cat):
-                if cat == 0:
-                    return 0
-                v = 0
-                for _ in range(cat):
-                    v = (v << 1) | read_bit()
-                if v < (1 << (cat - 1)):
-                    v -= (1 << cat) - 1
-                return v
-
-            # general interleaved-MCU geometry (hmax/vmax from the SOF0
-            # sampling factors; 4:4:4 is the hmax = vmax = 1 special
-            # case): each component decodes into its own MCU-padded
-            # plane, upsampled by replication afterwards
-            hmax = max(cmp[2] for cmp in comps)
-            vmax = max(cmp[3] for cmp in comps)
-            mcux = (width + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-            plane_dims = [
-                (mcux * cmp[2] * 8, mcuy * cmp[3] * 8) for cmp in comps
-            ]
-            planes = [bytearray(pw * ph) for pw, ph in plane_dims]
-            prev_dc = [0, 0, 0]
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    for ci in range(3):
-                        _, _, chs, cvs = comps[ci]
-                        qt = qtables[comps[ci][1]]
-                        dc_tbl = huff[(0, scan_ids[ci][0])]
-                        ac_tbl = huff[(1, scan_ids[ci][1])]
-                        pw = plane_dims[ci][0]
-                        for vy in range(cvs):
-                            for hx in range(chs):
-                                coeffs = [0] * 64
-                                cat = read_huff(dc_tbl)
-                                prev_dc[ci] += receive_extend(cat)
-                                coeffs[0] = prev_dc[ci] * qt[0]
-                                k = 1
-                                while k < 64:
-                                    rs = read_huff(ac_tbl)
-                                    r, size = rs >> 4, rs & 0xF
-                                    if size == 0:
-                                        if r == 15:
-                                            k += 16
-                                            continue
-                                        break
-                                    k += r
-                                    if k > 63:
-                                        raise ValueError(
-                                            "JPEG AC run overflows the block"
-                                        )
-                                    coeffs[zigzag[k]] = (
-                                        receive_extend(size) * qt[zigzag[k]]
-                                    )
-                                    k += 1
-                                nz = [
-                                    (idx, cf)
-                                    for idx, cf in enumerate(coeffs)
-                                    if cf
-                                ]
-                                if not nz or (len(nz) == 1 and nz[0][0] == 0):
-                                    val = int(round(coeffs[0] / 8)) + 128
-                                    val = (
-                                        0 if val < 0
-                                        else (255 if val > 255 else val)
-                                    )
-                                    block = [float(val)] * 64
-                                    flat_done = True
-                                else:
-                                    acc = [0.0] * 64
-                                    for idx, cf in nz:
-                                        v, u = idx // 8, idx % 8
-                                        cvu = c[v] * c[u] * cf
-                                        for y in range(8):
-                                            cy = cos_t[y][v] * cvu
-                                            row = y * 8
-                                            for x in range(8):
-                                                acc[row + x] += cy * cos_t[x][u]
-                                    block = acc
-                                    flat_done = False
-                                # MCU-padded plane: the block always lands
-                                # fully in bounds
-                                out = planes[ci]
-                                base = (
-                                    (my * cvs + vy) * 8 * pw
-                                    + (mx * chs + hx) * 8
-                                )
-                                if flat_done:
-                                    row8 = bytes([int(block[0])]) * 8
-                                    for y in range(8):
-                                        row_off = base + y * pw
-                                        out[row_off : row_off + 8] = row8
-                                    continue
-                                for y in range(8):
-                                    row_off = base + y * pw
-                                    brow = y * 8
-                                    for x in range(8):
-                                        val = (
-                                            int(round(block[brow + x] / 4))
-                                            + 128
-                                        )
-                                        out[row_off + x] = (
-                                            0 if val < 0
-                                            else (255 if val > 255 else val)
-                                        )
-            # replication upsample + crop each plane to width x height,
-            # then YCbCr -> RGB vectorized: numpy float64 ops are the SAME
-            # IEEE arithmetic as the module reference's per-pixel
-            # math.floor path (pinned identical by tests), ~50x faster on
-            # the Arrow batch
-            full = []
-            for ci in range(3):
-                pw, ph = plane_dims[ci]
-                arr = np.frombuffer(bytes(planes[ci]), dtype=np.uint8).reshape(
-                    ph, pw
-                )
-                sx, sy = hmax // comps[ci][2], vmax // comps[ci][3]
-                if sy > 1:
-                    arr = np.repeat(arr, sy, axis=0)
-                if sx > 1:
-                    arr = np.repeat(arr, sx, axis=1)
-                full.append(
-                    arr[:height, :width].reshape(-1).astype(np.float64)
-                )
-            yv = full[0]
-            cb = full[1] - 128.0
-            cr = full[2] - 128.0
-            r = np.clip(np.floor(yv + 1.402 * cr + 0.5), 0.0, 255.0)
-            g = np.clip(
-                np.floor(yv - 0.344136 * cb - 0.714136 * cr + 0.5), 0.0, 255.0
-            )
-            b = np.clip(np.floor(yv + 1.772 * cb + 0.5), 0.0, 255.0)
-            mn = int(min(r.min(), g.min(), b.min()))
-            mx = int(max(r.max(), g.max(), b.max()))
-            return (
-                width, height,
-                int(r.sum()), int(g.sum()), int(b.sum()), mn, mx,
-            )
-
-        for pdf in it:
-            res = {
-                k: []
-                for k in (
-                    "media_id", "width", "height", "n_pix",
-                    "r_sum", "g_sum", "b_sum", "rgb_min", "rgb_max",
-                )
-            }
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, rs, gs, bs, mn, mx = decode(bytes(payload))
-                res["media_id"].append(media_id)
-                res["width"].append(w)
-                res["height"].append(h)
-                res["n_pix"].append(w * h)
-                res["r_sum"].append(rs)
-                res["g_sum"].append(gs)
-                res["b_sum"].append(bs)
-                res["rgb_min"].append(mn)
-                res["rgb_max"].append(mx)
-            yield pd.DataFrame(res)
-
-    return df.mapInPandas(_batches, JPEG_COLOR_STATS_SCHEMA)
+    oracle restates exactly) — exact integer channel stats out."""
+    return arrow_map(
+        df.select("media_id", "payload"),
+        _jpeg_color_stats_row,
+        JPEG_COLOR_STATS_SCHEMA,
+    )
 
 
 WAV_STATS_SCHEMA = StructType(
@@ -4180,78 +2243,25 @@ WAV_STATS_SCHEMA = StructType(
 )
 
 
+def _wav_stats_row(media_id, payload):
+    channels, rate, bits, data = decode_wav(bytes(payload))
+    # 8-bit PCM is unsigned bytes; 16-bit is signed little-endian
+    samples = data if bits == 8 else struct.unpack(f"<{len(data) // 2}h", data)
+    return [
+        (
+            media_id, channels, rate, bits, len(samples), sum(samples),
+            min(samples) if samples else 0, max(samples) if samples else 0,
+        )
+    ]
+
+
 def wav_stats(df: DataFrame) -> DataFrame:
-    """Arrow-batched REAL audio decode over mapInPandas: RIFF-parse each
-    WAV payload and emit exact integer sample stats (8-bit unsigned /
-    16-bit signed LE) — no floats in the kernel. Closure inlines the
-    parser (workers must not need this package importable);
-    tests/test_multimodal.py pins it byte-identical to decode_wav."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        def parse(payload: bytes):
-            if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-                raise ValueError("not a RIFF/WAVE payload")
-            if int.from_bytes(payload[4:8], "little") + 8 != len(payload):
-                raise ValueError("RIFF size inconsistent")
-            i, n = 12, len(payload)
-            fmt = None
-            data = None
-            while i + 8 <= n:
-                cid = payload[i : i + 4]
-                size = int.from_bytes(payload[i + 4 : i + 8], "little")
-                body = payload[i + 8 : i + 8 + size]
-                if len(body) != size:
-                    raise ValueError("chunk truncated")
-                if cid == b"fmt ":
-                    if size < 16:
-                        raise ValueError("fmt chunk too small")
-                    fmt = (
-                        int.from_bytes(body[0:2], "little"),
-                        int.from_bytes(body[2:4], "little"),
-                        int.from_bytes(body[4:8], "little"),
-                        int.from_bytes(body[14:16], "little"),
-                    )
-                elif cid == b"data":
-                    data = body
-                i += 8 + size + (size % 2)
-            if i < n:
-                raise ValueError("trailing bytes after the last RIFF chunk")
-            if fmt is None or data is None:
-                raise ValueError("missing fmt or data chunk")
-            afmt, channels, rate, bits = fmt
-            if afmt != 1 or bits not in (8, 16) or channels < 1:
-                raise ValueError("unsupported WAV encoding")
-            frame = channels * (bits // 8)
-            if len(data) % frame != 0:
-                raise ValueError("partial frame in data section")
-            if bits == 8:
-                samples = list(data)
-            else:
-                samples = [
-                    int.from_bytes(data[j : j + 2], "little", signed=True)
-                    for j in range(0, len(data), 2)
-                ]
-            return channels, rate, bits, samples
-
-        for pdf in it:
-            out = {k: [] for k in
-                   ("media_id", "n_channels", "sample_rate", "bits",
-                    "n_samples", "s_sum", "s_min", "s_max")}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                ch, rate, bits, samples = parse(bytes(payload))
-                out["media_id"].append(media_id)
-                out["n_channels"].append(ch)
-                out["sample_rate"].append(rate)
-                out["bits"].append(bits)
-                out["n_samples"].append(len(samples))
-                out["s_sum"].append(sum(samples))
-                out["s_min"].append(min(samples) if samples else 0)
-                out["s_max"].append(max(samples) if samples else 0)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_batches, WAV_STATS_SCHEMA)
+    """Arrow-batched REAL audio decode (``decode_wav``): exact integer
+    sample stats per WAV payload (8-bit unsigned / 16-bit signed LE) — no
+    floats in the kernel."""
+    return arrow_map(
+        df.select("media_id", "payload"), _wav_stats_row, WAV_STATS_SCHEMA
+    )
 
 
 PPM_RESIZE_SCHEMA = StructType(
@@ -4270,95 +2280,47 @@ PPM_RESIZE_SCHEMA = StructType(
 )
 
 
+def _ppm_resize_row(media_id, payload, *, factor):
+    w, h, _, pixels = decode_ppm(bytes(payload))
+    w2, h2 = w // factor, h // factor
+    if w2 < 1 or h2 < 1:
+        raise ValueError(f"{w}x{h} image smaller than the {factor}x{factor} block")
+    area = factor * factor
+    ch_sums = [0, 0, 0]
+    pmin, pmax = 255, 0
+    for orow in range(h2):
+        for ocol in range(w2):
+            for ch in range(3):
+                s = 0
+                for dy in range(factor):
+                    row = (orow * factor + dy) * w
+                    for dx in range(factor):
+                        s += pixels[(row + ocol * factor + dx) * 3 + ch]
+                v = s // area
+                ch_sums[ch] += v
+                if v < pmin:
+                    pmin = v
+                if v > pmax:
+                    pmax = v
+    return [(media_id, w, h, w2, h2, *ch_sums, pmin, pmax)]
+
+
 def ppm_resize_stats(df: DataFrame, factor: int = 2) -> DataFrame:
-    """Arrow-batched REAL image RESIZE over mapInPandas: PPM-parse each
-    payload, box-filter downsample by ``factor`` (each output channel
-    value = floor mean of its factor×factor input block; rows/cols beyond
-    the last whole block are cropped, the standard pooling convention),
-    and emit exact integer stats of the RESIZED image — the fourth named
-    multimodal kernel (decode / feature-extract / frame-sample / resize),
-    all integer arithmetic so both engines agree to the last bit. Raises
-    on any payload smaller than one block — a resize that silently
-    emits an empty image hides upstream corruption. Closure inlines the
-    parser (workers must not need this package importable);
-    tests/test_multimodal.py pins it against a pure-Python reference."""
+    """Arrow-batched REAL image RESIZE: PPM-decode each payload, box-filter
+    downsample by ``factor`` (each output channel value = floor mean of
+    its factor×factor input block; rows/cols beyond the last whole block
+    are cropped, the standard pooling convention), and emit exact integer
+    stats of the RESIZED image — all integer arithmetic so both engines
+    agree to the last bit. Raises on any payload smaller than one block —
+    a resize that silently emits an empty image hides upstream
+    corruption."""
     if factor < 1:
         raise ValueError("factor must be >= 1")
-
-    def _batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        def parse(payload: bytes):
-            if not payload or not payload.startswith(b"P6"):
-                raise ValueError("not a binary PPM (P6 magic missing)")
-            i, n = 2, len(payload)
-            fields: list[int] = []
-            while len(fields) < 3:
-                while i < n and payload[i : i + 1].isspace():
-                    i += 1
-                if i < n and payload[i : i + 1] == b"#":
-                    while i < n and payload[i] != 0x0A:
-                        i += 1
-                    continue
-                j = i
-                while j < n and not payload[j : j + 1].isspace():
-                    j += 1
-                if j == i or not payload[i:j].isdigit():
-                    raise ValueError("malformed PPM header field")
-                fields.append(int(payload[i:j]))
-                i = j
-            if i >= n or not payload[i : i + 1].isspace():
-                raise ValueError("malformed PPM header")
-            i += 1
-            width, height, maxval = fields
-            if width < 1 or height < 1 or not 0 < maxval <= 255:
-                raise ValueError("invalid PPM header values")
-            pixels = payload[i:]
-            if len(pixels) != width * height * 3:
-                raise ValueError("PPM pixel section length mismatch")
-            return width, height, pixels
-
-        area = factor * factor
-        for pdf in it:
-            out = {k: [] for k in
-                   ("media_id", "in_w", "in_h", "out_w", "out_h",
-                    "r_sum", "g_sum", "b_sum", "px_min", "px_max")}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, pixels = parse(bytes(payload))
-                w2, h2 = w // factor, h // factor
-                if w2 < 1 or h2 < 1:
-                    raise ValueError(
-                        f"{w}x{h} image smaller than the {factor}x{factor} block"
-                    )
-                ch_sums = [0, 0, 0]
-                pmin, pmax = 255, 0
-                for orow in range(h2):
-                    for ocol in range(w2):
-                        for ch in range(3):
-                            s = 0
-                            for dy in range(factor):
-                                row = (orow * factor + dy) * w
-                                for dx in range(factor):
-                                    s += pixels[(row + ocol * factor + dx) * 3 + ch]
-                            v = s // area
-                            ch_sums[ch] += v
-                            if v < pmin:
-                                pmin = v
-                            if v > pmax:
-                                pmax = v
-                out["media_id"].append(media_id)
-                out["in_w"].append(w)
-                out["in_h"].append(h)
-                out["out_w"].append(w2)
-                out["out_h"].append(h2)
-                out["r_sum"].append(ch_sums[0])
-                out["g_sum"].append(ch_sums[1])
-                out["b_sum"].append(ch_sums[2])
-                out["px_min"].append(pmin)
-                out["px_max"].append(pmax)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_batches, PPM_RESIZE_SCHEMA)
+    return arrow_map(
+        df.select("media_id", "payload"),
+        functools.partial(_ppm_resize_row, factor=factor),
+        PPM_RESIZE_SCHEMA,
+    )
 
 
 Y4M_STATS_SCHEMA = StructType(
@@ -4376,88 +2338,33 @@ Y4M_STATS_SCHEMA = StructType(
 )
 
 
+def _y4m_stats_row(media_id, payload, *, sample_every):
+    w, h, n_frames, planes = decode_y4m(bytes(payload))
+    fb = w * h
+    sampled = range(0, n_frames, sample_every)
+    samp_sum = sum(sum(planes[k * fb : (k + 1) * fb]) for k in sampled)
+    return [
+        (
+            media_id, w, h, n_frames, sum(planes), min(planes), max(planes),
+            len(sampled), samp_sum,
+        )
+    ]
+
+
 def y4m_stats(df: DataFrame, sample_every: int = 2) -> DataFrame:
-    """Arrow-batched REAL video decode over mapInPandas: parse each Y4M
-    mono payload and emit exact integer pixel stats over ALL frames plus
-    the every-``sample_every``-th-frame subset — in-payload frame
-    sampling, the semantics ``sample_frames`` (a row-level index filter)
-    cannot express because the frames live INSIDE one binary payload.
-    No floats in the kernel; closure inlines the parser (workers must not
-    need this package importable); tests/test_multimodal.py pins it
-    byte-identical to decode_y4m."""
+    """Arrow-batched REAL video decode (``decode_y4m``): exact integer
+    pixel stats over ALL frames of each Y4M mono payload plus the
+    every-``sample_every``-th-frame subset — in-payload frame sampling,
+    the semantics ``sample_frames`` (a row-level index filter) cannot
+    express because the frames live INSIDE one binary payload. No floats
+    in the kernel."""
     if sample_every < 1:
         raise ValueError("sample_every must be >= 1")
-
-    def _batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        def parse(payload: bytes):
-            if not payload.startswith(b"YUV4MPEG2"):
-                raise ValueError("not a YUV4MPEG2 stream")
-            nl = payload.find(b"\n")
-            if nl < 0:
-                raise ValueError("unterminated stream header")
-            width = height = None
-            colorspace = b"420"
-            for tok in payload[9:nl].split(b" "):
-                if not tok:
-                    continue
-                tag, val = tok[:1], tok[1:]
-                if tag == b"W":
-                    if not val.isdigit():
-                        raise ValueError("malformed Y4M width")
-                    width = int(val)
-                elif tag == b"H":
-                    if not val.isdigit():
-                        raise ValueError("malformed Y4M height")
-                    height = int(val)
-                elif tag == b"C":
-                    colorspace = val
-            if not width or not height:
-                raise ValueError("Y4M stream header missing W or H")
-            if colorspace != b"mono":
-                raise ValueError("unsupported Y4M colorspace (mono only)")
-            frame_bytes = width * height
-            i, n = nl + 1, len(payload)
-            frames: list[bytes] = []
-            while i < n:
-                if payload[i : i + 5] != b"FRAME" or payload[i + 5 : i + 6] not in (
-                    b"\n",
-                    b" ",
-                ):
-                    raise ValueError("malformed FRAME marker")
-                fnl = payload.find(b"\n", i + 5)
-                if fnl < 0:
-                    raise ValueError("unterminated FRAME header")
-                body = payload[fnl + 1 : fnl + 1 + frame_bytes]
-                if len(body) != frame_bytes:
-                    raise ValueError("truncated frame")
-                frames.append(body)
-                i = fnl + 1 + frame_bytes
-            if not frames:
-                raise ValueError("Y4M stream contains no frames")
-            return width, height, frames
-
-        for pdf in it:
-            out = {k: [] for k in
-                   ("media_id", "width", "height", "n_frames",
-                    "px_sum", "px_min", "px_max", "samp_frames", "samp_sum")}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = parse(bytes(payload))
-                allpix = b"".join(frames)
-                sampled = frames[::sample_every]
-                out["media_id"].append(media_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_frames"].append(len(frames))
-                out["px_sum"].append(sum(allpix))
-                out["px_min"].append(min(allpix))
-                out["px_max"].append(max(allpix))
-                out["samp_frames"].append(len(sampled))
-                out["samp_sum"].append(sum(b"".join(sampled)))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_batches, Y4M_STATS_SCHEMA)
+    return arrow_map(
+        df.select("media_id", "payload"),
+        functools.partial(_y4m_stats_row, sample_every=sample_every),
+        Y4M_STATS_SCHEMA,
+    )
 
 
 def sample_frames(df: DataFrame, every_nth: int, frame_col: str = "media_id") -> DataFrame:

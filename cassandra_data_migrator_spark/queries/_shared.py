@@ -164,9 +164,11 @@ def _session_artifact(spark, tag: str, build):
             tempfile.gettempdir(),
             f"cdm_shared_{spark.sparkContext.applicationId}",
         )
-        if not os.path.isdir(session_dir):
-            # one best-effort cleanup hook per session dir — without it,
-            # every application leaks its artifact parquet into /tmp
+        if session_dir not in _SCRATCH_REGISTERED:
+            # one best-effort cleanup hook per session dir, however often
+            # it is purged and rebuilt — without it, every application
+            # leaks its artifact parquet into /tmp
+            _SCRATCH_REGISTERED.add(session_dir)
             atexit.register(shutil.rmtree, session_dir, ignore_errors=True)
         path = os.path.join(session_dir, f"{tag.split('|')[0]}_{digest}")
         # r13 note (§1.1): a REBALANCE hint before this write was tried
@@ -183,12 +185,19 @@ def _session_artifact(spark, tag: str, build):
 
 def purge_session_artifacts(spark) -> None:
     """Forget AND delete every standing artifact so the next consumer pays
-    its own full derivation (r12 verdict #1: bench numbers for artifact-
-    backed keys measured a parquet re-read, not the declared computation).
-    bench.py calls this before EVERY timed run — each run rebuilds whatever
-    artifacts its key consumes, so the reported median charges the build.
-    Results are unaffected: every build is deterministic, and the memo was
-    always per-application (never keyed on the fixture path)."""
+    its own full derivation. bench.py calls this before EVERY timed run —
+    each run rebuilds whatever artifacts its key consumes, so the reported
+    median charges the build. Results are unaffected: every build is
+    deterministic, and the memo was always per-application (never keyed on
+    the fixture path).
+
+    Two limits of the purge:
+
+    - DataFrames returned before a purge become invalid: they read the
+      deleted parquet, so re-run their builder instead of reusing them.
+    - The training memos ``_IVF_CENTROIDS_CACHE``, ``_PQ_CODEBOOKS_CACHE``
+      and ``_PREFIX_FILTER_CACHE`` survive a purge: Lloyd and codebook
+      training is paid once per session, not once per run."""
     import os
     import shutil
     import tempfile

@@ -355,11 +355,11 @@ def q_multimodal_png(spark, sf_dir):
     to pixels, emitting exact integer stats. The oracle never sees a PNG:
     it re-slices the ORIGINAL text bytes in DuckDB, so the deflate →
     inflate → defilter roundtrip must be byte-exact end-to-end — a single
-    mis-reconstructed filter byte anywhere turns the key red. (Encode and
-    decode closures are independently pinned byte-identical to the
-    module-level encode_png/decode_png by tests/test_multimodal.py, which
-    also covers Paeth hand-vectors and corrupt-chunk strictness, so a
-    matched encoder/decoder bug cannot hide.)"""
+    mis-reconstructed filter byte anywhere turns the key red. (Both kernels
+    run the module-level encode_png/decode_png; tests/test_multimodal.py
+    pins those independently, including Paeth hand-vectors and
+    corrupt-chunk strictness, so a matched encoder/decoder bug cannot
+    hide.)"""
     from cassandra_data_migrator_spark.operators.multimodal import (
         png_encode_rgb,
         png_stats,

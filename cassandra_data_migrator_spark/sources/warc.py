@@ -18,27 +18,29 @@ instead of resynchronizing.
 Reference parity: ossarga/cassandra-data-migrator is packaging-only (its
 single source file is a Maven jar-swapper), so there is no upstream WARC
 counterpart; this module follows the public WARC/1.0 spec and the common
-warcio semantics. Kernel discipline matches operators/multimodal.py:
-the mapInPandas closure inlines the parser (stdlib only — python workers
-must not need this package importable); ``parse_warc_bytes`` is the
-module-level reference implementation pinned byte-identical in tests.
+warcio semantics. One framing loop (``_warc_records``) serves every
+parser, and each DataFrame kernel runs a module-level parser through
+``session.arrow_map``, one output row per record.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
-from typing import Iterator
+import re
+import zlib
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType
+
+from cassandra_data_migrator_spark.session import arrow_map
 
 _CRLF = b"\r\n"
 
 
-def parse_warc_bytes(buf: bytes) -> list[dict]:
-    """Reference WARC parser (driver/test side — the kernel inlines the
-    same logic). Returns one dict per record: rec_type, target_uri,
-    content_length, http_status, payload_len, payload_md5."""
-    out = []
+def _warc_records(buf: bytes):
+    """Yield ``(offset, headers, block)`` per record, framed by
+    Content-Length; header names are lowercased."""
     i, n = 0, len(buf)
     while i < n:
         rec_off = i
@@ -68,43 +70,68 @@ def parse_warc_bytes(buf: bytes) -> list[dict]:
         if buf[i : i + 4] != b"\r\n\r\n":
             raise ValueError("WARC record missing trailing CRLFCRLF")
         i += 4
+        yield rec_off, headers, block
+
+
+def _target_uri(headers: dict, rec_off: int) -> str | None:
+    # Target URIs in real crawls carry UTF-8 (IRI) bytes; a non-UTF-8 URI
+    # refuses loudly instead of dying with a raw UnicodeDecodeError.
+    uri = headers.get(b"warc-target-uri")
+    if uri is None:
+        return None
+    try:
+        return uri.decode("utf-8")
+    except UnicodeDecodeError:
+        raise ValueError(
+            f"record at offset {rec_off} has non-UTF-8 WARC-Target-URI {uri!r}"
+        ) from None
+
+
+def _split_http_response(block: bytes) -> tuple[int, list[bytes], bytes]:
+    """(status, header lines, body) of an HTTP response block. Headers end
+    at the FIRST CRLFCRLF (the body may itself contain more)."""
+    sep = block.find(b"\r\n\r\n")
+    if sep < 0:
+        raise ValueError("HTTP response block has no header terminator")
+    lines = block[:sep].split(_CRLF)
+    parts = lines[0].split(b" ")
+    if len(parts) < 2 or not parts[0].startswith(b"HTTP/"):
+        raise ValueError(f"malformed HTTP status line {lines[0]!r}")
+    return int(parts[1]), lines[1:], block[sep + 4 :]
+
+
+def _checked_http_headers(lines: list[bytes], body: bytes) -> dict:
+    """{lowercased name: value} of HTTP header lines, refusing a declared
+    Content-Length that differs from the body length."""
+    headers = {}
+    for line in lines:
+        k = line.find(b":")
+        if k > 0:
+            name, value = line[:k].strip().lower(), line[k + 1 :].strip()
+            if name == b"content-length" and int(value) != len(body):
+                raise ValueError("HTTP Content-Length != body length")
+            headers[name] = value
+    return headers
+
+
+def parse_warc_bytes(buf: bytes) -> list[dict]:
+    """One dict per record: rec_type, target_uri, content_length,
+    http_status, payload_len, payload_md5, payload (the HTTP body for
+    responses, the block otherwise)."""
+    out = []
+    for rec_off, headers, block in _warc_records(buf):
         rec_type = headers.get(b"warc-type", b"").decode("ascii")
-        uri = headers.get(b"warc-target-uri")
-        if uri is not None:
-            # Target URIs in real crawls carry UTF-8 (IRI) bytes; a
-            # non-UTF-8 URI refuses loudly per the module contract
-            # instead of dying with a raw UnicodeDecodeError.
-            try:
-                uri = uri.decode("utf-8")
-            except UnicodeDecodeError:
-                raise ValueError(
-                    f"record at offset {rec_off} has non-UTF-8 "
-                    f"WARC-Target-URI {uri!r}"
-                ) from None
+        uri = _target_uri(headers, rec_off)
         status = None
         payload = block
         if rec_type == "response":
-            # block is an HTTP response: split headers/body on the FIRST
-            # CRLFCRLF (the body may itself contain more)
-            sep = block.find(b"\r\n\r\n")
-            if sep < 0:
-                raise ValueError("HTTP response block has no header terminator")
-            head, payload = block[:sep], block[sep + 4 :]
-            sl = head.split(_CRLF, 1)[0]
-            parts = sl.split(b" ")
-            if len(parts) < 2 or not parts[0].startswith(b"HTTP/"):
-                raise ValueError(f"malformed HTTP status line {sl!r}")
-            status = int(parts[1])
-            for hline in head.split(_CRLF)[1:]:
-                hk = hline.find(b":")
-                if hk > 0 and hline[:hk].strip().lower() == b"content-length":
-                    if int(hline[hk + 1 :].strip()) != len(payload):
-                        raise ValueError("HTTP Content-Length != body length")
+            status, lines, payload = _split_http_response(block)
+            _checked_http_headers(lines, payload)
         out.append(
             {
                 "rec_type": rec_type,
                 "target_uri": uri,
-                "content_length": cl,
+                "content_length": len(block),
                 "http_status": status,
                 "payload_len": len(payload),
                 "payload_md5": hashlib.md5(payload).hexdigest(),
@@ -121,130 +148,40 @@ WARC_RECORD_SCHEMA = (
 WARC_RECORD_PAYLOAD_SCHEMA = WARC_RECORD_SCHEMA + ", payload binary"
 
 
+def _records_row(content, *, parse, fields):
+    return [tuple(rec[f] for f in fields) for rec in parse(bytes(content))]
+
+
+def _map_records(df: DataFrame, content_col: str, parse, schema: str) -> DataFrame:
+    """One output row per record ``parse`` finds in each input file, with
+    the fields of ``schema`` taken from the record dicts."""
+    out_schema = DataType.fromDDL(schema)
+    row = functools.partial(
+        _records_row, parse=parse, fields=tuple(out_schema.fieldNames())
+    )
+    return arrow_map(df.selectExpr(f"{content_col} as __warc"), row, out_schema)
+
+
 def warc_records(
     df: DataFrame, content_col: str = "content", with_payload: bool = False
 ) -> DataFrame:
-    """Arrow-batched WARC record extraction over mapInPandas: each input
-    row carries one whole WARC file (binary); output is one row per
+    """Arrow-batched WARC record extraction (``parse_warc_bytes``): each
+    input row carries one whole WARC file (binary); output is one row per
     record with exact integer/string fields only (bit-reproducible, no
-    floats). The closure inlines the parser — repo kernel convention:
-    python workers must not need this package importable.
-    tests/test_warc.py pins the inlined copy byte-identical to
-    ``parse_warc_bytes``. ``with_payload=True`` additionally emits the
-    raw record payload (the HTTP body for responses) — the column the
-    streaming HTML/text pipeline consumes; the digest-only default keeps
-    batch record audits from hauling page bytes through the shuffle."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import hashlib as _hashlib
-
-        import pandas as pd
-
-        def parse(buf: bytes):
-            recs = []
-            i, n = 0, len(buf)
-            while i < n:
-                rec_off = i
-                if not buf.startswith(b"WARC/1.0\r\n", i):
-                    raise ValueError(
-                        f"record at offset {i} missing WARC/1.0 version line"
-                    )
-                i += 10
-                headers = {}
-                while True:
-                    j = buf.find(b"\r\n", i)
-                    if j < 0:
-                        raise ValueError("truncated WARC header block")
-                    line = buf[i:j]
-                    i = j + 2
-                    if not line:
-                        break
-                    k = line.find(b":")
-                    if k <= 0:
-                        raise ValueError(f"malformed WARC header line {line!r}")
-                    headers[line[:k].strip().lower()] = line[k + 1 :].strip()
-                if b"content-length" not in headers:
-                    raise ValueError("WARC record missing Content-Length")
-                cl = int(headers[b"content-length"])
-                if i + cl > n:
-                    raise ValueError("WARC block overruns file (bad Content-Length)")
-                block = buf[i : i + cl]
-                i += cl
-                if buf[i : i + 4] != b"\r\n\r\n":
-                    raise ValueError("WARC record missing trailing CRLFCRLF")
-                i += 4
-                rec_type = headers.get(b"warc-type", b"").decode("ascii")
-                uri = headers.get(b"warc-target-uri")
-                if uri is not None:
-                    try:
-                        uri = uri.decode("utf-8")
-                    except UnicodeDecodeError:
-                        raise ValueError(
-                            f"record at offset {rec_off} has non-UTF-8 "
-                            f"WARC-Target-URI {uri!r}"
-                        ) from None
-                status = None
-                payload = block
-                if rec_type == "response":
-                    sep = block.find(b"\r\n\r\n")
-                    if sep < 0:
-                        raise ValueError("HTTP response block has no header terminator")
-                    head, payload = block[:sep], block[sep + 4 :]
-                    sl = head.split(b"\r\n", 1)[0]
-                    parts = sl.split(b" ")
-                    if len(parts) < 2 or not parts[0].startswith(b"HTTP/"):
-                        raise ValueError(f"malformed HTTP status line {sl!r}")
-                    status = int(parts[1])
-                    for hline in head.split(b"\r\n")[1:]:
-                        hk = hline.find(b":")
-                        if hk > 0 and hline[:hk].strip().lower() == b"content-length":
-                            if int(hline[hk + 1 :].strip()) != len(payload):
-                                raise ValueError("HTTP Content-Length != body length")
-                rec = (
-                    rec_type,
-                    uri,
-                    cl,
-                    status,
-                    len(payload),
-                    _hashlib.md5(payload).hexdigest(),
-                )
-                recs.append(rec + (payload,) if with_payload else rec)
-            return recs
-
-        cols = (
-            "rec_type",
-            "target_uri",
-            "content_length",
-            "http_status",
-            "payload_len",
-            "payload_md5",
-        ) + (("payload",) if with_payload else ())
-        for pdf in it:
-            out = {c: [] for c in cols}
-            for payload in pdf["__warc"]:
-                for rec in parse(bytes(payload)):
-                    for c, v in zip(cols, rec):
-                        out[c].append(v)
-            frame = pd.DataFrame(out)
-            # http_status is None for non-response records: keep it object
-            # (Arrow maps None→null); a float64 NaN column would refuse the
-            # int32 cast
-            frame["http_status"] = frame["http_status"].astype("object")
-            yield frame
-
-    src = df.selectExpr(f"{content_col} as __warc")
+    floats). ``with_payload=True`` additionally emits the raw record
+    payload (the HTTP body for responses) — the column the streaming
+    HTML/text pipeline consumes; the digest-only default keeps batch
+    record audits from hauling page bytes through the shuffle."""
     schema = WARC_RECORD_PAYLOAD_SCHEMA if with_payload else WARC_RECORD_SCHEMA
-    return src.mapInPandas(_batches, schema=schema)
+    return _map_records(df, content_col, parse_warc_bytes, schema)
 
 
 def split_gzip_members(buf: bytes) -> list[bytes]:
     """Split a per-record-gzipped WARC (.warc.gz, the Common Crawl
     convention: every record is its OWN gzip member, so readers can seek
     to member offsets without decompressing the file) into decompressed
-    member payloads. Reference implementation (the kernel inlines the
-    same loop); refuses loudly on trailing garbage or truncated members."""
-    import zlib
-
+    member payloads; refuses loudly on trailing garbage or truncated
+    members."""
     out = []
     rest = bytes(buf)
     while rest:
@@ -264,134 +201,32 @@ def split_gzip_members(buf: bytes) -> list[bytes]:
     return out
 
 
+def parse_warc_gzip(buf: bytes) -> list[dict]:
+    """``parse_warc_bytes`` over a per-record-gzipped WARC: one member =
+    one record by convention, validated — a member holding anything but
+    exactly one record refuses."""
+    out = []
+    for member in split_gzip_members(buf):
+        recs = parse_warc_bytes(member)
+        if len(recs) != 1:
+            raise ValueError(
+                "gzip member must hold exactly one CRLFCRLF-terminated record"
+            )
+        out.extend(recs)
+    return out
+
+
 def warc_gzip_records(df: DataFrame, content_col: str = "content",
                       with_payload: bool = False) -> DataFrame:
     """``warc_records`` over per-record-gzipped WARC files (.warc.gz, the
     format 100 TB of Common Crawl actually arrives in): each input row is
-    one whole .warc.gz; the kernel splits gzip MEMBERS (zlib multi-member
-    walk — one member = one record by convention, validated: a member
-    whose bytes hold anything but exactly one record refuses), inflates,
-    and reuses the Content-Length-framed parser. Closure is stdlib-only
-    and fully inlined (repo kernel convention); pinned against
-    split_gzip_members + parse_warc_bytes by tests/test_warc.py."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import hashlib as _hashlib
-        import zlib as _zlib
-
-        import pandas as pd
-
-        def members(buf: bytes):
-            out = []
-            rest = bytes(buf)
-            while rest:
-                if rest[:2] != b"\x1f\x8b":
-                    raise ValueError(
-                        f"gzip member magic missing at offset {len(buf) - len(rest)}"
-                    )
-                d = _zlib.decompressobj(wbits=31)
-                try:
-                    data = d.decompress(rest) + d.flush()
-                except _zlib.error as e:
-                    raise ValueError(f"corrupt gzip member: {e}") from None
-                if not d.eof:
-                    raise ValueError("truncated gzip member")
-                out.append(data)
-                rest = d.unused_data
-            return out
-
-        def parse_one(buf: bytes):
-            # one member = one record; the record parser's framing checks
-            # guarantee nothing else fits
-            if not buf.startswith(b"WARC/1.0\r\n"):
-                raise ValueError("gzip member does not start a WARC record")
-            i = 10
-            n = len(buf)
-            headers = {}
-            while True:
-                j = buf.find(b"\r\n", i)
-                if j < 0:
-                    raise ValueError("truncated WARC header block")
-                line = buf[i:j]
-                i = j + 2
-                if not line:
-                    break
-                k = line.find(b":")
-                if k <= 0:
-                    raise ValueError(f"malformed WARC header line {line!r}")
-                headers[line[:k].strip().lower()] = line[k + 1 :].strip()
-            if b"content-length" not in headers:
-                raise ValueError("WARC record missing Content-Length")
-            cl = int(headers[b"content-length"])
-            if i + cl > n:
-                raise ValueError("WARC block overruns member (bad Content-Length)")
-            block = buf[i : i + cl]
-            i += cl
-            if buf[i : i + 4] != b"\r\n\r\n" or i + 4 != n:
-                raise ValueError(
-                    "gzip member must hold exactly one CRLFCRLF-terminated record"
-                )
-            rec_type = headers.get(b"warc-type", b"").decode("ascii")
-            uri = headers.get(b"warc-target-uri")
-            if uri is not None:
-                try:
-                    uri = uri.decode("utf-8")
-                except UnicodeDecodeError:
-                    raise ValueError(
-                        f"gzip member record has non-UTF-8 "
-                        f"WARC-Target-URI {uri!r}"
-                    ) from None
-            status = None
-            payload = block
-            if rec_type == "response":
-                sep = block.find(b"\r\n\r\n")
-                if sep < 0:
-                    raise ValueError("HTTP response block has no header terminator")
-                head, payload = block[:sep], block[sep + 4 :]
-                sl = head.split(b"\r\n", 1)[0]
-                parts = sl.split(b" ")
-                if len(parts) < 2 or not parts[0].startswith(b"HTTP/"):
-                    raise ValueError(f"malformed HTTP status line {sl!r}")
-                status = int(parts[1])
-                for hline in head.split(b"\r\n")[1:]:
-                    hk = hline.find(b":")
-                    if hk > 0 and hline[:hk].strip().lower() == b"content-length":
-                        if int(hline[hk + 1 :].strip()) != len(payload):
-                            raise ValueError("HTTP Content-Length != body length")
-            rec = (
-                rec_type,
-                uri,
-                cl,
-                status,
-                len(payload),
-                _hashlib.md5(payload).hexdigest(),
-            )
-            return rec + (payload,) if with_payload else rec
-
-        cols = (
-            "rec_type",
-            "target_uri",
-            "content_length",
-            "http_status",
-            "payload_len",
-            "payload_md5",
-        ) + (("payload",) if with_payload else ())
-        for pdf in it:
-            out = {c: [] for c in cols}
-            for gz in pdf["__warc"]:
-                for member in members(bytes(gz)):
-                    for c, v in zip(cols, parse_one(member)):
-                        out[c].append(v)
-            frame = pd.DataFrame(out)
-            frame["http_status"] = frame["http_status"].astype("object")
-            yield frame
-
-    src = df.selectExpr(f"{content_col} as __warc")
+    one whole .warc.gz, split into gzip members and parsed by
+    ``parse_warc_gzip``."""
     schema = WARC_RECORD_PAYLOAD_SCHEMA if with_payload else WARC_RECORD_SCHEMA
-    return src.mapInPandas(_batches, schema=schema)
+    return _map_records(df, content_col, parse_warc_gzip, schema)
 
 
-# --- charset-aware page decode (round 12, judge r11 #2) --------------------
+# --- charset-aware page decode ----------------------------------------------
 # Real crawls are NOT ascii: pages declare their encoding in the HTTP
 # Content-Type header or a <meta charset=...> tag, lie about it often, and
 # the bytes may not decode under the declared charset at all. The decode
@@ -419,8 +254,6 @@ def sniff_charset(content_type: bytes | None, body: bytes):
     """(declared_charset, source) from the HTTP Content-Type header value,
     else a <meta ... charset=...> tag in the first META_SNIFF_BYTES of the
     body, else (None, 'default')."""
-    import re
-
     if content_type:
         m = re.search(rb"charset\s*=\s*['\"]?([A-Za-z0-9_\-]+)", content_type, re.I)
         if m:
@@ -449,73 +282,16 @@ def decode_page_bytes(declared: str | None, body: bytes):
 
 
 def parse_warc_decoded(buf: bytes) -> list[dict]:
-    """Reference charset-aware page extraction: WARC response records only,
-    each with its HTTP Content-Type captured, body decoded per
-    sniff_charset/decode_page_bytes. Framing checks identical to
-    parse_warc_bytes (Content-Length driven, loud refusals)."""
-    import re
-
+    """Charset-aware page extraction: WARC response records only, each
+    with its HTTP Content-Type captured, body decoded per
+    sniff_charset/decode_page_bytes."""
     out = []
-    i, n = 0, len(buf)
-    while i < n:
-        rec_off = i
-        if not buf.startswith(b"WARC/1.0\r\n", i):
-            raise ValueError(f"record at offset {i} missing WARC/1.0 version line")
-        i += 10
-        headers = {}
-        while True:
-            j = buf.find(_CRLF, i)
-            if j < 0:
-                raise ValueError("truncated WARC header block")
-            line = buf[i:j]
-            i = j + 2
-            if not line:
-                break
-            k = line.find(b":")
-            if k <= 0:
-                raise ValueError(f"malformed WARC header line {line!r}")
-            headers[line[:k].strip().lower()] = line[k + 1 :].strip()
-        if b"content-length" not in headers:
-            raise ValueError("WARC record missing Content-Length")
-        cl = int(headers[b"content-length"])
-        if i + cl > n:
-            raise ValueError("WARC block overruns file (bad Content-Length)")
-        block = buf[i : i + cl]
-        i += cl
-        if buf[i : i + 4] != b"\r\n\r\n":
-            raise ValueError("WARC record missing trailing CRLFCRLF")
-        i += 4
-        rec_type = headers.get(b"warc-type", b"").decode("ascii")
-        if rec_type != "response":
+    for rec_off, headers, block in _warc_records(buf):
+        if headers.get(b"warc-type", b"").decode("ascii") != "response":
             continue
-        uri = headers.get(b"warc-target-uri")
-        if uri is not None:
-            try:
-                uri = uri.decode("utf-8")
-            except UnicodeDecodeError:
-                raise ValueError(
-                    f"record at offset {rec_off} has non-UTF-8 "
-                    f"WARC-Target-URI {uri!r}"
-                ) from None
-        sep = block.find(b"\r\n\r\n")
-        if sep < 0:
-            raise ValueError("HTTP response block has no header terminator")
-        head, payload = block[:sep], block[sep + 4 :]
-        sl = head.split(_CRLF, 1)[0]
-        parts = sl.split(b" ")
-        if len(parts) < 2 or not parts[0].startswith(b"HTTP/"):
-            raise ValueError(f"malformed HTTP status line {sl!r}")
-        status = int(parts[1])
-        ctype = None
-        for hline in head.split(_CRLF)[1:]:
-            hk = hline.find(b":")
-            if hk > 0:
-                hname = hline[:hk].strip().lower()
-                if hname == b"content-length":
-                    if int(hline[hk + 1 :].strip()) != len(payload):
-                        raise ValueError("HTTP Content-Length != body length")
-                elif hname == b"content-type":
-                    ctype = hline[hk + 1 :].strip()
+        uri = _target_uri(headers, rec_off)
+        status, lines, payload = _split_http_response(block)
+        ctype = _checked_http_headers(lines, payload).get(b"content-type")
         declared, source = sniff_charset(ctype, payload)
         html, used, fallback = decode_page_bytes(declared, payload)
         out.append(
@@ -541,153 +317,14 @@ WARC_DECODED_SCHEMA = (
 
 
 def warc_decoded_pages(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Charset-aware crawl text front door: one row per WARC *response*
-    record with the HTTP body DECODED to text under the sniffed charset
-    (http header → meta prescan → utf-8 default; iso-8859-1 fallback,
-    flagged). Arrow-batched mapInPandas; the closure inlines the parser +
-    sniff + decode (stdlib only — repo kernel convention); pinned
-    behaviorally against parse_warc_decoded by tests/test_warc.py."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import re as _re
-
-        import pandas as pd
-
-        aliases = {
-            "utf-8": "utf-8",
-            "utf8": "utf-8",
-            "iso-8859-1": "iso-8859-1",
-            "iso8859-1": "iso-8859-1",
-            "latin-1": "iso-8859-1",
-            "latin1": "iso-8859-1",
-            "us-ascii": "ascii",
-            "ascii": "ascii",
-        }
-
-        def sniff(ctype, body):
-            if ctype:
-                m = _re.search(
-                    rb"charset\s*=\s*['\"]?([A-Za-z0-9_\-]+)", ctype, _re.I
-                )
-                if m:
-                    return m.group(1).decode("ascii").lower(), "http"
-            m = _re.search(
-                rb"<meta[^>]{0,200}?charset\s*=\s*['\"]?([A-Za-z0-9_\-]+)",
-                body[:1024],
-                _re.I,
-            )
-            if m:
-                return m.group(1).decode("ascii").lower(), "meta"
-            return None, "default"
-
-        def decode(declared, body):
-            codec = aliases.get(declared) if declared else "utf-8"
-            if codec is not None:
-                try:
-                    return body.decode(codec), codec, False
-                except UnicodeDecodeError:
-                    pass
-            return body.decode("iso-8859-1"), "iso-8859-1", True
-
-        def parse(buf):
-            recs = []
-            i, n = 0, len(buf)
-            while i < n:
-                rec_off = i
-                if not buf.startswith(b"WARC/1.0\r\n", i):
-                    raise ValueError(
-                        f"record at offset {i} missing WARC/1.0 version line"
-                    )
-                i += 10
-                headers = {}
-                while True:
-                    j = buf.find(b"\r\n", i)
-                    if j < 0:
-                        raise ValueError("truncated WARC header block")
-                    line = buf[i:j]
-                    i = j + 2
-                    if not line:
-                        break
-                    k = line.find(b":")
-                    if k <= 0:
-                        raise ValueError(f"malformed WARC header line {line!r}")
-                    headers[line[:k].strip().lower()] = line[k + 1 :].strip()
-                if b"content-length" not in headers:
-                    raise ValueError("WARC record missing Content-Length")
-                cl = int(headers[b"content-length"])
-                if i + cl > n:
-                    raise ValueError("WARC block overruns file (bad Content-Length)")
-                block = buf[i : i + cl]
-                i += cl
-                if buf[i : i + 4] != b"\r\n\r\n":
-                    raise ValueError("WARC record missing trailing CRLFCRLF")
-                i += 4
-                rec_type = headers.get(b"warc-type", b"").decode("ascii")
-                if rec_type != "response":
-                    continue
-                uri = headers.get(b"warc-target-uri")
-                if uri is not None:
-                    try:
-                        uri = uri.decode("utf-8")
-                    except UnicodeDecodeError:
-                        raise ValueError(
-                            f"record at offset {rec_off} has non-UTF-8 "
-                            f"WARC-Target-URI {uri!r}"
-                        ) from None
-                sep = block.find(b"\r\n\r\n")
-                if sep < 0:
-                    raise ValueError("HTTP response block has no header terminator")
-                head, payload = block[:sep], block[sep + 4 :]
-                sl = head.split(b"\r\n", 1)[0]
-                parts = sl.split(b" ")
-                if len(parts) < 2 or not parts[0].startswith(b"HTTP/"):
-                    raise ValueError(f"malformed HTTP status line {sl!r}")
-                status = int(parts[1])
-                ctype = None
-                for hline in head.split(b"\r\n")[1:]:
-                    hk = hline.find(b":")
-                    if hk > 0:
-                        hname = hline[:hk].strip().lower()
-                        if hname == b"content-length":
-                            if int(hline[hk + 1 :].strip()) != len(payload):
-                                raise ValueError(
-                                    "HTTP Content-Length != body length"
-                                )
-                        elif hname == b"content-type":
-                            ctype = hline[hk + 1 :].strip()
-                declared, source = sniff(ctype, payload)
-                html, used, fallback = decode(declared, payload)
-                recs.append(
-                    (uri, status, declared, source, used, fallback,
-                     len(payload), html)
-                )
-            return recs
-
-        cols = (
-            "target_uri",
-            "http_status",
-            "declared_charset",
-            "charset_source",
-            "used_charset",
-            "charset_fallback",
-            "payload_len",
-            "html",
-        )
-        for pdf in it:
-            out = {c: [] for c in cols}
-            for payload in pdf["__warc"]:
-                for rec in parse(bytes(payload)):
-                    for c, v in zip(cols, rec):
-                        out[c].append(v)
-            frame = pd.DataFrame(out)
-            frame["declared_charset"] = frame["declared_charset"].astype("object")
-            yield frame
-
-    src = df.selectExpr(f"{content_col} as __warc")
-    return src.mapInPandas(_batches, schema=WARC_DECODED_SCHEMA)
+    """Charset-aware crawl text front door (``parse_warc_decoded``): one
+    row per WARC *response* record with the HTTP body DECODED to text
+    under the sniffed charset (http header → meta prescan → utf-8
+    default; iso-8859-1 fallback, flagged)."""
+    return _map_records(df, content_col, parse_warc_decoded, WARC_DECODED_SCHEMA)
 
 
-# --- typed record breadth: request / metadata / revisit (round 12) ---------
+# --- typed record breadth: request / metadata / revisit ---------------------
 # A real crawl's WARC files interleave response records with the request
 # that produced them, crawler metadata, and — the crawl-time dedup signal —
 # `revisit` records: the crawler saw a URL whose payload digest matched an
@@ -706,67 +343,20 @@ WARC_TYPED_SCHEMA = (
 
 
 def parse_warc_typed(buf: bytes) -> list[dict]:
-    """Reference typed-record parser: every record type passes through
-    with per-type validation — response (HTTP split + status), revisit
+    """Typed-record parser: every record type passes through with
+    per-type validation — response (HTTP split + status), revisit
     (WARC-Profile REQUIRED, refers-to captured), request (HTTP request
-    line validated), anything else payload-as-is. Framing identical to
-    parse_warc_bytes."""
-    import hashlib as _hashlib
-
+    line validated), anything else payload-as-is."""
     out = []
-    i, n = 0, len(buf)
-    while i < n:
-        rec_off = i
-        if not buf.startswith(b"WARC/1.0\r\n", i):
-            raise ValueError(f"record at offset {i} missing WARC/1.0 version line")
-        i += 10
-        headers = {}
-        while True:
-            j = buf.find(_CRLF, i)
-            if j < 0:
-                raise ValueError("truncated WARC header block")
-            line = buf[i:j]
-            i = j + 2
-            if not line:
-                break
-            k = line.find(b":")
-            if k <= 0:
-                raise ValueError(f"malformed WARC header line {line!r}")
-            headers[line[:k].strip().lower()] = line[k + 1 :].strip()
-        if b"content-length" not in headers:
-            raise ValueError("WARC record missing Content-Length")
-        cl = int(headers[b"content-length"])
-        if i + cl > n:
-            raise ValueError("WARC block overruns file (bad Content-Length)")
-        block = buf[i : i + cl]
-        i += cl
-        if buf[i : i + 4] != b"\r\n\r\n":
-            raise ValueError("WARC record missing trailing CRLFCRLF")
-        i += 4
+    for rec_off, headers, block in _warc_records(buf):
         rec_type = headers.get(b"warc-type", b"").decode("ascii")
-        uri = headers.get(b"warc-target-uri")
-        if uri is not None:
-            try:
-                uri = uri.decode("utf-8")
-            except UnicodeDecodeError:
-                raise ValueError(
-                    f"record at offset {rec_off} has non-UTF-8 "
-                    f"WARC-Target-URI {uri!r}"
-                ) from None
+        uri = _target_uri(headers, rec_off)
         status = None
         profile = None
         refers_to = None
         payload = block
         if rec_type == "response":
-            sep = block.find(b"\r\n\r\n")
-            if sep < 0:
-                raise ValueError("HTTP response block has no header terminator")
-            head, payload = block[:sep], block[sep + 4 :]
-            sl = head.split(_CRLF, 1)[0]
-            parts = sl.split(b" ")
-            if len(parts) < 2 or not parts[0].startswith(b"HTTP/"):
-                raise ValueError(f"malformed HTTP status line {sl!r}")
-            status = int(parts[1])
+            status, _, payload = _split_http_response(block)
         elif rec_type == "revisit":
             if b"warc-profile" not in headers:
                 raise ValueError(
@@ -789,7 +379,7 @@ def parse_warc_typed(buf: bytes) -> list[dict]:
                 "target_uri": uri,
                 "http_status": status,
                 "payload_len": len(payload),
-                "payload_md5": _hashlib.md5(payload).hexdigest(),
+                "payload_md5": hashlib.md5(payload).hexdigest(),
                 "profile": profile,
                 "refers_to": refers_to,
             }
@@ -798,124 +388,6 @@ def parse_warc_typed(buf: bytes) -> list[dict]:
 
 
 def warc_typed_records(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Arrow-batched typed WARC record extraction (request / metadata /
-    revisit / response breadth): inlined kernel, stdlib only (repo kernel
-    convention), pinned behaviorally against parse_warc_typed by
-    tests/test_warc.py."""
-
-    def _batches(it: Iterator) -> Iterator:
-        import hashlib as _hashlib
-
-        import pandas as pd
-
-        def parse(buf: bytes):
-            recs = []
-            i, n = 0, len(buf)
-            while i < n:
-                rec_off = i
-                if not buf.startswith(b"WARC/1.0\r\n", i):
-                    raise ValueError(
-                        f"record at offset {i} missing WARC/1.0 version line"
-                    )
-                i += 10
-                headers = {}
-                while True:
-                    j = buf.find(b"\r\n", i)
-                    if j < 0:
-                        raise ValueError("truncated WARC header block")
-                    line = buf[i:j]
-                    i = j + 2
-                    if not line:
-                        break
-                    k = line.find(b":")
-                    if k <= 0:
-                        raise ValueError(f"malformed WARC header line {line!r}")
-                    headers[line[:k].strip().lower()] = line[k + 1 :].strip()
-                if b"content-length" not in headers:
-                    raise ValueError("WARC record missing Content-Length")
-                cl = int(headers[b"content-length"])
-                if i + cl > n:
-                    raise ValueError("WARC block overruns file (bad Content-Length)")
-                block = buf[i : i + cl]
-                i += cl
-                if buf[i : i + 4] != b"\r\n\r\n":
-                    raise ValueError("WARC record missing trailing CRLFCRLF")
-                i += 4
-                rec_type = headers.get(b"warc-type", b"").decode("ascii")
-                uri = headers.get(b"warc-target-uri")
-                if uri is not None:
-                    try:
-                        uri = uri.decode("utf-8")
-                    except UnicodeDecodeError:
-                        raise ValueError(
-                            f"record at offset {rec_off} has non-UTF-8 "
-                            f"WARC-Target-URI {uri!r}"
-                        ) from None
-                status = None
-                profile = None
-                refers_to = None
-                payload = block
-                if rec_type == "response":
-                    sep = block.find(b"\r\n\r\n")
-                    if sep < 0:
-                        raise ValueError(
-                            "HTTP response block has no header terminator"
-                        )
-                    head, payload = block[:sep], block[sep + 4 :]
-                    sl = head.split(b"\r\n", 1)[0]
-                    parts = sl.split(b" ")
-                    if len(parts) < 2 or not parts[0].startswith(b"HTTP/"):
-                        raise ValueError(f"malformed HTTP status line {sl!r}")
-                    status = int(parts[1])
-                elif rec_type == "revisit":
-                    if b"warc-profile" not in headers:
-                        raise ValueError(
-                            f"revisit record at offset {rec_off} missing "
-                            "WARC-Profile"
-                        )
-                    profile = headers[b"warc-profile"].decode("ascii")
-                    rt = headers.get(b"warc-refers-to-target-uri")
-                    refers_to = rt.decode("utf-8") if rt is not None else None
-                elif rec_type == "request":
-                    sl = block.split(b"\r\n", 1)[0]
-                    parts = sl.split(b" ")
-                    if len(parts) != 3 or not parts[2].startswith(b"HTTP/"):
-                        raise ValueError(
-                            f"record at offset {rec_off}: malformed HTTP "
-                            f"request line {sl!r}"
-                        )
-                recs.append(
-                    (
-                        rec_type,
-                        uri,
-                        status,
-                        len(payload),
-                        _hashlib.md5(payload).hexdigest(),
-                        profile,
-                        refers_to,
-                    )
-                )
-            return recs
-
-        cols = (
-            "rec_type",
-            "target_uri",
-            "http_status",
-            "payload_len",
-            "payload_md5",
-            "profile",
-            "refers_to",
-        )
-        for pdf in it:
-            out = {c: [] for c in cols}
-            for payload in pdf["__warc"]:
-                for rec in parse(bytes(payload)):
-                    for c, v in zip(cols, rec):
-                        out[c].append(v)
-            frame = pd.DataFrame(out)
-            for c in ("http_status", "profile", "refers_to"):
-                frame[c] = frame[c].astype("object")
-            yield frame
-
-    src = df.selectExpr(f"{content_col} as __warc")
-    return src.mapInPandas(_batches, schema=WARC_TYPED_SCHEMA)
+    """Arrow-batched typed WARC record extraction (``parse_warc_typed``):
+    request / metadata / revisit / response breadth."""
+    return _map_records(df, content_col, parse_warc_typed, WARC_TYPED_SCHEMA)

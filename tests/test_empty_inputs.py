@@ -172,6 +172,15 @@ def test_ppm_and_wav_kernels_empty_input(spark):
     assert wav_stats(empty).count() == 0
 
 
+def test_arrow_map_empty_batches(spark):
+    """A splitter that finds no records yields an EMPTY pandas batch from a
+    non-empty partition; the adapter's typed columns must still convert."""
+    from cassandra_data_migrator_spark.sources.warc import warc_records
+
+    files = spark.createDataFrame([(bytearray(),), (bytearray(),)], "content BINARY")
+    assert warc_records(files).collect() == []
+
+
 def test_incremental_dedup_empty_batch_and_empty_corpus(spark, sf_dir, empty_docs):
     d = load_table(spark, sf_dir, "documents").limit(20)
     assert dedup.incremental_jaccard_pairs(empty_docs, d, n=3, threshold=0.2).count() == 0

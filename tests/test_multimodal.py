@@ -116,7 +116,7 @@ def test_decode_ppm_rejects_malformed():
 
 
 def test_ppm_stats_kernel_matches_reference(spark):
-    """The inlined mapInPandas parser must agree byte-for-byte with
+    """The Arrow kernel must agree byte-for-byte with
     decode_ppm (the module-level reference) on every payload, including
     ones with comments and single-digit dims."""
     from cassandra_data_migrator_spark.operators.multimodal import (
@@ -613,7 +613,7 @@ def test_decode_image_dispatches_png_and_validates_jpeg():
 
 
 def test_png_kernels_match_reference(spark):
-    """The inlined mapInPandas closures must agree BYTE-identically with
+    """The Arrow kernels must agree BYTE-identically with
     encode_png / decode_png, the module-level references — one pin per
     kernel, same discipline as the PPM/WAV kernels."""
     import random
@@ -946,7 +946,7 @@ def test_jpeg_color_flat_roundtrip_exact():
 
 
 def test_jpeg_color_kernels_match_reference(spark):
-    """The inlined mapInPandas closures must agree BYTE-identically with
+    """The Arrow kernels must agree BYTE-identically with
     encode_jpeg_color / decode_jpeg (the PNG/JPEG kernel discipline)."""
     import math
     import random
@@ -1144,7 +1144,7 @@ def test_jpeg_422_decodes():
 
 
 def test_jpeg_420_kernels_match_reference(spark):
-    """The inlined 4:2:0 mapInPandas closures must agree BYTE-identically
+    """The 4:2:0 Arrow kernels must agree BYTE-identically
     with encode_jpeg_color_420 / decode_jpeg (the PNG/JPEG kernel
     discipline), and jpeg_color_stats must decode the subsampled payloads
     to the same channel stats as the module reference."""
@@ -1243,7 +1243,7 @@ def test_exif_refusals():
 
 
 def test_exif_kernels_match_reference(spark):
-    """The inlined Exif mapInPandas closures must agree with
+    """The Exif Arrow kernels must agree with
     build_exif_app1/parse_exif (the kernel discipline): the encode kernel's
     APP1 bytes equal the module builder's for the same derived fields, and
     the stats kernel returns the module parser's tuple."""

@@ -226,7 +226,7 @@ def test_jpeg_rst_roundtrip_and_refusals():
 
 
 def test_jpeg_rst_kernel_matches_module(spark):
-    """The inlined jpeg_encode_gray kernel with restart_interval set must
+    """The jpeg_encode_gray kernel with restart_interval set must
     be BYTE-identical to encode_jpeg_gray_rst, and jpeg_stats must decode
     it to the same stats as the plain-wire twin."""
     from cassandra_data_migrator_spark.operators.multimodal import (

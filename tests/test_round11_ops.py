@@ -271,7 +271,7 @@ def test_jpeg_progressive_scan_order_refusals():
 
 
 def test_jpeg_progressive_kernels_match_module(spark):
-    """The inlined progressive encoder kernel must be BYTE-identical to
+    """The progressive encoder kernel must be BYTE-identical to
     encode_jpeg_gray_progressive, and jpeg_stats must decode its output
     to the module decoder's exact pixel stats."""
     import random

@@ -38,3 +38,25 @@ def test_purge_is_idempotent_on_fresh_session(spark):
 
     q.purge_session_artifacts(spark)
     q.purge_session_artifacts(spark)  # no artifacts, no dir — must not raise
+
+
+def test_artifact_cleanup_hook_registered_once_per_session_dir(spark, monkeypatch):
+    """Five build→purge cycles register ONE atexit rmtree for the session
+    artifact dir, not a fresh hook after every purge."""
+    import atexit
+
+    from cassandra_data_migrator_spark.queries import _shared
+
+    session_dir = os.path.join(
+        tempfile.gettempdir(),
+        f"cdm_shared_{spark.sparkContext.applicationId}",
+    )
+    registered = []
+    monkeypatch.setattr(
+        atexit, "register", lambda fn, *args, **kw: registered.append(args)
+    )
+    monkeypatch.setattr(_shared, "_SCRATCH_REGISTERED", set())
+    for _ in range(5):
+        _shared._session_artifact(spark, "atexit_probe", lambda: spark.range(3))
+        _shared.purge_session_artifacts(spark)
+    assert registered.count((session_dir,)) == 1

@@ -1,7 +1,7 @@
-"""WARC parser + HTML extractor unit tests (round 11).
+"""WARC parser + HTML extractor unit tests.
 
 Pins: (a) parse_warc_bytes framing semantics incl. loud refusals, (b) the
-inlined mapInPandas kernel identical to the module-level reference, (c)
+Arrow kernel identical to the module-level reference, (c)
 the html_text strip ORDER (script before generic tag-strip; &amp; last).
 """
 
@@ -77,8 +77,8 @@ def test_parse_warc_http_content_length_mismatch_refuses():
 
 
 def test_warc_kernel_matches_reference(spark):
-    """The inlined mapInPandas parser must agree with parse_warc_bytes
-    field-for-field (repo kernel convention)."""
+    """The Arrow kernel must agree with parse_warc_bytes
+    field-for-field."""
     files = [
         _warcinfo() + _record("https://e/d/7", b"<p>x\r\n\r\ny</p>"),
         _record("https://e/d/8", b"z" * 333, status=301),
@@ -255,7 +255,7 @@ def test_charset_http_beats_meta_and_unknown_label_falls_back():
 
 
 def test_charset_kernel_matches_reference(spark):
-    """warc_decoded_pages (inlined kernel) == parse_warc_decoded on a file
+    """warc_decoded_pages (Arrow kernel) == parse_warc_decoded on a file
     mixing every class + a non-response record (skipped by both)."""
     from cassandra_data_migrator_spark.sources.warc import (
         parse_warc_decoded,
@@ -343,7 +343,7 @@ def test_typed_parser_breadth_and_kernel_agreement(spark):
     assert recs[2]["profile"].endswith("identical-payload-digest")
     assert recs[2]["refers_to"] == uri and recs[2]["payload_len"] == 0
     assert recs[3]["target_uri"] is None
-    # inlined kernel agrees field-for-field
+    # Arrow kernel agrees field-for-field
     df = spark.createDataFrame([(bytearray(buf),)], "content binary")
     got = [r.asDict() for r in warc_typed_records(df).collect()]
     assert got == recs
