@@ -119,8 +119,8 @@ _SCRATCH_REGISTERED: set = set()
 
 def _scratch_dir(spark, family: str, name: str) -> str:
     """Per-session scratch path ``tempdir/<family>/<name>_<appId>`` with a
-    self-owned atexit rmtree (advice r07: repeated bench/driver sessions
-    were accumulating one full table copy per application per sf under
+    self-owned atexit rmtree (repeated bench/driver sessions used to
+    accumulate one full table copy per application per sf under
     /tmp, unbounded). Cleanup is SELF-owned, not a purge of the family
     root: sibling dirs may belong to a concurrently-live session (bench +
     verify on one fixture) and the applicationId key already guarantees we
@@ -171,8 +171,8 @@ def _session_artifact(spark, tag: str, build):
             _SCRATCH_REGISTERED.add(session_dir)
             atexit.register(shutil.rmtree, session_dir, ignore_errors=True)
         path = os.path.join(session_dir, f"{tag.split('|')[0]}_{digest}")
-        # r13 note (§1.1): a REBALANCE hint before this write was tried
-        # (guide §6 file sizing) and measured NEUTRAL at fixture scale in
+        # A REBALANCE hint before this write was tried (for file sizing) and
+        # measured NEUTRAL at fixture scale in
         # an interleaved A/B (min 4.89 s vs 4.25 s plain for the ngram
         # family's build+consume chain — within the host's noise band);
         # small multi-file artifacts don't fan downstream scans anyway

@@ -1,6 +1,4 @@
 """General analytics keys: windows, sampling, packing, codecs, retrieval, SCD2.
-
-Split from queries.py (round 10); bodies unchanged.
 """
 
 from __future__ import annotations
@@ -211,9 +209,9 @@ def q_seq_align_diff(spark, sf_dir):
     alignment says how much each user's ordered history drifted after a
     CDC replay — edit_distance (exact integer Levenshtein) and jw_r
     (Jaro-Winkler, the similarity Spark has no builtin for) over the
-    per-user event-type character sequence. Plan shape (the r09 rework,
-    commit 2b9bb93): each side's per-user sequence is ASSEMBLED IN THE
-    JVM (sort_array + collect_list aggregate — map-side combinable),
+    per-user event-type character sequence. Plan shape: each side's
+    per-user sequence is ASSEMBLED IN THE JVM (sort_array + collect_list
+    aggregate — map-side combinable),
     the two one-row-per-user tables meet in one join, and Python sees
     only one Arrow-batched ``mapInPandas`` over the joined pairs for
     the Levenshtein/Jaro-Winkler kernels (see operators/align.py for
@@ -1160,7 +1158,7 @@ def q_unigram_logprob(spark, sf_dir):
 
     d = spread_by(_t(spark, sf_dir, "documents"), "doc_id")
     tok = d.select("doc_id", F.explode(tokens("text")).alias("word"))
-    # r12 optimization (guide §5): freq feeds the 1-row total AND the scoring
+    # freq feeds the 1-row total AND the scoring
     # join; persisting the vocab-bounded table keeps the tokenize+explode
     # backbone at two passes (freq, scored) instead of three.
     freq = tok.groupBy("word").agg(
@@ -1294,7 +1292,7 @@ def q_regional_revenue(spark, sf_dir):
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # r12: spread_by on lineitem was tried and REJECTED by measurement
+    # spread_by on lineitem was tried and REJECTED by measurement
     # (1.66 -> 1.86 s isolated): the all-broadcast probe side is cheap per
     # row (the decimal math fires only on the ASIA slice), so the extra
     # exchange outweighed the widened map side.
@@ -1328,7 +1326,7 @@ def q_corr_stats(spark, sf_dir):
     by construction (no streaming double accumulation), one partial-agg
     shuffle.
 
-    r12: the six decimal(38,8) partial sums (a BigDecimal allocation per
+    The six decimal(38,8) partial sums (a BigDecimal allocation per
     double→decimal cast) measured 2.56 of the key's 2.57 s isolated — all
     on the single scan core (every fixture parquet is ONE row group, so no
     split config can widen the scan; double sums of the same shape cost
@@ -1437,7 +1435,7 @@ def q_unpivot_metrics(spark, sf_dir):
     the reshape itself — each input row fans to 4 long rows in place), then
     one partial-agg shuffle on the 4-value metric key.
 
-    r12: spread_by widens the 1-task fixture scan (one parquet row group)
+    spread_by widens the 1-task fixture scan (one parquet row group)
     so the 4× Expand and its decimal partial sums run on every core; the
     id column is the natural near-unique hash key. Pass-through at
     production split counts."""
@@ -1477,7 +1475,7 @@ VOCAB_SIZE = 1000
 
 def q_vocab_topk(spark, sf_dir):
     """Vocabulary construction: top-1k tokens by frequency with contiguous
-    ids. Two-phase top-k (operators/rank.top_k_rows, round-5 verdict #1):
+    ids. Two-phase top-k (operators/rank.top_k_rows):
     each partition prunes to its local top-k, then ONE ordered pass over the
     ≤ k × numPartitions survivors assigns the exact global id — the only
     unpartitioned window reads a set bounded by construction, never the
@@ -1695,9 +1693,6 @@ def q_kmeans_clusters(spark, sf_dir):
     return cluster_profile(assign_clusters_arrow(emb, cents, "embedding"))
 
 
-# ---------------------------------------------------------------------------
-# round-3 additions
-
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TERMS = ("fast", "slow", "good", "bad", "big")
@@ -1802,7 +1797,7 @@ def q_bm25_topk(spark, sf_dir):
         )
     )
     per_doc = scored.groupBy("doc_id").agg(F.round(F.sum("term_score"), 4).alias("score"))
-    # two-phase top-k (round-5 verdict #1): a common-term query's candidate
+    # two-phase top-k: a common-term query's candidate
     # set is corpus-fraction-sized, so the final ordered pass may only read
     # the ≤ k × numPartitions per-partition survivors, never all candidates
     from cassandra_data_migrator_spark.operators.rank import top_k_rows
@@ -1987,8 +1982,8 @@ WTRT_SHIFT_US = 5_000_000  # the migrate's writetime incrementBy, in µs
 
 
 def q_migrate_writetime_roundtrip(spark, sf_dir):
-    """Per-row writetime/TTL SINK semantics end-to-end (round-4 verdict #5 —
-    the one §4.3.1 capability that was documented but never oracled):
+    """Per-row writetime/TTL SINK semantics end-to-end (the
+    §4.3.1 capability that was documented but never oracled):
     events with per-cell writetime/TTL proxies are written to a parquet
     target, then two delta batches merge through the last-write-wins sink
     (plans/upsert.py merge_upsert with writetime_col): a WINNING batch
@@ -2007,7 +2002,7 @@ def q_migrate_writetime_roundtrip(spark, sf_dir):
 
     from cassandra_data_migrator_spark.plans.upsert import upsert_parquet
 
-    # r12: spread_by on the events source was tried and REJECTED by
+    # spread_by on the events source was tried and REJECTED by
     # measurement (2.32 -> 2.92 s isolated): at this row count the extra
     # exchange and the multi-file staging layout cost more than the
     # parallelized attach/merge passes save. The key stays scan-shaped.
@@ -2155,13 +2150,13 @@ def q_bigram_pmi(spark, sf_dir):
 
 
 def q_validate_diff_skewed(spark, sf_dir):
-    """DiffData under a HOT partition key (judge r11 #7 — the standing
-    skewed-run bench tier): the composite PK's partition component is
+    """DiffData under a HOT partition key (the standing skewed-run bench
+    tier): the composite PK's partition component is
     remapped so ONE key holds ~10% of all rows (user_id % 10 == 0 → 0,
     the Cassandra wide-row hot-partition reality) while (pk_user,
     event_id) stays unique (event_id is globally unique). The diff join
     keys on the FULL composite PK, so hashpartitioning(pk_user, event_id)
-    stays uniform no matter how hot pk_user is — r11 measured this
+    stays uniform no matter how hot pk_user is — measured as
     skew-immunity on 2M rows (BASELINE.md); this key keeps it measured
     EVERY round: a plan change that re-keys the join on the partition
     component alone shows up as a sweep number, not a silent regression.

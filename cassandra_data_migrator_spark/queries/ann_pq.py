@@ -1,6 +1,4 @@
 """ANN quantization keys: PQ/SQ8/IVFADC/JL, KN holdout, curation pipeline.
-
-Split from queries.py (round 10); bodies unchanged.
 """
 
 from __future__ import annotations
@@ -67,7 +65,7 @@ def _pq_codebooks(spark, base, cache_key):
     precedent): lloyd_kmeans is deterministic (pinned init + DECIMAL mean
     sums), so memoization changes cost, never results — bench's 3 runs and
     the plan tests stop retraining 8 codebooks per call. ``base`` is a
-    ZERO-ARG CALLABLE returning the training table (r13): it is only
+    ZERO-ARG CALLABLE returning the training table: it is only
     invoked on a memo miss, so callers don't build the table per call."""
     from cassandra_data_migrator_spark.operators import cluster as cl
 
@@ -95,7 +93,7 @@ def _pq_audit(spark, emb, brute, floor, cache_key, cents, nprobe=None,
     codebooks, encode (+ coarse IVF cell) into ONE standing index, ADC
     shortlist, exact re-rank of the shortlist, hit-join vs brute force.
 
-    ADC is DATA, not code (round-8 verdict #1): the query-side table
+    ADC is DATA, not code: the query-side table
     carries a ``__luts`` column — PQ_BLOCKS arrays of PQ_CODES per-block
     squared distances, computed IN-PLAN from the (unit) query vector
     against the codebook literals — and the scoring expression is a fixed
@@ -131,7 +129,7 @@ def _pq_audit(spark, emb, brute, floor, cache_key, cents, nprobe=None,
     unit = F.transform(v, lambda x: x / norm(v))
     dim = 64
     bs = dim // PQ_BLOCKS
-    # r12 optimization (guide §4.1 + §5): the codebook trainer's input was
+    # The codebook trainer's input was
     # `emb.select(unit)` — an O(dim²)-interpreted-steps-per-row lineage that
     # lloyd_kmeans re-evaluates on EVERY iteration of EVERY block (8 blocks
     # × (init + iters + final) ≈ 40 corpus passes; measured as the bulk of
@@ -139,10 +137,10 @@ def _pq_audit(spark, emb, brute, floor, cache_key, cents, nprobe=None,
     # corpus ONCE through the bit-identical Arrow kernel (the sq8 keys'
     # unit_udf_factory) turns each training pass into a parquet read — the
     # normalized copy is exactly what a real index build persists first.
-    # r13: ubase is consumed ONLY by codebook training, which is memoized
+    # ubase is consumed ONLY by codebook training, which is memoized
     # per session — building (and parquet-writing) it unconditionally made
     # every PQ-family run pay a dead corpus pass once the bench started
-    # purging artifacts per run (r12 verdict #1). Build it lazily inside
+    # purging artifacts per run. Build it lazily inside
     # the training-miss path instead.
     codebooks = _pq_codebooks(
         spark,
@@ -159,7 +157,7 @@ def _pq_audit(spark, emb, brute, floor, cache_key, cents, nprobe=None,
     # real IVFADC index persists. Built once per session as a parquet
     # artifact (the _brute_topk precedent; without it every consumer re-ran
     # the 128-fold decimal argmin over the corpus — measured 13 s → ~2 s).
-    # r12: the per-block code assignment goes through the Arrow exact-
+    # The per-block code assignment goes through the Arrow exact-
     # decimal argmin kernel (cluster._assign_exact_arrow_udf — bit-identical
     # to the `array_min(struct(_sq_dist_exact, i))` expression, pinned by
     # tests/test_cluster.py::test_assign_exact_arrow_identity) instead of
@@ -195,7 +193,7 @@ def _pq_audit(spark, emb, brute, floor, cache_key, cents, nprobe=None,
     # computed the 8x16 distance table as 128 aggregate expressions on the
     # query column, which was correct and query-count-invariant but cost
     # ~5.5 s of DRIVER-side py4j Column construction on EVERY call
-    # (measured; execution itself was 0.2 s). r13: built directly from the
+    # (measured; execution itself was 0.2 s). Built directly from the
     # memoized codebook lists — the former _session_artifact parquet
     # round-trip (a write job + read per run under the honest bench) was
     # pure overhead for a 128-row driver-side table.
@@ -315,7 +313,7 @@ def q_pq_recall_audit(spark, sf_dir):
     ADC is a broadcast-LUT join — the query table carries its 8x16
     distance tables as an ARRAY COLUMN computed in-plan, and the scoring
     expression is 8 F.get lookups, so the plan has ONE branch at any
-    query count (r08 verdict #1; see _pq_audit); every corpus row pays
+    query count (see _pq_audit); every corpus row pays
     PQ_BLOCKS array lookups + adds; the exact refine touches only the
     shortlist. Cosine ground truth via L2-normalized vectors (cosine
     ranking == L2 ranking on the unit sphere).
@@ -348,7 +346,7 @@ def q_pq_recall_clustered(spark, sf_dir):
 
 PQ_IVF_NPROBE = 2  # coarse cells probed per query (matches topk_similarity_ivf)
 # IVFADC floors: composition recall <= min(IVF-alone, PQ-alone) in theory;
-# measured across sf0.001/0.01/0.1 (see BASELINE.md r09): uniform
+# measured across sf0.001/0.01/0.1 (see BASELINE.md): uniform
 # 0.88/0.90/0.88 (the cell prune REMOVES distractors that crowd true
 # neighbors off the ADC shortlist, so it beats plain PQ's 0.76 at sf0.1),
 # clustered 0.96/1.00/1.00 — floors bracket both regimes with the same
@@ -358,8 +356,8 @@ PQ_IVF_RECALL_CLUSTERED_MIN = 0.85
 
 
 def q_pq_ivf_recall_audit(spark, sf_dir):
-    """IVFADC recall contract — the faiss production composition (r08
-    verdict #1): the trained IVF coarse quantizer prunes WHICH index rows
+    """IVFADC recall contract — the faiss production composition: the
+    trained IVF coarse quantizer prunes WHICH index rows
     are scored (queries probe their PQ_IVF_NPROBE nearest of the
     KMEANS_K lloyd cells; the index stores each row's cell), and PQ's ADC
     compresses HOW each survivor is scored (8 LUT lookups), followed by
@@ -405,8 +403,8 @@ SQ_RECALL_CLUSTERED_MIN = 0.9
 
 def _sq8_recon_udf_factory():
     """Arrow kernel computing EXACTLY the SQ8 encode→dequantize chain the
-    audit's expression path runs per element (optimization r12, guide §4.2
-    — the _jl_project_udf_factory treatment):
+    audit's expression path runs per element (the _jl_project_udf_factory
+    treatment):
 
       code_i = WHEN mx_i > mn_i
                THEN CAST(ROUND((x_i − mn_i) / (mx_i − mn_i) · 255) AS INT)
@@ -493,7 +491,7 @@ def _sq8_audit(spark, emb, brute, floor, query_pred=TOPK_QUERY_PRED,
 
     v = as_double_array("embedding")
     unit = F.transform(v, lambda x: x / norm(v))
-    # r12 optimization (guide §4.1): the expression `unit` re-evaluates the
+    # The expression `unit` re-evaluates the
     # norm fold per element (O(dim²) interpreted steps/row); the corpus-side
     # passes (bounds agg + encode) now normalize through the bit-identical
     # sequential-fold Arrow kernel. The 5-row probe side keeps the
@@ -536,7 +534,7 @@ def _sq8_audit(spark, emb, brute, floor, query_pred=TOPK_QUERY_PRED,
         mn, mx = F.get(F.col("__mins"), i), F.get(F.col("__maxs"), i)
         return mn + c.cast("double") / F.lit(float(SQ_LEVELS)) * (mx - mn)
 
-    # r12: the two transforms above are kept as the documented reference
+    # The two transforms above are kept as the documented reference
     # semantics (and the test's expression path); the hot path runs the
     # bit-identical Arrow kernel (_sq8_recon_udf_factory) — the per-element
     # interpreted HOF chain measured ~1.3 s of the key on 2 000 rows.
@@ -609,7 +607,7 @@ def q_sq8_recall_clustered(spark, sf_dir):
 
 
 # Residual-encoding IVFADC floors (measured across sf0.001/0.01/0.1, see
-# BASELINE.md r09): training the PQ codebooks on WITHIN-CELL residuals is
+# BASELINE.md): training the PQ codebooks on WITHIN-CELL residuals is
 # the actual faiss IVFADC recipe — the codebooks model a tighter
 # distribution than the global vectors, so the ADC shortlist is cleaner.
 IVFADC_RES_RECALL_MIN = 0.6
@@ -645,9 +643,9 @@ def _ivfadc_residual_audit(spark, emb, brute, floor, cache_key, cents,
     bs = dim // PQ_BLOCKS
 
     def _cents_build():
-        # r13: built directly (8 rows from the memoized centroid list) —
-        # the former _session_artifact parquet round-trip per run was pure
-        # overhead under the honest bench (r12 verdict #1).
+        # Built directly (8 rows from the memoized centroid list): the
+        # former _session_artifact parquet round-trip per run was pure
+        # overhead once the bench purges artifacts per run.
         import math
 
         rows = []
@@ -661,16 +659,16 @@ def _ivfadc_residual_audit(spark, emb, brute, floor, cache_key, cents,
 
     cents_df = _cents_build()
 
-    # r12 optimization (guide §4.1 + §5, same fix as _pq_audit): the
+    # Same fix as _pq_audit: the
     # residual base (unit vector + per-cell residual) used to be rebuilt
     # from the interpreted unit-HOF lineage on EVERY lloyd iteration of
     # EVERY block codebook (~40 corpus passes; the bulk of the one-time
     # 59 s index build this key showed in run-level profiling).
-    # r13: the parquet materialization now happens ONLY on the training
+    # The parquet materialization happens ONLY on the training
     # path (memoized once per session, where lloyd's ~40 passes need it);
     # the per-run index build consumes the residual lineage INLINE — it
     # reads the base exactly once, so under the honest bench (per-run
-    # artifact purge, r12 verdict #1) materializing it was one dead
+    # artifact purge) materializing it was one dead
     # parquet write+read per run (measured 1.6 s of the key's 5.7 s).
     def _residual_base_build():
         a = similarity.assign_ivf_cells(emb, cents, "embedding", nprobe=1)
@@ -707,7 +705,7 @@ def _ivfadc_residual_audit(spark, emb, brute, floor, cache_key, cents,
     def _build_index():
         # per-block residual codes through the Arrow exact-decimal argmin
         # kernel — bit-identical to the array_min(struct(_sq_dist_exact, i))
-        # expression it replaces (guide §4.2; see _pq_audit). r13: consumes
+        # expression it replaces (see _pq_audit). It consumes
         # the residual lineage inline (single read — see note above).
         rb = _residual_base_build()
         code_ks = [
@@ -728,7 +726,7 @@ def _ivfadc_residual_audit(spark, emb, brute, floor, cache_key, cents,
 
     enc = _session_artifact(spark, f"ivfadc_res_index|{cache_key}", _build_index)
 
-    # r13: 128-row driver-list table built directly (see _pq_audit's books)
+    # 128-row driver-list table built directly (see _pq_audit's books)
     books_df = spark.createDataFrame(
         spark.sparkContext.parallelize(
             [
@@ -864,7 +862,7 @@ def _jl_entries() -> list[list[float]]:
     integer hash arithmetic (((j·10007 + i·101)·KNUTH mod P) / P − 0.5,
     uniform in [−0.5, 0.5)), NOT sin(): libm sin() is not bit-identical
     across engines, integer modular arithmetic plus one double division
-    is. Shared by the data-table form (the oracle's side) and the r12
+    is. Shared by the data-table form (the oracle's side) and the
     projection kernel, so both see the identical doubles."""
     return [
         [
@@ -880,7 +878,7 @@ def _jl_entries() -> list[list[float]]:
 def _jl_matrix(spark):
     """The JL projection matrix as a 16-row DATA table (j, pvec[64]) —
     session artifact; the matrix is what a real pipeline ships with its
-    index. Since r12 the declared key projects through the bit-identical
+    index. The declared key projects through the bit-identical
     Arrow kernel (_jl_project_udf_factory); this table remains the
     expression path's input for the pinned identity contract."""
 
@@ -901,7 +899,7 @@ def _jl_project_expr(base, mat):
     folded through an Add typed DECIMAL(38,11), i.e. every partial sum
     rounds HALF_UP at 1e-11), yj cast to double, groupBy(vec_id)
     re-assembly in j order. This is the form the DuckDB oracle mirrors
-    term for term; since r12 it is the pinned identity-contract REFERENCE
+    term for term; it is the pinned identity-contract REFERENCE
     for the Arrow kernel the declared key runs
     (tests/test_round12_opt.py::test_jl_kernel_bit_identity)."""
     yj = base.join(F.broadcast(mat), F.lit(True)).select(
@@ -924,8 +922,8 @@ def _jl_project_expr(base, mat):
 
 def _jl_project_udf_factory():
     """Arrow kernel computing EXACTLY _jl_project_expr's per-dim decimal
-    fold (optimization r12, guide §4.2 — the cluster._assign_exact_arrow
-    _udf treatment applied to the JL projection):
+    fold (the cluster._assign_exact_arrow_udf treatment applied to the JL
+    projection):
 
       t_i  = CAST(x_i · p_ji AS DECIMAL(28,12))   -- HALF_UP of the double
                                                    -- product's shortest repr
@@ -997,7 +995,7 @@ def q_jl_projection_audit(spark, sf_dir):
 
     Spark-first AND oracle-exact end-to-end: the projection is a
     DECIMAL-exact fold per output dim — order-free, so DuckDB's unordered
-    SUM reproduces it bit-for-bit; since r12 the declared key computes it
+    SUM reproduces it bit-for-bit; the declared key computes it
     through the bit-identical Arrow kernel (_jl_project_udf_factory, the
     expression form pinned as its identity contract); distances fold the
     same way in expressions; the final ratio is one double expression
@@ -1008,12 +1006,11 @@ def q_jl_projection_audit(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", as_double_array("embedding").alias("__x"))
-    # r12 (guide §4.1/§4.2): the broadcast-crossjoin + per-dim interpreted
+    # The broadcast-crossjoin + per-dim interpreted
     # decimal fold + groupBy re-assembly (2 000 rows × 16 dims × 64
     # CodegenFallback HOF steps, two exchanges) collapses to ONE Arrow
     # kernel evaluated in the scan stage — zero added exchanges.
-    # r13 (r12 verdict #2 — this key regressed 0.40→0.86 s in every r12
-    # measurement): the kernel used to run BELOW the two side filters, so
+    # The kernel used to run BELOW the two side filters, so
     # each branch projected the WHOLE corpus (2 × 2 000 rows through the
     # Decimal quantization) to keep ~45. The kernel is a per-row pure
     # function, so it commutes with the filters: project AFTER them — only
@@ -1106,7 +1103,7 @@ def q_kn_holdout_perplexity(spark, sf_dir):
     construction), which deterministically exercises BOTH backoff
     branches — (last_word, zqa) has a seen w1 with a novel continuation,
     (zqa, zqb) has an unseen w1 entirely."""
-    # r12: the kn_perplexity spread_by treatment was tried here and
+    # The kn_perplexity spread_by treatment was tried here and
     # REJECTED by measurement (1.88 -> 2.33 s isolated): this key's many
     # persisted model tables and left joins dominate, and the extra
     # exchange on the backbone only added latency.
@@ -1141,7 +1138,7 @@ def q_kn_holdout_perplexity(spark, sf_dir):
         F.substring_index(F.col("p"), "\x00", 1).alias("w1"),
         F.substring_index(F.col("p"), "\x00", -1).alias("w2"),
     )
-    # r12 optimization (guide §2.4 / §5): c12 feeds c1, bwd, totals AND the
+    # c12 feeds c1, bwd, totals AND the
     # eval left-join — four branches, and Catalyst does no cross-branch
     # subtree dedup, so each one re-ran the tokenize+explode+shuffle train
     # pass. Persisting the vocab-bounded count table bounds it to one pass.
@@ -1296,7 +1293,7 @@ def _curation_survivors(spark, sf_dir):
 
 
 def q_curation_pipeline(spark, sf_dir):
-    """END-TO-END nightly curation composition (r08 verdict #5) — the job
+    """END-TO-END nightly curation composition — the job
     a real 100 TB crawl pipeline runs per ingest batch, chained as ONE
     declared surface key so cross-operator fusion/alias bugs that no
     single-operator key can catch turn a driver row red:
@@ -1319,7 +1316,7 @@ def q_curation_pipeline(spark, sf_dir):
     running-sum budget, ROW_NUMBER shard assignment)."""
     from cassandra_data_migrator_spark.operators import rank as rank_ops
 
-    # r12: spread_by on the survivors artifact was tried and REJECTED by
+    # spread_by on the survivors artifact was tried and REJECTED by
     # measurement (2.42 -> 2.68 s isolated): the chain's cost is its many
     # small stages, not the tokenize map side, and the extra exchange only
     # added latency.
@@ -1346,7 +1343,7 @@ def q_curation_pipeline(spark, sf_dir):
         .cast("decimal(18,4)")
         .alias("s3"),
     ).filter(F.col("s2").isNotNull())
-    # r13 (r12 verdict #5, guide §2.4/§5): the chain below reads sig twice
+    # The chain below reads sig twice
     # (moments + scored) and scored four more times (hist, selected join,
     # rank, totals) — Catalyst does no cross-branch dedup, so every branch
     # re-ran the survivor tokenize from the artifact scan (32 survivor
@@ -1385,7 +1382,7 @@ def q_curation_pipeline(spark, sf_dir):
         )
         .cast("decimal(18,4)")
         .alias("ens4"),
-    ).persist()  # read by hist, the selection join, ranking, totals (r13)
+    ).persist()  # read by hist, the selection join, ranking, totals
     # 5) token-budget greedy prefix by (ens4 desc, doc_id) — the
     #    histogram-bounded cumsum (token_budget_select's shape keyed on
     #    the 4dp-bounded ensemble score)

@@ -1,6 +1,4 @@
 """CDM reference-surface keys (SURVEY.md §2a): scan/codec/filter/validate/migrate.
-
-Split from queries.py (round 10); bodies unchanged.
 """
 
 from __future__ import annotations
@@ -83,8 +81,8 @@ def q_codec_timestamp(spark, sf_dir):
 
 
 def q_codec_duration(spark, sf_dir):
-    """CQL duration codec round-trip (SURVEY §1.2's one unoracled codec,
-    r2 verdict Next-round #6): build a CQL duration STRING deterministically
+    """CQL duration codec round-trip (SURVEY §1.2's one unoracled codec):
+    build a CQL duration STRING deterministically
     from event columns, parse it with the regexp codec
     (functions/codecs.py cql_duration_parse), and emit the wire triple plus
     the canonical re-formatted text. The oracle computes the expected triple
@@ -92,7 +90,7 @@ def q_codec_duration(spark, sf_dir):
     the m/mo/ms ambiguity or unit scaling, the hashes diverge. Pure codegen
     expressions; embarrassingly parallel at any scale.
 
-    r12: spread_by widens the 1-task fixture scan (one parquet row group)
+    spread_by widens the 1-task fixture scan (one parquet row group)
     so the regex tokenize + str_to_map chain runs on every core instead of
     one; only (event_id, user_id) cross the exchange after pruning.
     Pass-through at production split counts."""
@@ -282,8 +280,8 @@ TRACK_PENDING = [7]
 
 
 def q_run_tracking_resume(spark, sf_dir):
-    """Run-tracking resume under the DRIVER check (§2a #6 was pytest-only —
-    round-6 verdict #6): a REAL RunTracker run (plans/tracking.py — manifest
+    """Run-tracking resume under the DRIVER check (§2a #6 was pytest-only):
+    a REAL RunTracker run (plans/tracking.py — manifest
     parquet written, per-slice statuses recorded through record_slices, the
     resume anti-join evaluated by resume_scope) with planted outcomes, then
     one row per slice: its recorded status + how many origin rows the resume

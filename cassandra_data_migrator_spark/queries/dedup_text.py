@@ -1,6 +1,4 @@
 """Dedup, similarity, and text-analysis keys (SURVEY.md §2b E1-E5, E19).
-
-Split from queries.py (round 10); bodies unchanged.
 """
 
 from __future__ import annotations
@@ -88,7 +86,7 @@ def q_dedup_exact(spark, sf_dir):
 
 
 def q_dedup_ngram(spark, sf_dir):
-    # r12: the scored session artifact (the q_topk_similarity/_brute_topk
+    # The scored session artifact (the q_topk_similarity/_brute_topk
     # convention — the primary key returns the standing table its family
     # shares), filtered at the key's declared threshold
     return _ngram_scored_pairs(spark, sf_dir).filter(
@@ -189,7 +187,7 @@ def _simhash_sigs(spark, sf_dir):
     aggregation is deterministic, so both consumers (simhash_near_dup,
     simhash_recall_audit) read the identical standing table.
 
-    r13 (§2.5): the build input rides spread_by(doc_id) — the per-token
+    The build input rides spread_by(doc_id) — the per-token
     xxhash + 22 SWAR partial sums are expression-heavy map work off the
     1-split fixture scan, and hash partitioning keeps each doc's tokens
     together so the per-doc partial agg still combines map-side (isolated
@@ -206,7 +204,7 @@ def _simhash_sigs(spark, sf_dir):
 def _minhash_sigs(spark, sf_dir):
     """Session-shared 32-hash MinHash signature table — one shingle+hash
     pass feeding dedup_fuzzy AND minhash_recall_audit (both band at
-    num_bands=8 over the same 32 hashes). r13 (§2.5): spread_by(doc_id) on
+    num_bands=8 over the same 32 hashes). spread_by(doc_id) on
     the build input — 32 xxhash64 per shingle is the heavy map side; the
     per-doc min-agg combines map-side either way (isolated build:
     1.44 → 0.71 s)."""
@@ -222,7 +220,7 @@ def _minhash_sigs(spark, sf_dir):
 def _simhash_pairs(spark, sf_dir):
     """Session-shared SimHash pair list at hamming<=8 (the _ngram_pairs
     precedent): the cascade pipeline (level-0 banding + per-parent rotated
-    re-banding + hamming refine, r11) is deterministic, and BOTH consumers
+    re-banding + hamming refine) is deterministic, and BOTH consumers
     (simhash_near_dup, simhash_recall_audit) need the identical set — one
     derivation per session instead of two."""
     return _session_artifact(
@@ -268,10 +266,10 @@ _IVF_CENTROIDS_CACHE: dict = {}
 
 
 def _ivf_centroids(spark, sf_dir, variant="uniform", emb_df=None):
-    """Train the IVF coarse quantizer end-to-end (round-5 verdict #4): 8
+    """Train the IVF coarse quantizer end-to-end: 8
     Lloyd cells over the embedding corpus instead of the old `vec_id % 97`
     sample. Returns [(cell_id, centroid_vector)] for similarity.ivf_topk.
-    ``variant``/``emb_df`` select an alternate training table (the r07
+    ``variant``/``emb_df`` select an alternate training table (the
     clustered fixture) under its own memo slot — one memoization, every
     quantizer."""
     from cassandra_data_migrator_spark.operators.cluster import lloyd_kmeans
@@ -320,7 +318,7 @@ def q_dedup_embedding_lsh(spark, sf_dir):
 # list (dedup_clusters, graph_triangles, edit_distance_pairs, graph_degree,
 # pagerank_dup_graph) and the two recall audits share the exact pair set at
 # the audit threshold — in a real pipeline the edge list is derived once
-# and shared (round-5 verdict #6). Materialized as a session-scoped PARQUET
+# and shared. Materialized as a session-scoped PARQUET
 # table, NOT a localCheckpoint: cached blocks can be unpersisted by a
 # host's between-key cleanup (bench.py's _drop_cached_blocks did exactly
 # that, yielding CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the next consumer),
@@ -339,16 +337,15 @@ NGRAM_BASE_THRESHOLD = 0.1  # == min(multimodal_keys.SWEEP_THRESHOLDS); the
 def _ngram_scored_pairs(spark, sf_dir):
     """Session-shared SCORED near-dup pair list at the base threshold —
     ONE shingle-index pass per session feeding every exact-Jaccard
-    consumer (r12, guide §2.4: dedup_ngram, dedup_threshold_sweep and the
-    two _ngram_pairs thresholds each re-derived the identical self-join;
-    now each is a filter over this standing artifact, the round-5
-    verdict #6 treatment finally applied to the whole family)."""
-    # r13 note (§1.1 discipline): spread_by(doc_id) on the build input was
+    consumer (dedup_ngram, dedup_threshold_sweep and the two _ngram_pairs
+    thresholds each used to re-derive the identical self-join; now each is
+    a filter over this standing artifact)."""
+    # spread_by(doc_id) on the build input was
     # measured bare (2.91 → 2.23 s noop win) and then through the full
     # build+label-loop+consumer chain in an INTERLEAVED A/B (4 rounds,
     # min-of-4: spread 4.14 s vs no-spread 4.25 s — a ~3% delta inside a
     # host noise band where single runs swung 4.1–6.5 s on identical
-    # code). No reliable end-to-end win — left unspread, matching the r12
+    # code). No reliable end-to-end win — left unspread, matching the earlier
     # spread() rejection for this family (the 1-split build lets the first
     # partial agg dedup repeated shingles map-side).
     return _session_artifact(
@@ -375,7 +372,7 @@ def _ngram_pairs(spark, sf_dir, threshold=NGRAM_THRESHOLD):
 
 def _cluster_label_artifact(spark, sf_dir):
     """Session-shared resolved component labels over the ngram pair graph
-    (r12 — the scored-pair-artifact treatment one step downstream): the
+    (the scored-pair-artifact treatment one step downstream): the
     label-propagation loop ran identically inside dedup_clusters,
     dedup_cluster_sizes and dedup_canonical; a real pipeline checkpoints
     the components table once. Same loop, same labels — consumers differ
@@ -829,7 +826,7 @@ def q_asof_join(spark, sf_dir):
 
 
 def q_group_agg(spark, sf_dir):
-    # r12: spread_by parallelizes the decimal partial sums off the 1-task
+    # spread_by parallelizes the decimal partial sums off the 1-task
     # fixture scan (one parquet row group — see operators/partition.spread_by
     # and the corr_stats note); l_partkey is near-unique and already shipped
     # for the count_distinct. Pass-through at production split counts.

@@ -1,7 +1,4 @@
-"""Round-8/9 keys: churn, ksample, dhash, z-order, substring dedup.
-
-Split from queries.py (round 10); bodies unchanged.
-"""
+"""Churn, ksample, dhash, z-order and substring-dedup keys."""
 
 from __future__ import annotations
 
@@ -105,7 +102,7 @@ DHASH_TWIN_MOD = 5  # mod-5 docs re-arrive brightness-shifted (+1 per channel)
 def _shift_printable_up1(c):
     """`+1 per channel byte` over a printable-ASCII payload string.
 
-    r12 optimization (guide §4.1 'prefer built-ins'): the original form
+    Prefer built-ins: the original form
     `array_join(transform(split(s, ''), c -> char(ascii(c)+1)), '')` boxes
     every CHARACTER of every payload into a 1-char string and walks it with
     an interpreted (CodegenFallback) lambda — millions of boxed evals per
@@ -235,7 +232,7 @@ def q_dhash_banded_near_dup(spark, sf_dir):
         F.col("__s").substr(F.lit(1), F.col("__h") * F.lit(row_bytes)),
     ).cast("binary")
     # one-file fixture scan -> one task; fan the payload rows so the decode
-    # kernel uses every core. r13 (r12 verdict #2): hash-partition on
+    # kernel uses every core. Hash-partition on
     # media_id instead of round-robin — keyless repartition pays a local
     # sort of the full payload rows (SPARK-23207), pure waste here.
     from cassandra_data_migrator_spark.operators.partition import spread_by
@@ -248,9 +245,9 @@ def q_dhash_banded_near_dup(spark, sf_dir):
     # Short hashes (h=1 -> 3 bits) are meaningless for near-dup AND make
     # the candidate join quadratic in the short-image population — a real
     # 100x hazard, so they are excluded by CONTRACT, not by luck.
-    # r13 (§2.4/§5, the r12-verdict dhash regression): BOTH sides of the
+    # BOTH sides of the
     # band self-join below re-evaluated the whole construct→decode subtree
-    # (4 MapInPandas in the r12 plan — the decode ran twice per run, plus
+    # (4 MapInPandas in the earlier plan — the decode ran twice per run, plus
     # the payload exchange twice). The hash table is 4 small columns per
     # image; persist it so the decode runs ONCE and the join reads cache.
     hashed = hashed.filter(F.col("height") == PPM_MAX_H).persist()
@@ -338,7 +335,7 @@ def q_substring_dedup_spans(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").filter(
         F.length("text") >= SUBSTR_DEDUP_LEN
     )
-    # r12 (guide §2.5): the gram explode fans 10k docs into 1.3M rows; on
+    # The gram explode fans 10k docs into 1.3M rows; on
     # the 1-split fixture scan it ran serial (measured 1.67 s explode-only,
     # 2.71 s with the window vs 0.43 / 1.23 s spread; spread() is a no-op
     # once the scan itself is parallel)
@@ -354,7 +351,7 @@ def q_substring_dedup_spans(spark, sf_dir):
     )
     w = Window.partitionBy("gram")
     tagged = pos.withColumn("cnt", F.count(F.lit(1)).over(w))
-    # r12 optimization (guide §2.3 "shuffle fewer bytes"): only DUP positions
+    # Shuffle fewer bytes: only DUP positions
     # (cnt > 1) enter the per-doc re-aggregation — the old form shipped every
     # position row through the second exchange to count rows whose total is
     # already known arithmetically: n_grams(doc) == len(text) − L + 1 is
@@ -410,7 +407,7 @@ def zorder_prune_stats(e):
     drive it on the clone-union stress input."""
     z = _layout_zorder_binned(e, "user_id", "ts_us")
     y_lo, y_hi = ZORDER_BOX_Y
-    # r12 optimization (guide §2.3 "aggregate before you shuffle" / §2.4):
+    # Aggregate before the shuffle:
     # the three consumers (z buckets, linear buckets, n_rows) each re-ran
     # the full bin+Morton corpus pass (plan: 8 exchanges, 3 scans + 3 rng
     # aggs). min/max/count compose, so ONE pass aggregates the ≤ 16×16

@@ -1,6 +1,4 @@
 """LM/quality keys: perplexity, BPE, sketches, tokenizer, NB, ensemble.
-
-Split from queries.py (round 10); bodies unchanged.
 """
 
 from __future__ import annotations
@@ -94,7 +92,7 @@ def q_lm_perplexity(spark, sf_dir):
     aggregated vocab — bounded, never the raw token stream); per-bigram
     log-probs are rounded to 6dp DECIMAL so the per-doc sum is exact and
     order-independent; V rides as a 1-row broadcast."""
-    # r12: spread_by on the scan was tried and REJECTED by measurement
+    # spread_by on the scan was tried and REJECTED by measurement
     # (1.76 -> 1.88/1.77 s isolated, two repeats): the persisted vocab
     # tables already bound the backbone, and the exchange buys nothing.
     d = _t(spark, sf_dir, "documents")
@@ -110,7 +108,7 @@ def q_lm_perplexity(spark, sf_dir):
             )
         ).alias("bg"),
     ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    # r12 optimization (guide §2.4 / §5): doc_cnt feeds BOTH the model-count
+    # doc_cnt feeds BOTH the model-count
     # chain (c12 → c1) and the final scored join, and Catalyst performs no
     # cross-branch subtree dedup — unpersisted, the tokenize+explode+shuffle
     # backbone ran ~4× per action (plan showed 4 parquet scans). Persisting
@@ -256,8 +254,8 @@ def q_pagerank_dup_graph(spark, sf_dir):
     tests/test_graph.py); the oracle unrolls the same 5 iterations as
     chained CTEs — exact despite being iterative, via the 10dp-DECIMAL
     contribution sums. Edge list = the session-shared _ngram_pairs
-    materialization (round-5 verdict #6: the in-key re-derivation was ~half
-    this key's sweep cost)."""
+    materialization (the in-key re-derivation was ~half this key's sweep
+    cost)."""
     from cassandra_data_migrator_spark.operators.graph import pagerank_pairs
 
     return pagerank_pairs(
@@ -330,8 +328,8 @@ def q_bpe_token_count(spark, sf_dir):
     return bpe.bpe_token_counts(d, merges)
 
 
-# Fixture merge table for the oracled BPE-apply contract (round-5 verdict
-# #8). The pairs are chosen CHARACTER-DISJOINT (no char appears in two
+# Fixture merge table for the oracled BPE-apply contract. The pairs are
+# chosen CHARACTER-DISJOINT (no char appears in two
 # pairs) and 2-char-flat (no merge output feeds another merge), which makes
 # greedy lowest-rank-first BPE application provably equivalent to
 # independent leftmost non-overlapping substring replacement per pair:
@@ -559,7 +557,7 @@ def q_tokenizer_fertility(spark, sf_dir):
     )
 
 
-# CJK tokenizer fixture (r09 — the fixture corpus is Latin-only, so the
+# CJK tokenizer fixture (the fixture corpus is Latin-only, so the
 # no-whitespace failure mode is planted IN-PLAN, the dedup-clone
 # discipline): doc_id % 4 selects a deterministic script suffix.
 CJK_SUFFIXES = [
@@ -571,7 +569,7 @@ CJK_SUFFIXES = [
 
 
 def q_tokenizer_cjk_fertility(spark, sf_dir):
-    """SCRIPT-AWARE tokenization audit (r08 verdict #3): whitespace
+    """SCRIPT-AWARE tokenization audit: whitespace
     tokenization collapses CJK/Thai runs to one token, silently skewing
     every token-count-derived key on multilingual crawls. Documents gain
     a deterministic script suffix (doc_id % 4: none / Han / mixed
@@ -586,7 +584,7 @@ def q_tokenizer_cjk_fertility(spark, sf_dir):
     Which keys stay whitespace-scoped: every token-derived key over the
     Latin-only fixture (token budgets, shard balance, LM/KN keys, Gopher
     rules, fertility E23) keeps tokens() — correct there by construction;
-    COVERAGE.md's r09 note records the per-key rationale and this key
+    COVERAGE.md records the per-key rationale and this key
     guards the script-aware path a multilingual deployment would swap in."""
     from cassandra_data_migrator_spark.functions.text import (
         CJK_SINGLE_RE_JAVA,
@@ -629,7 +627,7 @@ def q_tokenizer_cjk_fertility(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# round-8 north-star additions: site-level filtering, distribution drift
+# Site-level filtering, distribution drift
 # testing, co-occurrence statistics, hashed linear classification, signal
 # ensembling, Kneser-Ney LM scoring
 
@@ -1037,7 +1035,7 @@ def q_quality_ensemble(spark, sf_dir):
     selected = pos*4 < n_total, exact integer math in both engines."""
     from cassandra_data_migrator_spark.operators import rank as rank_ops
 
-    # r12: spread_by on the scan was tried and REJECTED by measurement
+    # spread_by on the scan was tried and REJECTED by measurement
     # (1.23 -> 1.76/1.83 s isolated, two repeats): the persisted sig table
     # rematerializes through the exchange and costs more than the
     # parallelized tokenize saves at this corpus size.
@@ -1062,7 +1060,7 @@ def q_quality_ensemble(spark, sf_dir):
         .cast("decimal(18,4)")
         .alias("s3"),
     ).filter(F.col("s2").isNotNull()).persist()
-    # ^ r12 optimization (guide §5): sig feeds the 1-row moments agg AND the
+    # ^ sig feeds the 1-row moments agg AND the
     # z-scoring crossJoin; persisting the per-doc signal table (3 decimals a
     # row) halves the tokenizer passes.
     moments = sig.agg(
@@ -1132,7 +1130,7 @@ def q_kn_perplexity(spark, sf_dir):
     total rides a 1-row broadcast carry."""
     from cassandra_data_migrator_spark.operators.partition import spread_by
 
-    # r12: spread_by widens the 1-task fixture scan (one parquet row group)
+    # spread_by widens the 1-task fixture scan (one parquet row group)
     # so the tokenize+explode backbone feeding the persisted KN count
     # tables runs on all cores (measured 1.82 -> 1.24-1.40 s isolated, two
     # repeats); pass-through at production split counts.
@@ -1155,7 +1153,7 @@ def q_kn_perplexity(spark, sf_dir):
         F.substring_index(F.col("p"), "\x00", 1).alias("w1"),
         F.substring_index(F.col("p"), "\x00", -1).alias("w2"),
     )
-    # r12 optimization (guide §2.4 / §5): dc feeds the whole count ladder
+    # dc feeds the whole count ladder
     # (c12 → c1/bwd/tt → model) AND the final join; c12 alone is consumed by
     # FOUR branches. Without persistence each branch re-ran the
     # tokenize+explode+shuffle backbone (plan: 5 parquet scans, 11

@@ -1,6 +1,4 @@
 """Multimodal (PPM/WAV/Y4M/PNG/JPEG/Exif) and profile/audit keys.
-
-Split from queries.py (round 10); bodies unchanged.
 """
 
 from __future__ import annotations
@@ -121,7 +119,7 @@ def q_binaryfile_ingest(spark, sf_dir):
 
     from cassandra_data_migrator_spark.operators.partition import spread
 
-    # r12 (guide §2.5): the fixture scan is ONE split, so the per-file
+    # The fixture scan is ONE split, so the per-file
     # writes otherwise run serially on one task; spread() fans the writer
     # across the session (no-op at scale, where the scan is already split)
     spread(media.select("media_id", payload.alias("payload"))).foreachPartition(
@@ -144,8 +142,8 @@ def q_binaryfile_ingest(spark, sf_dir):
 
 
 def q_multimodal_decode(spark, sf_dir):
-    """REAL image decode under the DRIVER check (round-5 verdict #5 — the
-    PIL stub retired for one format): documents become binary PPM (P6)
+    """REAL image decode under the DRIVER check (the PIL stub retired for
+    one format): documents become binary PPM (P6)
     images (header + raw RGB from the printable-ASCII text bytes, built
     JVM-side), the Arrow mapInPandas kernel (operators/multimodal.ppm_stats)
     PARSES each payload — magic, whitespace-tolerant header, exact pixel-
@@ -345,8 +343,8 @@ PNG_MAX_H = 10  # fixture PNG height cap — h>=5 exercises all five filters
 
 
 def q_multimodal_png(spark, sf_dir):
-    """REAL compressed-image decode under the DRIVER check (round-6
-    verdict next-round #2 — the PNG stub retired): documents become raw
+    """REAL compressed-image decode under the DRIVER check (the PNG stub
+    retired): documents become raw
     RGB rows (printable-ASCII text bytes, sliced JVM-side), an Arrow
     kernel DEFLATES them into spec-complete 8-bit truecolor PNGs
     (operators/multimodal.png_encode_rgb: CRC'd chunks, filter bytes
@@ -406,7 +404,7 @@ def q_multimodal_jpeg(spark, sf_dir):
     huffman code, stuffed byte, or IDCT term turns the key red. (The AC
     path — runs, ZRL, sign extension — is pinned against an
     encoder-independent NumPy IDCT reference in pytest; color has its
-    own keys and progressive its own since r11.)"""
+    own keys and progressive its own.)"""
     from cassandra_data_migrator_spark.operators.multimodal import (
         jpeg_encode_gray,
         jpeg_stats,
@@ -444,8 +442,8 @@ JPEG_RST_INTERVAL = 3  # MCUs per restart interval — deliberately misaligned
 
 
 def q_multimodal_jpeg_rst(spark, sf_dir):
-    """Restart-interval JPEG decode under the DRIVER check (judge r09 #5 —
-    real crawl JPEGs overwhelmingly carry DRI/RSTn): the gray fixture
+    """Restart-interval JPEG decode under the DRIVER check (real crawl
+    JPEGs overwhelmingly carry DRI/RSTn): the gray fixture
     re-encoded with a DRI segment and RST0..RST7 markers every
     {JPEG_RST_INTERVAL} MCUs, DC predictor re-anchored per segment
     (T.81 §B.2.4.4/§E.2.4). The interval is misaligned with the 4-block
@@ -455,7 +453,7 @@ def q_multimodal_jpeg_rst(spark, sf_dir):
     every post-restart DC value and the flat-block-exact oracle
     (re-sliced ORIGINAL text bytes — it never sees a JPEG) turns red.
     Out-of-order/missing/unconsumed restart segments refuse loudly
-    (pytest). Progressive decodes via its own key since r11."""
+    (pytest). Progressive decodes via its own key."""
     from cassandra_data_migrator_spark.operators.multimodal import (
         jpeg_encode_gray,
         jpeg_stats,
@@ -487,8 +485,8 @@ def q_multimodal_jpeg_rst(spark, sf_dir):
 
 
 def q_multimodal_jpeg_progressive(spark, sf_dir):
-    """PROGRESSIVE JPEG decode under the DRIVER check (judge r10 #3 —
-    T.81 §G, the other scan architecture real web JPEGs carry): the gray
+    """PROGRESSIVE JPEG decode under the DRIVER check (T.81 §G, the other
+    scan architecture real web JPEGs carry): the gray
     fixture re-encoded as SOF2 with FIVE scans — DC first at Al=1
     (point-transform DPCM), two spectral-selection AC first scans (1..5,
     6..63) that are pure EOBRUN chains under a custom EOBn huffman
@@ -536,8 +534,8 @@ JPEGC_MAX_BH = 2  # color height cap in blocks (3 bytes/block; 8 MCUs x 3
 
 
 def q_multimodal_jpeg_color(spark, sf_dir):
-    """REAL 3-component baseline-JPEG decode under the DRIVER check (r08
-    verdict #2 — real corpora are color): documents become flat-block
+    """REAL 3-component baseline-JPEG decode under the DRIVER check (real
+    corpora are color): documents become flat-block
     4:4:4 COLOR JPEGs (every THREE printable-ASCII text bytes = one 8x8
     block's integer Y/Cb/Cr levels, encoded through the full 3-component
     machinery — interleaved MCUs, per-component DC prediction, luma DHT
@@ -600,7 +598,7 @@ JPEGS_MAX_MH = 2  # 4:2:0 height cap in MCU rows (3 bytes/MCU; 4 MCUs x 6
 
 def q_multimodal_jpeg_420(spark, sf_dir):
     """REAL 4:2:0 chroma-subsampled baseline-JPEG decode under the DRIVER
-    check (r09 — real camera/web corpora are overwhelmingly 4:2:0, the
+    check (real camera/web corpora are overwhelmingly 4:2:0, the
     one layout the color key's 4:4:4 path never exercised): documents
     become flat-MCU 4:2:0 JPEGs (every THREE printable-ASCII text bytes =
     one 16x16 MCU's integer Y/Cb/Cr levels, encoded through the full
@@ -654,8 +652,8 @@ def q_multimodal_jpeg_420(spark, sf_dir):
 
 
 def q_multimodal_exif(spark, sf_dir):
-    """REAL Exif/APP1 metadata extraction under the DRIVER check (r09 —
-    the first thing an image-corpus pipeline reads before it ever decodes
+    """REAL Exif/APP1 metadata extraction under the DRIVER check (the
+    first thing an image-corpus pipeline reads before it ever decodes
     pixels: orientation gates rotation-normalization, resolution gates
     quality filters, Make powers device-level dedup/gating): documents
     become minimal REAL JPEGs carrying a genuine Exif APP1 — TIFF header,
@@ -804,7 +802,7 @@ def q_dedup_threshold_sweep(spark, sf_dir):
     """Dedup-threshold tuning curve: near-dup pair counts at each Jaccard
     threshold, computed from ONE shingle-index pass (the pair list with
     scores is reused across all thresholds — no re-scan per setting)."""
-    # r12: min(SWEEP_THRESHOLDS) == the shared artifact's base threshold
+    # min(SWEEP_THRESHOLDS) == the shared artifact's base threshold
     # (pinned by tests/test_dedup.py), so the sweep reads the session's
     # standing scored pair list instead of re-deriving the shingle
     # self-join per run
@@ -831,7 +829,7 @@ def q_vocab_zipf_slope(spark, sf_dir):
     Per-word logs are rounded to 6dp then summed as DECIMALs, so the
     regression sums are exact and order-independent on both engines. Every
     vocab word needs a rank (not a top-k), so ranking is the distributed
-    histogram pattern (operators/rank.global_rank, round-5 verdict #1): the
+    histogram pattern (operators/rank.global_rank): the
     only unpartitioned window cumsums the count-HISTOGRAM (1 row per
     distinct frequency — Zipf ties collapse the tail), never the vocab."""
     from cassandra_data_migrator_spark.operators.rank import global_rank
@@ -993,7 +991,7 @@ def q_topk_similarity_lsh_banded(spark, sf_dir):
 def q_ann_recall_audit(spark, sf_dir):
     """ANN quality contract under the DRIVER check (same pattern as the
     sketch audits): recall@k of the banded-LSH path against the exact
-    brute-force top-k. Two floors (round-4 verdict #4, after the 2-bit
+    brute-force top-k. Two floors (set after the 2-bit
     multi-probe upgrade): per-query recall ≥ 0.25 (measured min 0.4-0.6 at
     sf0.001/0.01/0.1) and corpus-aggregate recall ≥ 0.5 (measured
     0.60-0.76) — the old 0.15 single floor tolerated near-collapse.
@@ -1016,7 +1014,7 @@ def q_ann_recall_audit(spark, sf_dir):
     # localCheckpoint: BOTH consumers below (per-row booleans + the 1-row
     # aggregate) read one materialization — without it the whole banded-LSH
     # subtree (Arrow signatures, 37-way probe explode, band join) executed
-    # twice (round-5 review).
+    # twice.
     joined = (
         per_q.join(hits, "query_id", "left").fillna(0, ["n_hits"]).localCheckpoint()
     )

@@ -1,5 +1,4 @@
-"""DuckDB oracle SQL chunk (oracles_a). Split from queries.py oracle_sql().
-"""
+"""DuckDB oracle SQL chunk (oracles_a)."""
 
 from __future__ import annotations
 

@@ -1,5 +1,4 @@
-"""DuckDB oracle SQL chunk (oracles_c). Split from queries.py oracle_sql().
-"""
+"""DuckDB oracle SQL chunk (oracles_c)."""
 
 from __future__ import annotations
 
@@ -15,6 +14,7 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
     NGRAM_THRESHOLD,
     PACK_BIN_TOKENS,
     PACK_SHARDS,
+    SENTIMENT_LEXICON,
     SPLIT_TRAIN_LT,
     SPLIT_VAL_LT,
     STOPWORDS,
@@ -42,6 +42,8 @@ from cassandra_data_migrator_spark.queries.analytics import (  # noqa: F401
     DSIR_BUCKETS,
     DSIR_TARGET_MOD,
     EVENT_TYPES,
+    EWMA_ALPHA,
+    EWMA_LAGS,
     INTERVAL_JOIN_WINDOW_US,
     JS_DRIFT_SPLIT_MOD,
     QUOTA_PER_SOURCE,
@@ -73,11 +75,59 @@ from cassandra_data_migrator_spark.queries.lm_quality import (  # noqa: F401
 from cassandra_data_migrator_spark.queries.late_keys import (  # noqa: F401
     ZORDER_SCALE,
 )
-from cassandra_data_migrator_spark.queries.registry import (  # noqa: F401
-    _dedup_clusters_sql,
-    _ewma_sql,
-    _lex_values,
-)
+
+
+def _lex_values() -> str:
+    return ", ".join(f"('{w}', {s})" for w, s in SENTIMENT_LEXICON.items())
+
+
+def _ewma_sql() -> str:
+    """EWMA oracle: same fixed 8-tap lag formulation as q_ewma_smooth, with
+    the SAME left-to-right add order and power-of-two weights, so the double
+    arithmetic is bit-identical on both engines."""
+    lag_cols = ", ".join(f"lag(value, {k}) OVER w AS x{k}" for k in range(1, EWMA_LAGS))
+    num, den = [], []
+    for k in range(EWMA_LAGS):
+        wt = EWMA_ALPHA * (1 - EWMA_ALPHA) ** k
+        x = "value" if k == 0 else f"x{k}"
+        num.append(f"CAST({wt!r} AS DOUBLE) * COALESCE({x}, 0e0)")
+        den.append(f"CASE WHEN {x} IS NOT NULL THEN CAST({wt!r} AS DOUBLE) ELSE 0e0 END")
+    return f"""
+        WITH o AS (
+            SELECT event_id, user_id, value, {lag_cols}
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+        )
+        SELECT event_id, user_id,
+               ROUND(({" + ".join(num)}) / ({" + ".join(den)}), 4) AS ewma_r
+        FROM o
+    """
+
+
+def _dedup_clusters_sql() -> str:
+    """Recursive-CTE connected components over the n-gram Jaccard pair graph
+    (shared by the dedup_clusters and dedup_cluster_sizes oracles)."""
+    return f"""
+            WITH RECURSIVE toks AS (SELECT doc_id, {TOKS_SQL} AS ts FROM documents),
+            pos AS (SELECT doc_id, ts, unnest(range(1, len(ts) - 1)) AS i
+                    FROM toks WHERE len(ts) >= {NGRAM_N}),
+            sh AS (SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle FROM pos),
+            sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+            inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS ni
+                      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+                      GROUP BY 1, 2),
+            pairs AS (SELECT id_a, id_b
+                      FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
+                      WHERE ROUND(ni * 1.0 / (sa.n + sb.n - ni), 4) >= {NGRAM_THRESHOLD}),
+            edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                      UNION SELECT id_b AS src, id_a AS dst FROM pairs),
+            reach(id, r) AS (
+                SELECT doc_id, doc_id FROM documents
+                UNION
+                SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id
+            )
+            SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id
+    """
 
 
 def oracles_c() -> dict[str, str]:

@@ -1,4 +1,4 @@
-"""DuckDB oracle SQL chunk (round-10 keys).
+"""DuckDB oracle SQL chunk (oracles_d).
 
 The sql_frontend_ds* oracles are the IDENTICAL SQL text the Spark side
 submits (one text, two engines), imported from sql_frontend.

@@ -1,4 +1,4 @@
-"""DuckDB oracle SQL chunk (round-11 keys: WARC/HTML front door)."""
+"""DuckDB oracle SQL chunk (oracles_e: the WARC/HTML front door)."""
 
 from __future__ import annotations
 

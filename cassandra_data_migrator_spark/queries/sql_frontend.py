@@ -1,6 +1,4 @@
 """TPC-H shapes, recall audits, kmeans/minhash, and SQL-frontend keys.
-
-Split from queries.py (round 10); bodies unchanged.
 """
 
 from __future__ import annotations
@@ -57,7 +55,7 @@ def q_sql_frontend_q1(spark, sf_dir):
     from cassandra_data_migrator_spark.sources.parquet import register_tables
 
     configure_session(spark)
-    # r12: spread the lineitem view (sources/parquet.register_tables note) —
+    # Spread the lineitem view (sources/parquet.register_tables note) —
     # Q1's decimal partial sums otherwise run on the 1-task fixture scan.
     # Measured isolated 1.95 -> 1.38 s; SQL text unchanged.
     register_tables(spark, sf_dir, ["lineitem"], spread=("lineitem",))
@@ -152,9 +150,6 @@ def q_ref_integrity_audit(spark, sf_dir):
     return out
 
 
-# ---------------------------------------------------------------------------
-# round-4 additions
-
 KMEANS_ASSIGN_K = 8
 MINHASH_AUDIT_THRESHOLD = 0.5
 MINHASH_RECALL_MIN = 0.6  # measured 1.0 at sf0.001/0.01/0.1; see BASELINE.md
@@ -199,7 +194,7 @@ def q_kmeans_assign(spark, sf_dir):
         .collect()
     )  # bounded: exactly k rows of dim doubles (same sync lloyd_kmeans does)
     centroids = [(int(r["vec_id"]), list(r["v"])) for r in init]
-    # r12 optimization (guide §4.2): the Arrow kernel computes the identical
+    # The Arrow kernel computes the identical
     # decimal argmin (bit-exact, full-enumeration-pinned by
     # tests/test_cluster.py::test_assign_exact_arrow_identity) without the
     # k·dim interpreted lambda folds per row.
@@ -275,7 +270,7 @@ def q_ttl_expiry(spark, sf_dir):
     skip them): expiry = max(writetimes) + max(ttls)·1e6 ≤ REF. Pure bigint
     projection + filter over the scan — pushdown-friendly, no shuffle.
 
-    Cassandra semantics (round-4 advice): a cell with TTL 0/absent NEVER
+    Cassandra semantics: a cell with TTL 0/absent NEVER
     expires, so a row with any tracked TTL null or ≤0 must not be classified
     as expired (a migrate skipping "expired" rows would otherwise drop live
     data). The fixture's TTLs are always ≥100 s, so this query perturbs them
@@ -317,7 +312,7 @@ def q_rolling_hash_chunks(spark, sf_dir):
 
 
 IVF_RECALL_MIN = 0.8  # trained cells: measured 0.90/0.90/0.98 at sf0.001/0.01/0.1
-# (the old % 97 centroid sample measured 0.48-0.66 — round-5 verdict #4)
+# (the old % 97 centroid sample measured 0.48-0.66)
 SIMHASH_RECALL_MIN = 0.8  # measured 0.949-1.0 at sf0.001/0.01/0.1
 SIMHASH_AUDIT_MAX_HAMMING = 8
 
@@ -332,7 +327,7 @@ def q_ivf_recall_audit(spark, sf_dir):
     corpus-level recall is the stable contract."""
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.filter(TOPK_QUERY_PRED)
-    # trained cells (lloyd_kmeans via _ivf_centroids, round-5 verdict #4) —
+    # trained cells (lloyd_kmeans via _ivf_centroids) —
     # the audit now measures the recall of the ACTUAL deployed quantizer
     cents = _ivf_centroids(spark, sf_dir)
     # session-shared ground-truth table (feeds both the count and the
@@ -354,7 +349,7 @@ def q_ivf_recall_audit(spark, sf_dir):
     )
 
 
-# Clustered-embedding recall fixture (round-6 verdict next-round #4): the
+# Clustered-embedding recall fixture: the
 # uniform synthetic embeddings are LSH-hostile (near-orthogonal everywhere),
 # which forced the uniform audits' floors down to 0.25-0.5. Real embedding
 # corpora are CLUSTERED, so these twins re-measure the same two ANN paths on
@@ -535,7 +530,7 @@ def q_cross_source_chunk_overlap(spark, sf_dir):
     an index self-join — one shuffle keyed by chunk hash, uniform unless a
     chunk floods every source (star-guard semantics not needed here because
     the per-hash list is bounded by the source count, not the corpus)."""
-    # r12: spread_by on the chunker input was tried and REJECTED by
+    # spread_by on the chunker input was tried and REJECTED by
     # measurement (1.87 -> 2.16 s isolated): this key's cost is its
     # distinct + collect_list shuffles, not the posexplode map side.
     d = _t(spark, sf_dir, "documents")
@@ -614,7 +609,7 @@ def q_semantic_dedup(spark, sf_dir):
     assigned = assign_clusters_exact_arrow(emb, centroids, "embedding").select(
         "vec_id", "cluster_id", as_double_array("embedding").alias("__v")
     )
-    # r12 optimization (guide §2.4): the prune flag comes straight out of the
+    # The prune flag comes straight out of the
     # chunked GEMM groups — every member row is in exactly one group — so the
     # expensive exact-decimal assignment is evaluated ONCE instead of feeding
     # both sides of the old `assigned LEFT JOIN pruned_ids` (measured: the
@@ -712,7 +707,7 @@ TPCH_Q5_SQL = """
 
 
 def q_sql_frontend_q3(spark, sf_dir):
-    """SQL frontend breadth beyond Q1 (round-3 verdict #6): TPC-H Q3
+    """SQL frontend breadth beyond Q1: TPC-H Q3
     (shipping priority — the join plan join_agg_pipeline pins) submitted as
     SQL TEXT; the top-10 is deterministic because revenue is an exact
     decimal sum (ties broken by l_orderkey). IDENTICAL text runs on DuckDB."""
@@ -820,7 +815,7 @@ SQL_WINDOW_FUNCS_SQL = """
 
 
 def q_sql_frontend_window_funcs(spark, sf_dir):
-    """Window-function SQL surface (r09) — the analytic OVER clauses the
+    """Window-function SQL surface — the analytic OVER clauses the
     TPC-H shapes never exercise, as IDENTICAL SQL text on both engines:
     named WINDOW clause shared by ROW_NUMBER/RANK/NTILE, an explicit
     ROWS-framed running DECIMAL sum, and LAG — all PARTITIONED windows
@@ -1095,7 +1090,7 @@ def q_sql_frontend_recursive(spark, sf_dir):
     The recursion ROW budget is depth·|customer| (every key contributes
     one row per level walked), so Spark's 1M default
     ``cteRecursionRowLimit`` trips at sf1 (150k keys × 7 levels — found
-    by the r11 full-surface sf1 certification); sized to 100M here, a
+    by the full-surface sf1 certification); sized to 100M here, a
     bound the depth-7 forest cannot reach below ~14M customers per the
     formula above."""
     from cassandra_data_migrator_spark.sources.parquet import register_tables
@@ -1437,7 +1432,7 @@ def q_sql_frontend_q21(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# TPC-DS shape sampler (judge r09 #7): five shapes TPC-H q1-q22 never
+# TPC-DS shape sampler: five shapes TPC-H q1-q22 never
 # exercises, fixture-adapted, IDENTICAL SQL text on both engines.
 
 SQL_DS1_SQL = """
@@ -1756,7 +1751,7 @@ def q_sql_frontend_ds8(spark, sf_dir):
     from cassandra_data_migrator_spark.sources.parquet import register_tables
 
     configure_session(spark)
-    # r12: spread the lineitem view (sources/parquet.register_tables note) —
+    # Spread the lineitem view (sources/parquet.register_tables note) —
     # measured isolated 2.46 -> 1.20 s; SQL text unchanged.
     register_tables(spark, sf_dir, ["lineitem", "part"], spread=("lineitem",))
     return spark.sql(SQL_DS8_SQL)

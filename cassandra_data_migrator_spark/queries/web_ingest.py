@@ -1,4 +1,4 @@
-"""WARC → HTML → text ingestion keys (round 11) — the crawl front door.
+"""WARC → HTML → text ingestion keys — the crawl front door.
 
 Fixture discipline mirrors the multimodal keys: documents become
 deterministic HTML pages, pages become real multi-record WARC/1.0 FILES
@@ -134,8 +134,8 @@ _WARCINFO_RECORD = (
 
 
 def q_warc_ingest(spark, sf_dir):
-    """WARC crawl ingestion end-to-end (judge r10 #2, 'the missing front
-    door'): documents → HTML → HTTP response → WARC/1.0 records grouped
+    """WARC crawl ingestion end-to-end (the crawl front door):
+    documents → HTML → HTTP response → WARC/1.0 records grouped
     32-ways into real multi-record .warc FILES (warcinfo head + responses
     ordered by doc_id), written executor-side to a session-scoped staging
     dir, read back through ``format("binaryFile")``, and parsed by the
@@ -361,7 +361,7 @@ def q_warc_text_pipeline(spark, sf_dir):
     )
 
 
-# --- round 12: charset-aware crawl text (judge r11 #2) ----------------------
+# --- charset-aware crawl text ----------------------------------------------
 # Three planted charset classes by doc_id % 3; the plants reuse the
 # CJK/Thai idea from tokenizer_cjk_fertility plus Latin-1-only chars. All
 # plants avoid &<>"' so the entity escape is identity on them.
@@ -396,7 +396,7 @@ def _charset_html(doc_id, san):
 
 
 def q_warc_charset_extract(spark, sf_dir):
-    """Charset-aware WARC text extraction (judge r11 #2): pages are
+    """Charset-aware WARC text extraction: pages are
     written to real .warc files in three wire encodings — UTF-8 declared
     in the HTTP Content-Type (doc_id%3==0, planted Han/Thai/Katakana),
     Latin-1 declared only in a <meta charset> tag (==1, planted accented
@@ -494,14 +494,14 @@ def q_warc_charset_extract(spark, sf_dir):
     )
 
 
-# --- round 12: record-type breadth + WET roundtrip (judge r11 #4) -----------
+# --- record-type breadth + WET roundtrip ------------------------------------
 REVISIT_MOD = 4   # doc_id%4==1 -> crawler saw unchanged content: revisit rec
 REQUEST_MOD = 8   # doc_id%8==2 -> the originating request is archived too
 DOMAIN_MOD = 17   # same site layout as the domain_stats key
 
 
 def q_warc_revisit_stats(spark, sf_dir):
-    """Revisit-aware crawl accounting (judge r11 #4): fixture .warc files
+    """Revisit-aware crawl accounting: fixture .warc files
     interleave response records with `revisit` records (the crawl-time
     dedup signal — WARC/1.0 §6.7: the crawler matched an earlier capture's
     payload digest and stored a reference, not bytes) and archived
@@ -619,7 +619,7 @@ def q_warc_revisit_stats(spark, sf_dir):
 
 
 def q_warc_wet_roundtrip(spark, sf_dir):
-    """WET-style derived-artifact roundtrip (judge r11 #4): the pipeline
+    """WET-style derived-artifact roundtrip: the pipeline
     so far only READ crawl containers; real curation also WRITES the
     extracted-text derivative (Common Crawl's WET shape: one
     `conversion` record per page, text/plain block, Content-Length
@@ -679,8 +679,8 @@ def q_warc_wet_roundtrip(spark, sf_dir):
 
 
 def q_warc_wat_roundtrip(spark, sf_dir):
-    """WAT-style metadata artifact roundtrip (judge r11 'What's missing'
-    #2 named WET/WAT both; WET landed as warc_wet_roundtrip): per page a
+    """WAT-style metadata artifact roundtrip (the WAT twin of
+    warc_wet_roundtrip): per page a
     JSON metadata object ({url, title, n_links, next} — the crawl-graph
     fields a WAT record carries) built JVM-side with DETERMINISTIC field
     order via string concat (to_json's struct order is engine-internal;

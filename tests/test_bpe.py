@@ -106,7 +106,7 @@ def test_fixture_merges_match_replace_formula():
     equals len(word) + 1 − Σ leftmost-non-overlapping occurrences per pair.
     Exercised on adversarial words (self-overlap candidates, adjacent
     merges, chained-looking sequences, unseen chars)."""
-    from cassandra_data_migrator_spark.queries import BPE_AUDIT_MERGES
+    from cassandra_data_migrator_spark.queries.lm_quality import BPE_AUDIT_MERGES
 
     # the oracle's structural preconditions: 12 distinct chars, no merge
     # output is a member of another pair

@@ -6,7 +6,12 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
-from cassandra_data_migrator_spark import queries as q
+from cassandra_data_migrator_spark.queries.analytics import (
+    TOKEN_BUDGET,
+    q_dsir_importance,
+    q_line_dedup,
+    q_token_budget_select,
+)
 
 
 def _run(spark, rows):
@@ -17,7 +22,7 @@ def _run(spark, rows):
     spark.createDataFrame(
         rows, "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
     ).write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    return {r["doc_id"]: r for r in q.q_line_dedup(spark, d).collect()}
+    return {r["doc_id"]: r for r in q_line_dedup(spark, d).collect()}
 
 
 def test_keep_first_and_rebuild(spark):
@@ -68,7 +73,7 @@ def test_keep_first_is_partial_aggregate(spark, sf_dir):
     """The keep-first must be a map-side-combinable aggregation (two
     HashAggregate/ObjectHashAggregate nodes around the line exchange), not
     a window over skewed line partitions."""
-    df = q.q_line_dedup(spark, sf_dir)
+    df = q_line_dedup(spark, sf_dir)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
@@ -82,13 +87,13 @@ def test_token_budget_select_prefix_and_budget(spark, sf_dir):
     EXACT prefix of (quality DESC, doc_id) order, its token total is the
     max prefix within budget (adding the next doc would exceed it), and
     cum_tokens is strictly increasing along the prefix."""
-    rows = q.q_token_budget_select(spark, sf_dir).collect()
+    rows = q_token_budget_select(spark, sf_dir).collect()
     assert rows, "budget selects nothing — fixture/budget mismatch"
     sel = sorted(rows, key=lambda r: (-r["quality"], r["doc_id"]))
     # cum_tokens strictly increasing iff every selected doc has tokens
     cums = [r["cum_tokens"] for r in sel]
     assert cums == sorted(cums)
-    assert cums[-1] <= q.TOKEN_BUDGET
+    assert cums[-1] <= TOKEN_BUDGET
     # exact-prefix check against a driver-side recomputation of the order
     from cassandra_data_migrator_spark.functions.text import quality_features
     from cassandra_data_migrator_spark.sources.parquet import load_table
@@ -100,7 +105,7 @@ def test_token_budget_select_prefix_and_budget(spark, sf_dir):
     run, want = 0, []
     for r in order:
         run += r["n_tokens"]
-        if run > q.TOKEN_BUDGET:
+        if run > TOKEN_BUDGET:
             break
         want.append((r["doc_id"], run))
     assert [(r["doc_id"], r["cum_tokens"]) for r in sel] == want
@@ -174,7 +179,6 @@ def test_r07_crawl_curation_pipeline_composes(spark, sf_dir):
     partition the kept set with near-equal token mass."""
     from pyspark.sql import functions as F
 
-    from cassandra_data_migrator_spark import queries as q
     from cassandra_data_migrator_spark.functions.text import tokens
     from cassandra_data_migrator_spark.functions.urls import url_dedup
     from cassandra_data_migrator_spark.operators.rank import global_rank
@@ -194,7 +198,7 @@ def test_r07_crawl_curation_pipeline_composes(spark, sf_dir):
     assert reps.groupBy("canon_url").count().filter("count > 1").count() == 0
     # DSIR gate over the representatives only
     kept_ids = {r.doc_id for r in reps.select("doc_id").collect()}
-    dsir = q.q_dsir_importance(spark, sf_dir).filter("keep")
+    dsir = q_dsir_importance(spark, sf_dir).filter("keep")
     gated = dsir.join(reps.select("doc_id"), "doc_id")
     gated_ids = {r.doc_id for r in gated.select("doc_id").collect()}
     assert gated_ids <= kept_ids  # the gate only drops

@@ -475,10 +475,12 @@ def test_extract_features_real_path_decodes_ppm(spark):
 def test_binaryfile_ingest_idempotent_across_runs(spark, sf_dir):
     """Re-running the ingest key must be byte-stable: same files, same
     lengths, same digests (writes are deterministic overwrites)."""
-    from cassandra_data_migrator_spark import queries as q
+    from cassandra_data_migrator_spark.queries.multimodal_keys import (
+        q_binaryfile_ingest,
+    )
 
-    a = sorted(map(tuple, q.q_binaryfile_ingest(spark, sf_dir).collect()))
-    b = sorted(map(tuple, q.q_binaryfile_ingest(spark, sf_dir).collect()))
+    a = sorted(map(tuple, q_binaryfile_ingest(spark, sf_dir).collect()))
+    b = sorted(map(tuple, q_binaryfile_ingest(spark, sf_dir).collect()))
     assert a == b and len(a) > 0
 
 

@@ -52,11 +52,11 @@ def test_topk_similarity_broadcasts_queries(spark, sf_dir):
     audits), so the broadcast pin targets the BUILDER plan — the compute
     that actually materializes the artifact."""
     from cassandra_data_migrator_spark.operators import similarity
-    from cassandra_data_migrator_spark import queries as qq
+    from cassandra_data_migrator_spark.queries._shared import TOPK_K, TOPK_QUERY_PRED
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     df = similarity.brute_force_topk(
-        emb, emb.filter(qq.TOPK_QUERY_PRED), k=qq.TOPK_K
+        emb, emb.filter(TOPK_QUERY_PRED), k=TOPK_K
     )
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -563,15 +563,20 @@ def test_pq_adc_plan_query_count_invariant(spark, sf_dir):
     broadcast LUT-carrying query table to the encoded index with ONE fixed
     scoring expression, so the plan must be structurally IDENTICAL whether
     5 or 50 queries probe it (only the filter literal differs)."""
-    from cassandra_data_migrator_spark import queries as qq
+    from cassandra_data_migrator_spark.queries._shared import _t
+    from cassandra_data_migrator_spark.queries.ann_pq import PQ_RECALL_MIN, _pq_audit
+    from cassandra_data_migrator_spark.queries.dedup_text import (
+        _brute_topk,
+        _ivf_centroids,
+    )
 
-    emb = qq._t(spark, sf_dir, "embeddings")
-    brute = qq._brute_topk(spark, sf_dir).select("query_id", "vec_id")
-    cents = qq._ivf_centroids(spark, sf_dir)
+    emb = _t(spark, sf_dir, "embeddings")
+    brute = _brute_topk(spark, sf_dir).select("query_id", "vec_id")
+    cents = _ivf_centroids(spark, sf_dir)
 
     def plan_nodes(pred, nprobe):
-        df = qq._pq_audit(
-            spark, emb, brute, qq.PQ_RECALL_MIN, f"pq|{sf_dir}", cents,
+        df = _pq_audit(
+            spark, emb, brute, PQ_RECALL_MIN, f"pq|{sf_dir}", cents,
             nprobe=nprobe, query_pred=pred,
         )
         plan = df._jdf.queryExecution().optimizedPlan()

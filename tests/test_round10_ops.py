@@ -68,25 +68,6 @@ def test_prefix_filter_cache_bounded(spark, sf_dir):
     assert not (first.storageLevel.useMemory or first.storageLevel.useDisk)
 
 
-def test_registry_unique_keys():
-    """ADVICE r09: queries() listed several keys twice (head block +
-    thematic section); the registry source must bind each key exactly
-    once so a future divergent rebinding can't be silently shadowed."""
-    import ast
-    import inspect
-
-    from cassandra_data_migrator_spark.queries import registry
-
-    src = inspect.getsource(registry.queries)
-    ret = ast.parse(src.lstrip()).body[0].body[-1]
-    keys = [k.value for k in ret.value.keys if k is not None]
-    dupes = {k for k in keys if keys.count(k) > 1}
-    assert not dupes, f"duplicate queries() entries: {sorted(dupes)}"
-    from cassandra_data_migrator_spark import queries as q
-
-    assert len(keys) == len(q.queries())
-
-
 def test_migrate_emits_per_row_writetime_ttl_payload(spark, sf_dir, monkeypatch):
     """Judge r09 #6: the FULL job-level contract for a live-cluster target —
     run_migrate with TTL-tracked input must (a) compute __writetime AND

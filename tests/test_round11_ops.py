@@ -1,34 +1,6 @@
 """Round-11 regression tests (ADVICE r10 follow-ups + new surface)."""
 
-import re
-from pathlib import Path
-
 import pytest
-
-
-def test_coverage_totals_match_registry():
-    """COVERAGE.md's judge-checkable totals line must equal the live
-    registry (verdict r10 #6 — the inventory count lagged the registry
-    in r10)."""
-    from cassandra_data_migrator_spark.queries.oracles import oracle_sql
-    from cassandra_data_migrator_spark.queries.registry import (
-        ROWS_ONLY_KEYS,
-        queries,
-    )
-
-    text = (Path(__file__).parent.parent / "COVERAGE.md").read_text()
-    m = re.search(
-        r"Totals: \*\*(\d+) declared query keys\*\* \((\d+) with DuckDB "
-        r"oracles, (\d+) rows-only",
-        text,
-    )
-    assert m, "COVERAGE.md totals line missing or reformatted"
-    declared, oracled, rows_only = map(int, m.groups())
-    qs, os_ = queries(), oracle_sql()
-    assert declared == len(qs)
-    assert oracled == len(os_) == len(set(qs) & set(os_))
-    assert rows_only == len(ROWS_ONLY_KEYS) == len(qs) - len(os_)
-    assert set(qs) - set(os_) == set(ROWS_ONLY_KEYS)
 
 
 def test_migrate_custom_ttl_writetime_without_tracked_cells(

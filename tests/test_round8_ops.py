@@ -14,12 +14,27 @@ from collections import Counter, defaultdict
 from pyspark.sql import functions as F
 
 from cassandra_data_migrator_spark import queries as q
+from cassandra_data_migrator_spark.queries._shared import SPLIT_TRAIN_LT, _t
+from cassandra_data_migrator_spark.queries.late_keys import CHURN_EDIT_MOD, KSAMPLE_K
+from cassandra_data_migrator_spark.queries.lm_quality import (
+    CLF_LABEL_MOD,
+    CLF_MARKER_MOD,
+    DOMAIN_MAX_DUP_R,
+    DOMAIN_MIN_DOCS,
+    DOMAIN_SITES,
+    DOMAIN_TLDS,
+    ENSEMBLE_KEEP_DEN,
+    ENSEMBLE_KEEP_NUM,
+    KN_DISCOUNT,
+    SKIP_TOPK,
+    SKIP_WINDOW,
+)
 
 
 def _docs(spark, sf_dir):
     return {
         r.doc_id: (r.text, r.lang, r.n_chars)
-        for r in q._t(spark, sf_dir, "documents").collect()
+        for r in _t(spark, sf_dir, "documents").collect()
     }
 
 
@@ -36,9 +51,9 @@ def test_skipgram_cooc_matches_brute_force(spark, sf_dir):
     for text, _, _ in _docs(spark, sf_dir).values():
         ts = _toks(text)
         for i, x in enumerate(ts):
-            for y in ts[i + 1 : i + 1 + q.SKIP_WINDOW]:
+            for y in ts[i + 1 : i + 1 + SKIP_WINDOW]:
                 cnt[(x, y)] += 1
-    want = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[: q.SKIP_TOPK]
+    want = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:SKIP_TOPK]
     assert got == {
         pair: (n, rnk + 1) for rnk, (pair, n) in enumerate(want)
     }
@@ -64,8 +79,8 @@ def test_kn_perplexity_matches_reference_model(spark, sf_dir):
     logp6 = {}
     for (a, b), c in c12.items():
         p = (
-            max(c - q.KN_DISCOUNT, 0.0)
-            + q.KN_DISCOUNT * n1f[a] * (n1b[b] / t_types)
+            max(c - KN_DISCOUNT, 0.0)
+            + KN_DISCOUNT * n1f[a] * (n1b[b] / t_types)
         ) / c1[a]
         logp6[(a, b)] = round(math.log(p), 6)
     want = {}
@@ -101,7 +116,7 @@ def test_kn_probabilities_sum_to_at_most_one(spark, sf_dir):
     t = len(c12)
     mass = Counter()
     for (a, b), c in c12.items():
-        p = (max(c - q.KN_DISCOUNT, 0.0) + q.KN_DISCOUNT * n1f[a] * (n1b[b] / t)) / c1[a]
+        p = (max(c - KN_DISCOUNT, 0.0) + KN_DISCOUNT * n1f[a] * (n1b[b] / t)) / c1[a]
         assert p > 0
         mass[a] += p
     assert all(m <= 1.0 + 1e-9 for m in mass.values())
@@ -132,8 +147,8 @@ def test_nb_classifier_trains_only_on_train_split(spark, sf_dir):
     want = sum(
         1
         for doc_id, (text, _, _) in _docs(spark, sf_dir).items()
-        if hashlib.md5(str(doc_id).encode()).hexdigest()[:2] >= q.SPLIT_TRAIN_LT
-        and _toks(text + (f" mq{doc_id % q.CLF_MARKER_MOD}" * 3 if doc_id % q.CLF_LABEL_MOD == 0 else ""))
+        if hashlib.md5(str(doc_id).encode()).hexdigest()[:2] >= SPLIT_TRAIN_LT
+        and _toks(text + (f" mq{doc_id % CLF_MARKER_MOD}" * 3 if doc_id % CLF_LABEL_MOD == 0 else ""))
     )
     assert n_eval == want
 
@@ -142,7 +157,7 @@ def test_quality_ensemble_selects_exact_top_quarter(spark, sf_dir):
     rows = q.queries()["quality_ensemble"](spark, sf_dir).collect()
     n = len(rows)
     picked = [r for r in rows if r.selected]
-    want_k = (n * q.ENSEMBLE_KEEP_NUM + q.ENSEMBLE_KEEP_DEN - 1) // q.ENSEMBLE_KEEP_DEN
+    want_k = (n * ENSEMBLE_KEEP_NUM + ENSEMBLE_KEEP_DEN - 1) // ENSEMBLE_KEEP_DEN
     assert len(picked) == want_k
     # every selected score >= every unselected score (ties broken by id)
     lo = min(r.ensemble_z for r in picked)
@@ -160,7 +175,7 @@ def test_ks_drift_flags_planted_shift(spark, sf_dir, tmp_path):
     assert 0.0 <= base.ks_stat <= 1.0
     assert base.ks_threshold > 0
     assert not base.drifted  # even/odd ids sample the same distribution
-    e = q._t(spark, sf_dir, "events")
+    e = _t(spark, sf_dir, "events")
     shifted = e.withColumn(
         "value",
         F.when(F.col("event_id") % 2 == 1, F.col("value") + 500.0).otherwise(
@@ -181,7 +196,7 @@ def test_domain_stats_matches_brute_force(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     agg = defaultdict(lambda: [0, set(), 0])
     for doc_id, (text, _, _) in docs.items():
-        dom = f"site{doc_id % q.DOMAIN_SITES}.example-{doc_id % q.DOMAIN_TLDS}.com"
+        dom = f"site{doc_id % DOMAIN_SITES}.example-{doc_id % DOMAIN_TLDS}.com"
         a = agg[dom]
         a[0] += 1
         a[1].add(hashlib.md5(text.encode()).hexdigest())
@@ -193,7 +208,7 @@ def test_domain_stats_matches_brute_force(spark, sf_dir):
         assert (r.n_docs, r.n_distinct_texts, r.sum_tokens) == (n, len(hs), tok)
         dup_r = round(1 - len(hs) / n, 4)
         assert abs(r.dup_r - dup_r) < 1e-9
-        assert r.keep == (n >= q.DOMAIN_MIN_DOCS and dup_r <= q.DOMAIN_MAX_DUP_R)
+        assert r.keep == (n >= DOMAIN_MIN_DOCS and dup_r <= DOMAIN_MAX_DUP_R)
 
 
 def test_ppm_dhash_kernel_hand_example_and_brightness_invariance(spark):
@@ -260,7 +275,7 @@ def test_group_ksample_exact_k_and_small_groups(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     sizes = Counter(lang for _, lang, _ in docs.values())
     for lang, rnks in per_lang.items():
-        want = min(q.KSAMPLE_K, sizes[lang])
+        want = min(KSAMPLE_K, sizes[lang])
         assert sorted(rnks) == list(range(1, want + 1)), lang
     # deterministic: same seed, same sample
     again = {(r.doc_id, r.rnk) for r in q.queries()["group_ksample"](spark, sf_dir).collect()}
@@ -273,7 +288,7 @@ def test_doc_edit_churn_planted_semantics(spark, sf_dir):
     ADD nothing; unedited docs read jaccard 1.0."""
     rows = q.queries()["doc_edit_churn"](spark, sf_dir).collect()
     for r in rows:
-        if r.doc_id % q.CHURN_EDIT_MOD != 0:
+        if r.doc_id % CHURN_EDIT_MOD != 0:
             assert r.line_jaccard == 1.0 and not r.churned, r
             assert r.n_added == 0 and r.n_removed == 0
         else:

@@ -7,7 +7,12 @@ merge is actually sensitive to getting those wrong.
 
 from pyspark.sql import functions as F
 
-import cassandra_data_migrator_spark.queries as Q
+from cassandra_data_migrator_spark.queries._shared import _t
+from cassandra_data_migrator_spark.queries.analytics import SCD2_DATES, q_scd2_history
+from cassandra_data_migrator_spark.queries.dedup_text import (
+    AGG_MV_CUTOFF,
+    q_agg_incremental_merge,
+)
 
 
 def _partial(o, pred):
@@ -26,8 +31,8 @@ def test_agg_merge_overlapping_boundary_double_counts(spark, sf_dir):
     the boundary day (>= cutoff − 1 month) must NOT equal the full
     recompute — proves the key's exclusive/inclusive split is load-bearing
     and the merge would expose a double-counted row, not absorb it."""
-    o = Q._t(spark, sf_dir, "orders")
-    cut = F.lit(Q.AGG_MV_CUTOFF)
+    o = _t(spark, sf_dir, "orders")
+    cut = F.lit(AGG_MV_CUTOFF)
     bad_delta_pred = F.col("o_orderdate") >= F.add_months(cut, -1)
     merged_bad = (
         _partial(o, F.col("o_orderdate") < cut)
@@ -50,7 +55,7 @@ def test_agg_merge_delta_scan_pushes_date_filter(spark, sf_dir):
     """The refresh side must read ONLY the delta: the o_orderdate >= cutoff
     predicate has to reach the parquet scan (PushedFilters), otherwise the
     'incremental' key silently rescans all of history every refresh."""
-    df = Q.q_agg_incremental_merge(spark, sf_dir)
+    df = q_agg_incremental_merge(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     import re
@@ -70,11 +75,11 @@ def test_scd2_invariants(spark, sf_dir):
     are disjoint and ordered (valid_to == next valid_from); (d) the
     planted delete-then-resurrect keys (mod 101) carry exactly two
     disjoint periods with a gap."""
-    rows = Q.q_scd2_history(spark, sf_dir).collect()
+    rows = q_scd2_history(spark, sf_dir).collect()
     by_key = {}
     for r in rows:
         by_key.setdefault(r.custkey, []).append(r)
-    d1, d2, d3 = Q.SCD2_DATES
+    d1, d2, d3 = SCD2_DATES
     saw_resurrect = 0
     for k, rs in by_key.items():
         rs.sort(key=lambda r: r.valid_from)
@@ -94,7 +99,7 @@ def test_scd2_invariants(spark, sf_dir):
 def test_scd2_change_rows_only(spark, sf_dir):
     """No-op snapshots must NOT open new periods: a key untouched by every
     planted mod rule has exactly one row spanning v1 -> open."""
-    rows = Q.q_scd2_history(spark, sf_dir).collect()
+    rows = q_scd2_history(spark, sf_dir).collect()
     by_key = {}
     for r in rows:
         by_key.setdefault(r.custkey, []).append(r)
@@ -105,7 +110,7 @@ def test_scd2_change_rows_only(spark, sf_dir):
     assert untouched
     for k in untouched:
         rs = by_key[k]
-        assert len(rs) == 1 and rs[0].valid_from == Q.SCD2_DATES[0]
+        assert len(rs) == 1 and rs[0].valid_from == SCD2_DATES[0]
         assert rs[0].is_current and rs[0].valid_to is None
 
 
@@ -162,7 +167,7 @@ def test_seq_align_hybrid_equals_cogrouped(spark, sf_dir):
         sequence_align_diff_cogrouped,
     )
 
-    e = Q._t(spark, sf_dir, "events")
+    e = _t(spark, sf_dir, "events")
     src = e.select("user_id", "ts", "event_id", "event_type")
     dst = e.filter(F.col("event_id") % 89 != 0).select(
         "user_id",

@@ -9,16 +9,18 @@ that makes the 8-bit shortlist near-exact.
 
 from pyspark.sql import functions as F
 
-import cassandra_data_migrator_spark.queries as Q
+from cassandra_data_migrator_spark.queries._shared import _t
+from cassandra_data_migrator_spark.queries.ann_pq import _sq8_audit
+from cassandra_data_migrator_spark.queries.dedup_text import _brute_topk
 
 
 def test_sq8_floor_is_sensitive(spark, sf_dir):
     """recall_ok is a real gate: a floor above 1.0 must turn it False on
     the same pipeline the green key runs (guards against a tautological
     TRUE column)."""
-    emb = Q._t(spark, sf_dir, "embeddings")
-    brute = Q._brute_topk(spark, sf_dir).select("query_id", "vec_id")
-    row = Q._sq8_audit(spark, emb, brute, 1.01).collect()[0]
+    emb = _t(spark, sf_dir, "embeddings")
+    brute = _brute_topk(spark, sf_dir).select("query_id", "vec_id")
+    row = _sq8_audit(spark, emb, brute, 1.01).collect()[0]
     assert row.recall_ok is False
     assert row.n_brute > 0
 

@@ -6,7 +6,7 @@ suppress rather than let overwrite newer state."""
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from cassandra_data_migrator_spark.queries import q_latest_event
+from cassandra_data_migrator_spark.queries.analytics import q_latest_event
 from cassandra_data_migrator_spark.sources.parquet import load_table
 from cassandra_data_migrator_spark.streaming.state import streaming_latest_state
 

@@ -7,9 +7,9 @@ caught, within-doc repeats count, and unique text reports zero.
 
 from pyspark.sql import functions as F
 
-from cassandra_data_migrator_spark import queries as q
+from cassandra_data_migrator_spark.queries.late_keys import SUBSTR_DEDUP_LEN
 
-L = q.SUBSTR_DEDUP_LEN
+L = SUBSTR_DEDUP_LEN
 
 
 def _run(spark, rows):

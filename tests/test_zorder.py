@@ -10,7 +10,10 @@ write path's actual directory-level pruning payoff.
 
 from pyspark.sql import functions as F
 
-from cassandra_data_migrator_spark import queries as q
+from cassandra_data_migrator_spark.queries.late_keys import (
+    ZORDER_BOX_Y,
+    q_zorder_prune_audit,
+)
 from cassandra_data_migrator_spark.sources import layout
 
 
@@ -51,7 +54,7 @@ def test_zorder_partitioned_write_prunes_directories(spark, sf_dir, tmp_path):
     layout.write_zordered(e, "user_id", "ts_us", path)
 
     r = spark.read.parquet(path)
-    y_lo, y_hi = q.ZORDER_BOX_Y
+    y_lo, y_hi = ZORDER_BOX_Y
     stats = r.groupBy("bkt").agg(F.min("ys").alias("mn"), F.max("ys").alias("mx"))
     touched = sorted(
         row["bkt"] for row in stats.filter(
@@ -93,7 +96,7 @@ def test_zorder_write_preserves_rows(spark, sf_dir, tmp_path):
 
 
 def test_zorder_prunes_on_fixture(spark, sf_dir):
-    row = q.q_zorder_prune_audit(spark, sf_dir).collect()[0]
+    row = q_zorder_prune_audit(spark, sf_dir).collect()[0]
     assert row["z_buckets_touched"] <= row["lin_buckets_touched"]
     # the box covers 1/4 of the y range: the 4x4 z grid confines it to
     # one y-stripe (4 buckets) while the x-linear layout scatters it

@@ -61,7 +61,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sys.path.insert(0, args.repo)
-    from cassandra_data_migrator_spark.queries.registry import queries
+    from cassandra_data_migrator_spark.queries import queries
 
     declared = list(queries().keys())
     last = key_last_rounds(args.repo)

@@ -62,7 +62,7 @@ def main() -> None:
         validation,
         windows,
     )
-    from cassandra_data_migrator_spark.queries import zorder_prune_stats
+    from cassandra_data_migrator_spark.queries.late_keys import zorder_prune_stats
     from cassandra_data_migrator_spark.operators.align import (
         sequence_align_diff,
     )
