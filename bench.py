@@ -102,14 +102,12 @@ def main() -> None:
         for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
             rdd.unpersist()
 
-    # r13 measurement fix (r12 verdict #1 — MANDATED; see OPTIMIZATION_r13.md
-    # "Bench harness changes"): standing parquet artifacts (_session_artifact)
-    # used to be built once per session and re-read by every later consumer
-    # key AND by runs 2-3 of the building key itself, so every artifact-backed
-    # key's bench number was the cost of a parquet filter, not of its declared
-    # derivation. Purging the artifact memo+dirs before EVERY timed run makes
-    # each run pay the full build; results are unchanged (builds are
-    # deterministic, memo was always per-application).
+    # Standing parquet artifacts (session.artifact) are built once per
+    # application and re-read by every later consumer, so without a purge an
+    # artifact-backed key's number would be the cost of a parquet filter, not
+    # of its declared derivation. Purging the artifacts before EVERY timed
+    # run makes each run pay the full build; results are unchanged (builds
+    # are deterministic). Memos (training) survive the purge.
     _purge_artifacts = q.purge_session_artifacts
 
     registry = q.queries()

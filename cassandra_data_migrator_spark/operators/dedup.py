@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cassandra_data_migrator_spark.functions.text import shingles_from_tokens, tokens
+from cassandra_data_migrator_spark.session import memo
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -317,9 +318,6 @@ def _bucketed_pairs(
     return _pairs_from_sorted_ids(grouped, max_bucket_size).distinct()
 
 
-_PREFIX_FILTER_CACHE: dict = {}
-
-
 def prefix_filter_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -365,10 +363,11 @@ def prefix_filter_jaccard_pairs(
     answer — only cost candidates.
 
     Caching: ``docs`` (the per-doc ordered sets, read 3×: prefix explode
-    + both verification sides) is persisted behind a ONE-SLOT keyed memo:
-    an identical invocation reuses the materialized table, a different
-    input unpersists the previous slot — so a long-lived session holds at
-    most one cached copy rather than accumulating per input. The prefix
+    + both verification sides) is persisted behind a ONE-SLOT keyed memo,
+    the ``session.memo`` entry ``"prefix_filter"``: an identical invocation
+    reuses the materialized table, a different input unpersists the
+    previous slot — so a long-lived session holds at most one cached copy
+    rather than accumulating per input. The prefix
     buckets run UNBOUNDED (``max_bucket_size=
     None``): the prefix lemma needs every in-bucket pair for exactness,
     so a clone-flood corpus (f near-identical docs sharing a rare prefix
@@ -380,18 +379,16 @@ def prefix_filter_jaccard_pairs(
     the data. If the files behind an identical plan are rewritten in
     place within one session, the memo returns the previously persisted
     ordered-sets table (Spark's own CacheManager plan-matching behaved the
-    same before this was made explicit module state). Stop/recreate the
-    session, vary a param, or clear ``_PREFIX_FILTER_CACHE`` after an
-    in-place rewrite."""
+    same before the memo was explicit). Stop/recreate the session, vary a
+    param, or clear the slot after an in-place rewrite."""
     t_relaxed = threshold - 0.001
-    # One-slot keyed memo (ADVICE r09 cache hygiene): identical invocations
-    # (same analyzed input plan + params) REUSE the persisted ordered-sets
-    # table — previously this worked by accident through CacheManager
-    # plan-matching, and a naive eager unpersist regressed the bench key
-    # 3.35x by rematerializing per run. A DIFFERENT input evicts the
-    # previous slot, so a long-lived session holds at most one copy.
+    # Identical invocations (same analyzed input plan + params) REUSE the
+    # persisted ordered-sets table: a naive eager unpersist regressed the
+    # bench key 3.35x by rematerializing per run. A DIFFERENT input evicts
+    # the previous slot. A slot never outlives its application: the
+    # session record is replaced with the SparkContext.
+    slot = memo(df.sparkSession, "prefix_filter", dict)
     cache_key = (
-        df.sparkSession.sparkContext.applicationId,
         id_col,
         text_col,
         n,
@@ -401,8 +398,8 @@ def prefix_filter_jaccard_pairs(
         # embeds fresh #exprIds per invocation and never matches)
         df._jdf.queryExecution().analyzed().canonicalized().toString(),
     )
-    if _PREFIX_FILTER_CACHE.get("key") == cache_key:
-        docs = _PREFIX_FILTER_CACHE["docs"]
+    if slot.get("key") == cache_key:
+        docs = slot["docs"]
     else:
         toked = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
         sets = (
@@ -439,17 +436,9 @@ def prefix_filter_jaccard_pairs(
             )
             .persist()
         )
-        prev = _PREFIX_FILTER_CACHE.get("docs")
-        if prev is not None:
-            # Best-effort eviction: the evicted slot may belong to a STOPPED
-            # SparkSession (a new applicationId misses the key), and py4j
-            # unpersist on a dead context raises — which would fail the first
-            # invocation in the new session for pure bookkeeping.
-            try:
-                prev.unpersist(blocking=False)
-            except Exception:
-                pass
-        _PREFIX_FILTER_CACHE.update(key=cache_key, docs=docs)
+        if "docs" in slot:
+            slot["docs"].unpersist(blocking=False)
+        slot.update(key=cache_key, docs=docs)
     prefix_len = F.greatest(
         F.lit(1),
         (

@@ -19,7 +19,6 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
     TRAIN_SHUFFLE_SEED,
     TRAIN_SHUFFLE_SHARDS,
     Window,
-    _scratch_dir,
     _t,
     attach_event_ttls,
     attach_event_writetimes,
@@ -42,6 +41,7 @@ from cassandra_data_migrator_spark.queries.dedup_text import (  # noqa: F401
     _ivf_centroids,
     q_dedup_clusters,
 )
+from cassandra_data_migrator_spark.session import scratch_dir
 
 def _ndcg_discounts() -> list[str]:
     """1/log2(rank+1) for ranks 1..TOPK_K as 12dp DECIMAL literal strings —
@@ -1080,23 +1080,13 @@ def q_embedding_quantize(spark, sf_dir):
     )
 
 
-def _roundtrip_dir(spark, sf_dir, fmt):
-    import os
-
-    return _scratch_dir(
-        spark,
-        "cdm_spark_roundtrip",
-        f"{fmt}_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-
-
 def q_json_roundtrip(spark, sf_dir):
     """JSON-lines sink → source round-trip (SURVEY §2 source/sink surface
     beyond parquet): write documents as JSONL, read back with an explicit
     schema (schema inference would be a second full scan at 100 TB), verify
     via content checksums. Lossless for strings — text rides along."""
     d = _t(spark, sf_dir, "documents")
-    out = _roundtrip_dir(spark, sf_dir, "json")
+    out = scratch_dir(spark, "roundtrip", "json", sf_dir)
     d.select("doc_id", "lang", "n_chars", "text").write.mode("overwrite").json(out)
     back = spark.read.schema("doc_id bigint, lang string, n_chars bigint, text string").json(out)
     return back.agg(
@@ -1111,7 +1101,7 @@ def q_csv_roundtrip(spark, sf_dir):
     """CSV sink → source round-trip with header + explicit schema (the other
     interchange format the reference's users move data through)."""
     o = _t(spark, sf_dir, "orders")
-    out = _roundtrip_dir(spark, sf_dir, "csv")
+    out = scratch_dir(spark, "roundtrip", "csv", sf_dir)
     o.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice").write.mode(
         "overwrite"
     ).option("header", True).csv(out)
@@ -1130,7 +1120,7 @@ def q_orc_roundtrip(spark, sf_dir):
     JSONL/CSV). ORC is self-describing — the read needs no schema and no
     inference scan; verified via decimal-exact checksums."""
     li = _t(spark, sf_dir, "lineitem")
-    out = _roundtrip_dir(spark, sf_dir, "orc")
+    out = scratch_dir(spark, "roundtrip", "orc", sf_dir)
     li.select("l_orderkey", "l_partkey", "l_quantity", "l_returnflag").write.mode(
         "overwrite"
     ).orc(out)
@@ -1905,9 +1895,7 @@ def q_schema_evolution(spark, sf_dir):
     import os
 
     o = _t(spark, sf_dir, "orders")
-    base = _scratch_dir(
-        spark, "cdm_spark_evolve", f"{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    base = scratch_dir(spark, "evolve", sf_dir)
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_custkey")
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1958,14 +1946,10 @@ def q_migrate_incremental(spark, sf_dir):
     state directly — proving the merge neither dropped base rows nor kept
     stale versions. At 100 TB the merge is one PK shuffle (lakehouse formats
     make the rewrite a metadata swap; the merge plan is format-agnostic)."""
-    import os
-
     from cassandra_data_migrator_spark.plans.upsert import upsert_parquet
 
     o = _t(spark, sf_dir, "orders")
-    base = _scratch_dir(
-        spark, "cdm_spark_incr", f"{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    base = scratch_dir(spark, "incr", sf_dir)
     o.write.mode("overwrite").parquet(base)
     delta = o.filter(F.col("o_orderkey") % 10 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + 1000.0
@@ -1998,8 +1982,6 @@ def q_migrate_writetime_roundtrip(spark, sf_dir):
     any dropped base row, surviving stale row, or lost shift changes a sum.
     Scale: the merge is ONE PK shuffle (row_number over pk ordered by
     writetime); the rewrite is the standard compact-and-swap."""
-    import os
-
     from cassandra_data_migrator_spark.plans.upsert import upsert_parquet
 
     # spread_by on the events source was tried and REJECTED by
@@ -2014,9 +1996,7 @@ def q_migrate_writetime_roundtrip(spark, sf_dir):
         max_writetime(["__writetime_value", "__writetime_props"]).alias("__writetime"),
         max_ttl(["__ttl_value", "__ttl_props"]).alias("__ttl"),
     )
-    path = _scratch_dir(
-        spark, "cdm_spark_wtrt", f"{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch_dir(spark, "wtrt", sf_dir)
     base.write.mode("overwrite").parquet(path)
     winning = (
         base.filter(F.col("event_id") % 10 == 0)

@@ -11,7 +11,6 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
     TOPK_QUERY_PRED,
     Window,
     _nll4_exact,
-    _session_artifact,
     _t,
     tokens,
 )
@@ -30,6 +29,7 @@ from cassandra_data_migrator_spark.queries.lm_quality import (  # noqa: F401
     DOMAIN_TLDS,
     KN_DISCOUNT,
 )
+from cassandra_data_migrator_spark.session import artifact, memo
 
 PQ_BLOCKS = 8  # subvector blocks (64-dim fixture -> 8 dims per block)
 PQ_CODES = 16  # codewords per block codebook
@@ -57,34 +57,30 @@ def _shortlist_size(n_rows: int) -> int:
     return max(PQ_SHORTLIST, -(-(8 * n_rows) // 100))  # ceil(0.08·n)
 
 
-_PQ_CODEBOOKS_CACHE: dict = {}
-
-
-def _pq_codebooks(spark, base, cache_key):
-    """Per-session memo of the trained PQ codebooks (the _ivf_centroids
-    precedent): lloyd_kmeans is deterministic (pinned init + DECIMAL mean
-    sums), so memoization changes cost, never results — bench's 3 runs and
-    the plan tests stop retraining 8 codebooks per call. ``base`` is a
-    ZERO-ARG CALLABLE returning the training table: it is only
-    invoked on a memo miss, so callers don't build the table per call."""
+def _pq_codebooks(spark, base, col, cache_key):
+    """The trained PQ codebooks: per block, lloyd_kmeans over that slice of
+    array column ``col`` (``__v`` for plain PQ, the residual ``__r`` for
+    IVFADC). A ``session.memo`` keyed by (col, cache_key): lloyd_kmeans is
+    deterministic (pinned init + DECIMAL mean sums), so the memo changes
+    cost, never results, and bench's runs and the plan tests stop
+    retraining 8 codebooks per call. ``base`` is a ZERO-ARG CALLABLE
+    returning the training table, invoked only on a memo miss, so callers
+    don't build the table per call."""
     from cassandra_data_migrator_spark.operators import cluster as cl
 
-    key = (spark.sparkContext.applicationId, cache_key)
-    if key not in _PQ_CODEBOOKS_CACHE:
-        base = base()  # lazy: the training table is only built on a miss
-        dim = 64
-        bs = dim // PQ_BLOCKS
+    def _train():
+        table = base()
+        bs = 64 // PQ_BLOCKS
         books = []
         for m in range(PQ_BLOCKS):
-            blk = base.select(
-                "vec_id", F.slice("__v", m * bs + 1, bs).alias("__b")
-            )
+            blk = table.select("vec_id", F.slice(col, m * bs + 1, bs).alias("__b"))
             _, cents = cl.lloyd_kmeans(
                 blk, "__b", "vec_id", k=PQ_CODES, iters=PQ_ITERS
             )
             books.append(cents)
-        _PQ_CODEBOOKS_CACHE[key] = books
-    return _PQ_CODEBOOKS_CACHE[key]
+        return books
+
+    return memo(spark, ("pq_codebooks", col, cache_key), _train)
 
 
 def _pq_audit(spark, emb, brute, floor, cache_key, cents, nprobe=None,
@@ -144,11 +140,12 @@ def _pq_audit(spark, emb, brute, floor, cache_key, cents, nprobe=None,
     # the training-miss path instead.
     codebooks = _pq_codebooks(
         spark,
-        lambda: _session_artifact(
+        lambda: artifact(
             spark,
             f"pq_unit_base|{cache_key}",
             lambda: emb.select("vec_id", unit_udf_factory()(v).alias("__v")),
         ),
+        "__v",
         cache_key,
     )
 
@@ -185,7 +182,7 @@ def _pq_audit(spark, emb, brute, floor, cache_key, cents, nprobe=None,
             ],
         )
 
-    enc = _session_artifact(spark, f"pq_index|{cache_key}", _build_index)
+    enc = artifact(spark, f"pq_index|{cache_key}", _build_index)
 
     # The codebook is DATA too — a 128-row (block, code, centroid) table
     # beside the index. Building the LUTs as a query x codebook join keeps
@@ -194,7 +191,7 @@ def _pq_audit(spark, emb, brute, floor, cache_key, cents, nprobe=None,
     # query column, which was correct and query-count-invariant but cost
     # ~5.5 s of DRIVER-side py4j Column construction on EVERY call
     # (measured; execution itself was 0.2 s). Built directly from the
-    # memoized codebook lists — the former _session_artifact parquet
+    # memoized codebook lists — the former parquet artifact
     # round-trip (a write job + read per run under the honest bench) was
     # pure overhead for a 128-row driver-side table.
     books = spark.createDataFrame(
@@ -644,7 +641,7 @@ def _ivfadc_residual_audit(spark, emb, brute, floor, cache_key, cents,
 
     def _cents_build():
         # Built directly (8 rows from the memoized centroid list): the
-        # former _session_artifact parquet round-trip per run was pure
+        # former parquet artifact round-trip per run was pure
         # overhead once the bench purges artifacts per run.
         import math
 
@@ -685,22 +682,12 @@ def _ivfadc_residual_audit(spark, emb, brute, floor, cache_key, cents,
         )
 
     def _residual_base():
-        return _session_artifact(
+        return artifact(
             spark, f"ivfadc_res_base|{cache_key}", _residual_base_build
         )
 
-    # residual codebooks: lloyd per block on the residual table (same
-    # bounded driver state class as _pq_codebooks; per-session memo)
-    key = (spark.sparkContext.applicationId, "res", cache_key)
-    if key not in _PQ_CODEBOOKS_CACHE:
-        rb = _residual_base()
-        books = []
-        for m in range(PQ_BLOCKS):
-            blk = rb.select("vec_id", F.slice("__r", m * bs + 1, bs).alias("__b"))
-            _, cbs = cl.lloyd_kmeans(blk, "__b", "vec_id", k=PQ_CODES, iters=PQ_ITERS)
-            books.append(cbs)
-        _PQ_CODEBOOKS_CACHE[key] = books
-    codebooks = _PQ_CODEBOOKS_CACHE[key]
+    # residual codebooks: the same trainer over the residual column
+    codebooks = _pq_codebooks(spark, _residual_base, "__r", cache_key)
 
     def _build_index():
         # per-block residual codes through the Arrow exact-decimal argmin
@@ -724,7 +711,7 @@ def _ivfadc_residual_audit(spark, emb, brute, floor, cache_key, cents,
             ],
         )
 
-    enc = _session_artifact(spark, f"ivfadc_res_index|{cache_key}", _build_index)
+    enc = artifact(spark, f"ivfadc_res_index|{cache_key}", _build_index)
 
     # 128-row driver-list table built directly (see _pq_audit's books)
     books_df = spark.createDataFrame(
@@ -889,7 +876,7 @@ def _jl_matrix(spark):
             schema="j int, pvec array<double>",
         )
 
-    return _session_artifact(spark, "jl_matrix", _build)
+    return artifact(spark, "jl_matrix", _build)
 
 
 def _jl_project_expr(base, mat):
@@ -1289,7 +1276,7 @@ def _curation_survivors(spark, sf_dir):
             "doc_id", "text"
         )
 
-    return _session_artifact(spark, f"curation_surv|{sf_dir}", _build)
+    return artifact(spark, f"curation_surv|{sf_dir}", _build)
 
 
 def q_curation_pipeline(spark, sf_dir):

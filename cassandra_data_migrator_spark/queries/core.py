@@ -15,8 +15,6 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
     WRITETIME_MAX_US,
     WRITETIME_MIN_US,
     _ORDER_COMPARE_COLS,
-    _binfile_stage_dir,
-    _scratch_dir,
     _t,
     attach_event_ttls,
     attach_event_writetimes,
@@ -34,6 +32,7 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
     transforms,
     validation,
 )
+from cassandra_data_migrator_spark.session import scratch_dir
 
 # ---------------------------------------------------------------------------
 # 2a reference-surface queries
@@ -288,8 +287,7 @@ def q_run_tracking_resume(spark, sf_dir):
     pass would re-process. The oracle recomputes the planted status table and
     the slice row counts from the orders table in SQL — a tracker that loses
     a status update, resumes a passed slice, or skips a pending one turns
-    the key red. The tracking dir is session-scoped (same mkdtemp discipline
-    as the binaryFile staging dir)."""
+    the key red. The tracking dir is a ``session.scratch_dir``."""
     from cassandra_data_migrator_spark.plans.tracking import (
         STATUS_FAILED,
         STATUS_PASSED,
@@ -297,7 +295,7 @@ def q_run_tracking_resume(spark, sf_dir):
     )
 
     o = _t(spark, sf_dir, "orders")
-    tracker = RunTracker(spark, _binfile_stage_dir(spark, sf_dir + "#runs"))
+    tracker = RunTracker(spark, scratch_dir(spark, "runs", sf_dir))
     run_id = tracker.start_run("migrate", num_slices=TRACK_SLICES)
     passed = [
         s
@@ -325,8 +323,6 @@ def q_run_tracking_resume(spark, sf_dir):
 def q_migrate_rowcount(spark, sf_dir):
     """End-to-end migrate: read → feature pipeline → parquet sink → re-read →
     count (SURVEY.md §2 #3; the e2e smoke of the migrate job)."""
-    import os
-
     o = _t(spark, sf_dir, "orders")
     piped = transforms.where_filter(
         transforms.constant_columns(o, {"migrated_by": ("cdm-spark", "string")}),
@@ -334,8 +330,6 @@ def q_migrate_rowcount(spark, sf_dir):
     )
     # unique per-session output dir: concurrent runs (bench + verify, two
     # sessions on one fixture) must not race on the same path
-    out = _scratch_dir(
-        spark, "cdm_spark_migrate", f"{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    out = scratch_dir(spark, "migrate", sf_dir)
     piped.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out).agg(F.count(F.lit(1)).cast("bigint").alias("written_cnt"))

@@ -16,8 +16,6 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
     TOPK_K,
     TOPK_QUERY_PRED,
     Window,
-    _scratch_dir,
-    _session_artifact,
     _t,
     dedup,
     fingerprint,
@@ -31,6 +29,7 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
     tokens,
 )
 from cassandra_data_migrator_spark.operators.partition import spread_by
+from cassandra_data_migrator_spark.session import artifact, memo, scratch_dir
 
 # ---------------------------------------------------------------------------
 # 2b north-star extension queries
@@ -192,7 +191,7 @@ def _simhash_sigs(spark, sf_dir):
     1-split fixture scan, and hash partitioning keeps each doc's tokens
     together so the per-doc partial agg still combines map-side (isolated
     build: 2.81 → 2.12 s; pass-through at production split counts)."""
-    return _session_artifact(
+    return artifact(
         spark,
         f"simhash_sigs|{sf_dir}",
         lambda: dedup.simhash(
@@ -208,7 +207,7 @@ def _minhash_sigs(spark, sf_dir):
     the build input — 32 xxhash64 per shingle is the heavy map side; the
     per-doc min-agg combines map-side either way (isolated build:
     1.44 → 0.71 s)."""
-    return _session_artifact(
+    return artifact(
         spark,
         f"minhash_sigs|{sf_dir}",
         lambda: dedup.minhash_signatures(
@@ -223,7 +222,7 @@ def _simhash_pairs(spark, sf_dir):
     re-banding + hamming refine) is deterministic, and BOTH consumers
     (simhash_near_dup, simhash_recall_audit) need the identical set — one
     derivation per session instead of two."""
-    return _session_artifact(
+    return artifact(
         spark,
         f"simhash_pairs|{sf_dir}",
         lambda: dedup.simhash_near_dup_pairs(
@@ -242,7 +241,7 @@ def _brute_topk(spark, sf_dir):
     probe-bounded BNLJ pass per session instead of three; a real pipeline
     keeps exactly this table as its ANN ground-truth eval set."""
     emb = _t(spark, sf_dir, "embeddings")
-    return _session_artifact(
+    return artifact(
         spark,
         f"brute_topk|{sf_dir}",
         lambda: similarity.brute_force_topk(
@@ -255,36 +254,26 @@ def q_topk_similarity(spark, sf_dir):
     return _brute_topk(spark, sf_dir)
 
 
-# Per-session memo of trained IVF centroids keyed by (applicationId,
-# sf_dir) (the same
-# shared-derivation precedent as the graph keys' localCheckpoint reuse):
-# the trainer is deterministic — pinned smallest-id init + DECIMAL mean
-# sums (operators/cluster.lloyd_kmeans) — so memoization changes cost,
-# never results. Both IVF keys (topk_similarity_ivf, ivf_recall_audit)
-# probe the SAME trained cells, as a real IVF index would.
-_IVF_CENTROIDS_CACHE: dict = {}
-
-
 def _ivf_centroids(spark, sf_dir, variant="uniform", emb_df=None):
     """Train the IVF coarse quantizer end-to-end: 8
     Lloyd cells over the embedding corpus instead of the old `vec_id % 97`
     sample. Returns [(cell_id, centroid_vector)] for similarity.ivf_topk.
     ``variant``/``emb_df`` select an alternate training table (the
-    clustered fixture) under its own memo slot — one memoization, every
-    quantizer."""
+    clustered fixture) under its own memo key.
+
+    A ``session.memo`` keyed by (sf_dir, variant): the trainer is
+    deterministic (pinned smallest-id init + DECIMAL mean sums, see
+    operators/cluster.lloyd_kmeans), so the memo changes cost, never
+    results, and both IVF keys (topk_similarity_ivf, ivf_recall_audit)
+    probe the SAME trained cells, as a real IVF index would."""
     from cassandra_data_migrator_spark.operators.cluster import lloyd_kmeans
 
-    # keyed by (applicationId, sf_dir) for parity with _session_artifact —
-    # a NEW session over regenerated fixture data at the same path must
-    # retrain, never reuse another application's centroids
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    if key not in _IVF_CENTROIDS_CACHE:
+    def _train():
         emb = emb_df if emb_df is not None else _t(spark, sf_dir, "embeddings")
         _, cents = lloyd_kmeans(emb, "embedding", "vec_id", k=KMEANS_K, iters=KMEANS_ITERS)
-        _IVF_CENTROIDS_CACHE[key] = [
-            (i, [float(x) for x in c]) for i, c in enumerate(cents)
-        ]
-    return _IVF_CENTROIDS_CACHE[key]
+        return [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
+
+    return memo(spark, ("ivf_centroids", sf_dir, variant), _train)
 
 
 def q_topk_similarity_ivf(spark, sf_dir):
@@ -312,19 +301,13 @@ def q_dedup_embedding_lsh(spark, sf_dir):
     return similarity.cosine_near_dup_bucketed(emb, threshold=NEAR_DUP_THRESHOLD)
 
 
-# Per-session memo of the near-dup EDGE LIST, keyed by (applicationId,
-# sf_dir, threshold) so a stale entry can never leak across sessions. Five
-# graph-over-duplicates keys consume the identical standard-threshold pair
-# list (dedup_clusters, graph_triangles, edit_distance_pairs, graph_degree,
+# The near-dup EDGE LIST is a ``session.artifact``: five graph-over-
+# duplicates keys consume the identical standard-threshold pair list
+# (dedup_clusters, graph_triangles, edit_distance_pairs, graph_degree,
 # pagerank_dup_graph) and the two recall audits share the exact pair set at
 # the audit threshold — in a real pipeline the edge list is derived once
-# and shared. Materialized as a session-scoped PARQUET
-# table, NOT a localCheckpoint: cached blocks can be unpersisted by a
-# host's between-key cleanup (bench.py's _drop_cached_blocks did exactly
-# that, yielding CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the next consumer),
-# while a standing on-disk table — the production shape anyway — survives
-# any cache policy. Derivation is deterministic, so memoization changes
-# cost, never results. (Mechanics now live in _session_artifact.)
+# and shared. Derivation is deterministic, so sharing changes cost, never
+# results.
 
 
 NGRAM_BASE_THRESHOLD = 0.1  # == min(multimodal_keys.SWEEP_THRESHOLDS); the
@@ -348,7 +331,7 @@ def _ngram_scored_pairs(spark, sf_dir):
     # code). No reliable end-to-end win — left unspread, matching the earlier
     # spread() rejection for this family (the 1-split build lets the first
     # partial agg dedup repeated shingles map-side).
-    return _session_artifact(
+    return artifact(
         spark,
         f"ngram_scored|{sf_dir}|{NGRAM_BASE_THRESHOLD}",
         lambda: dedup.ngram_jaccard_pairs(
@@ -377,7 +360,7 @@ def _cluster_label_artifact(spark, sf_dir):
     dedup_cluster_sizes and dedup_canonical; a real pipeline checkpoints
     the components table once. Same loop, same labels — consumers differ
     only in what they join/aggregate on top."""
-    return _session_artifact(
+    return artifact(
         spark,
         f"ngram_cluster_labels|{sf_dir}|{NGRAM_THRESHOLD}",
         lambda: dedup.cluster_labels(_ngram_pairs(spark, sf_dir)),
@@ -772,12 +755,8 @@ def q_partitioned_sink_prune(spark, sf_dir):
     scan must list/touch only the selected partition directory (PartitionFilters
     in the plan, pinned by tests/test_plans.py) — at 100 TB this is the
     difference between scanning 1/5th of the lake and all of it."""
-    import os
-
     e = _t(spark, sf_dir, "events")
-    out = _scratch_dir(
-        spark, "cdm_spark_partitioned", f"{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    out = scratch_dir(spark, "partitioned", sf_dir)
     e.select("event_id", "user_id", "value", "event_type").write.mode(
         "overwrite"
     ).partitionBy("event_type").parquet(out)
@@ -878,7 +857,7 @@ def q_agg_incremental_merge(spark, sf_dir):
             F.max(price).alias("max_price"),
         )
 
-    hist = _session_artifact(
+    hist = artifact(
         spark,
         f"aggmv|{sf_dir}",
         lambda: partial(o.filter(F.col("o_orderdate") < F.lit(AGG_MV_CUTOFF))),

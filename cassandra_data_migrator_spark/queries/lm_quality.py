@@ -11,8 +11,6 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
     TOKS_SQL,
     Window,
     _nll4_exact,
-    _scratch_dir,
-    _session_artifact,
     _t,
     dedup,
     pmod_100,
@@ -25,6 +23,7 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
 from cassandra_data_migrator_spark.queries.dedup_text import (  # noqa: F401
     _ngram_pairs,
 )
+from cassandra_data_migrator_spark.session import artifact, scratch_dir
 
 LM_ADD_K = 0.5  # add-k smoothing constant of the bigram LM
 HH_THRESHOLD_FRAC = 0.0008  # heavy hitter = key with >= 0.08% of all events
@@ -45,7 +44,7 @@ def q_ccnet_bucket_mix(spark, sf_dir):
     # session-shared LM score table (the _brute_topk precedent): the
     # corpus-trained bigram LM builds once per session; this key reads the
     # standing artifact instead of re-aggregating the whole token stream
-    scored = _session_artifact(
+    scored = artifact(
         spark, f"lm_scored|{sf_dir}", lambda: q_lm_perplexity(spark, sf_dir)
     )
     ranked = rank_ops.global_rank(scored, "nll", "doc_id", pos_col="pos")
@@ -162,14 +161,10 @@ def q_jsonl_quarantine(spark, sf_dir):
     sums), (b) every corrupted line is quarantined, none dropped, none
     leaked into the good path. The write is executor-side text output —
     the same side-effect e2e shape as migrate_rowcount."""
-    import os
-
     from cassandra_data_migrator_spark.sources import jsonl
 
     d = _t(spark, sf_dir, "documents")
-    path = _scratch_dir(
-        spark, "cdm_spark_jsonl", f"{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = scratch_dir(spark, "jsonl", sf_dir)
     jsonl.write_jsonl(
         d, path, corrupt_expr=F.col("doc_id") % JSONL_CORRUPT_MOD == 0
     )
@@ -419,9 +414,7 @@ def q_backfill_overwrite(spark, sf_dir):
     from cassandra_data_migrator_spark.sources import layout
 
     e = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    base = _scratch_dir(
-        spark, "cdm_spark_backfill", f"{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    base = scratch_dir(spark, "backfill", sf_dir)
     path = os.path.join(base, "tbl")
     layout.write_partitioned(e, path, "event_type")
     batch = e.filter(
@@ -448,9 +441,7 @@ def q_file_compaction(spark, sf_dir):
     from cassandra_data_migrator_spark.sources import layout
 
     e = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    base = _scratch_dir(
-        spark, "cdm_spark_compact", f"{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    base = scratch_dir(spark, "compact", sf_dir)
     frag_path, comp_path = os.path.join(base, "frag"), os.path.join(base, "comp")
     e.repartition(COMPACT_FRAGMENT_FILES).write.mode("overwrite").parquet(frag_path)
     layout.compact(spark, frag_path, comp_path, COMPACT_TARGET_ROWS)

@@ -9,7 +9,6 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
     TOPK_K,
     TOPK_QUERY_PRED,
     Window,
-    _binfile_stage_dir,
     _t,
     codecs,
     dedup,
@@ -23,6 +22,7 @@ from cassandra_data_migrator_spark.queries.dedup_text import (  # noqa: F401
     _brute_topk,
     _ngram_pairs,
 )
+from cassandra_data_migrator_spark.session import scratch_dir
 
 def q_multimodal_extract(spark, sf_dir):
     """Multimodal binary-column pipeline under the DRIVER check (E10 was
@@ -48,24 +48,6 @@ def q_multimodal_extract(spark, sf_dir):
 PPM_W = 4  # fixture image width (pixels); 3 bytes/pixel
 PPM_MAX_H = 8  # fixture image height cap
 
-# session-scoped binaryFile staging dirs, keyed by (applicationId, sf_dir)
-# like _SESSION_ARTIFACTS — mkdtemp (0700, unpredictable name) + atexit
-# cleanup, so nothing stale or attacker-planted is ever globbed back in
-
-
-
-
-
-
-
-
-
-
-
-
-
-
-
 
 def q_binaryfile_ingest(spark, sf_dir):
     """Multimodal FILE ingest through Spark's ``binaryFile`` source — the
@@ -82,14 +64,13 @@ def q_binaryfile_ingest(spark, sf_dir):
     red. Writes are deterministic and idempotent (same bytes, same
     names), so re-runs are safe.
 
-    The staging dir is session-scoped and unpredictable — one mkdtemp
-    (0700) per (applicationId, sf_dir), atexit-cleaned — never a fixed
-    world-shared /tmp path, which would glob back phantom files from
-    prior runs over a different document set, collide across concurrent
-    fixtures, and invite tmp-squatting/symlink attacks on multi-user
-    hosts. The read-back is additionally restricted to the media ids
-    produced THIS run via a broadcast semi-join."""
-    out_dir = _binfile_stage_dir(spark, sf_dir)
+    The staging dir is a ``session.scratch_dir`` keyed by the fixture
+    path: under the application's private (0700, unpredictable) scratch
+    root, never a fixed world-shared /tmp path that would glob back
+    phantom files from prior runs, collide across fixtures, or invite
+    tmp-squatting. The read-back is additionally restricted to the media
+    ids produced THIS run via a broadcast semi-join."""
+    out_dir = scratch_dir(spark, "binaryfile", sf_dir)
 
     d = _t(spark, sf_dir, "documents")
     san = F.regexp_replace(F.col("text"), "[^ -~]", "")

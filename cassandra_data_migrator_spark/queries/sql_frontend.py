@@ -11,7 +11,6 @@ from cassandra_data_migrator_spark.queries._shared import (  # noqa: F401
     TOPK_K,
     TOPK_QUERY_PRED,
     Window,
-    _session_artifact,
     _t,
     attach_event_ttls,
     attach_event_writetimes,
@@ -30,6 +29,7 @@ from cassandra_data_migrator_spark.queries.dedup_text import (  # noqa: F401
     _simhash_pairs,
     _simhash_sigs,
 )
+from cassandra_data_migrator_spark.session import artifact
 
 TPCH_Q1_SQL = """
     SELECT l_returnflag, l_linestatus,
@@ -381,7 +381,7 @@ def _clustered_emb(spark, sf_dir):
         )
         return (s - F.floor(s)) * 2.0 - 1.0
 
-    return _session_artifact(
+    return artifact(
         spark,
         f"clustered_emb|{sf_dir}",
         lambda: emb.select(
@@ -398,7 +398,7 @@ def _brute_topk_clustered(spark, sf_dir):
     """Session-shared exact top-k ground truth over the clustered table
     (one probe-bounded BNLJ pass feeding both clustered audits)."""
     emb = _clustered_emb(spark, sf_dir)
-    return _session_artifact(
+    return artifact(
         spark,
         f"brute_topk_clustered|{sf_dir}",
         lambda: similarity.brute_force_topk(
@@ -446,7 +446,7 @@ def q_ann_recall_clustered(spark, sf_dir):
 def q_ivf_recall_clustered(spark, sf_dir):
     """IVF recall contract on the CLUSTERED fixture (aggregate ≥ 0.9;
     measured 1.0 at all scales): lloyd-trains the coarse quantizer on the
-    clustered table itself (memoized per (applicationId, sf_dir) alongside
+    clustered table itself (a session memo keyed by sf_dir, beside
     the uniform cells), then probes nprobe=2 — the full train → assign →
     probe path under a floor that reflects clustered-corpus reality."""
     emb = _clustered_emb(spark, sf_dir)

@@ -27,9 +27,9 @@ from cassandra_data_migrator_spark.functions.html import (
 from cassandra_data_migrator_spark.queries._shared import (
     F,
     Window,
-    _binfile_stage_dir,
     _t,
 )
+from cassandra_data_migrator_spark.session import scratch_dir
 
 WARC_GROUPS = 32  # docs per fixture: doc_id % 32 → one .warc file per group
 WARCINFO_BLOCK = "software: cdm-spark\r\n"  # 21 bytes
@@ -146,7 +146,7 @@ def q_warc_ingest(spark, sf_dir):
     documents table — plus one warcinfo row per produced file."""
     from cassandra_data_migrator_spark.sources.warc import warc_records
 
-    out_dir = _binfile_stage_dir(spark, sf_dir, tag="warc")
+    out_dir = scratch_dir(spark, "warc", sf_dir)
 
     d = _t(spark, sf_dir, "documents")
     html = _doc_html(F.col("doc_id"), _san(F.col("text")))
@@ -215,7 +215,7 @@ def q_warc_gzip_ingest(spark, sf_dir):
     turns the key red against the uncompressed derivation."""
     from cassandra_data_migrator_spark.sources.warc import warc_gzip_records
 
-    out_dir = _binfile_stage_dir(spark, sf_dir, tag="warcgz")
+    out_dir = scratch_dir(spark, "warcgz", sf_dir)
 
     d = _t(spark, sf_dir, "documents")
     html = _doc_html(F.col("doc_id"), _san(F.col("text")))
@@ -417,7 +417,7 @@ def q_warc_charset_extract(spark, sf_dir):
     )
     from cassandra_data_migrator_spark.sources.warc import warc_decoded_pages
 
-    out_dir = _binfile_stage_dir(spark, sf_dir, tag="warccs")
+    out_dir = scratch_dir(spark, "warccs", sf_dir)
 
     d = _t(spark, sf_dir, "documents")
     html = _charset_html(F.col("doc_id"), _san(F.col("text")))
@@ -514,7 +514,7 @@ def q_warc_revisit_stats(spark, sf_dir):
     _nll4_exact idiom), so both engines emit identical bits."""
     from cassandra_data_migrator_spark.sources.warc import warc_typed_records
 
-    out_dir = _binfile_stage_dir(spark, sf_dir, tag="warcrv")
+    out_dir = scratch_dir(spark, "warcrv", sf_dir)
 
     d = _t(spark, sf_dir, "documents")
     rows = d.select(
@@ -632,7 +632,7 @@ def q_warc_wet_roundtrip(spark, sf_dir):
     applied to the writer)."""
     from cassandra_data_migrator_spark.sources.warc import warc_records
 
-    out_dir = _binfile_stage_dir(spark, sf_dir, tag="warcwet")
+    out_dir = scratch_dir(spark, "warcwet", sf_dir)
 
     d = _t(spark, sf_dir, "documents")
     html = _doc_html(F.col("doc_id"), _san(F.col("text")))
@@ -695,7 +695,7 @@ def q_warc_wat_roundtrip(spark, sf_dir):
     from cassandra_data_migrator_spark.functions.json_ops import extract_json
     from cassandra_data_migrator_spark.sources.warc import warc_records
 
-    out_dir = _binfile_stage_dir(spark, sf_dir, tag="warcwat")
+    out_dir = scratch_dir(spark, "warcwat", sf_dir)
 
     d = _t(spark, sf_dir, "documents")
     wat = F.concat(
@@ -771,7 +771,7 @@ def q_crawl_curation_pipeline(spark, sf_dir):
     window shuffle on the text hash."""
     from cassandra_data_migrator_spark.sources.warc import warc_decoded_pages
 
-    out_dir = _binfile_stage_dir(spark, sf_dir, tag="warccur")
+    out_dir = scratch_dir(spark, "warccur", sf_dir)
 
     d = _t(spark, sf_dir, "documents")
     html = _charset_html(F.col("doc_id"), _san(F.col("text")))

@@ -8,12 +8,22 @@ runtime-settable ones to an externally provided session (the verify driver owns
 its own SparkSession); ``get_spark`` builds a local session for tests/bench.
 ``ship_package`` makes the package importable on Python workers, and
 ``arrow_map`` runs a module-level per-row kernel over Arrow batches.
+
+This module is also the one owner of session-scoped state: a record per
+Spark application holds the memos (``memo``), the standing artifact tables
+(``artifact``, dropped by ``purge_session_artifacts``) and one scratch root
+(``scratch_dir``). Nothing else in the package keys state by application.
 """
 
 from __future__ import annotations
 
+import atexit
 import functools
+import hashlib
 import os
+import shutil
+import tempfile
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType
@@ -59,7 +69,115 @@ BUILD_CONFS = {
 
 
 _PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
-_SHIPPED_APPS: set[str] = set()
+
+
+@dataclass
+class _AppRecord:
+    """Everything the process keeps for one Spark application."""
+
+    app_id: str
+    memos: dict = field(default_factory=dict)
+    artifacts: dict = field(default_factory=dict)
+    root: str | None = None
+
+
+_record: _AppRecord | None = None
+
+
+def _drop_record() -> None:
+    """Forget the record and delete its scratch root. Runs at exit and when
+    a new application appears: only one SparkContext lives in a process,
+    so the old application is dead by then."""
+    global _record
+    if _record is not None and _record.root is not None:
+        shutil.rmtree(_record.root, ignore_errors=True)
+    _record = None
+
+
+atexit.register(_drop_record)
+
+
+def _app_record(spark: SparkSession) -> _AppRecord:
+    global _record
+    app_id = spark.sparkContext.applicationId
+    if _record is None or _record.app_id != app_id:
+        _drop_record()
+        _record = _AppRecord(app_id)
+    return _record
+
+
+def memo(spark: SparkSession, key, build):
+    """``build()``, computed once per application and kept until it ends.
+
+    For deterministic derivations only (trained centroids and codebooks,
+    the prefix-filter slot): a memo changes cost, never results. A purge
+    leaves memos alone, so training is paid once per session, not once
+    per run."""
+    memos = _app_record(spark).memos
+    if key not in memos:
+        memos[key] = build()
+    return memos[key]
+
+
+def scratch_dir(spark: SparkSession, *parts: str) -> str:
+    """An existing directory ``<root>/<parts...>`` for the application.
+
+    The root is one ``mkdtemp`` (0700, unpredictable name) per
+    application, removed at exit or when the next application replaces the
+    record: never a fixed, world-shared temp path that could glob back a
+    previous run's files or be squatted. A part holding a path separator
+    (a fixture dir) becomes its basename plus a digest of its absolute
+    path, so two fixtures that share a basename never share a dir."""
+    rec = _app_record(spark)
+    if rec.root is None:
+        rec.root = tempfile.mkdtemp(prefix="cdm_spark_")
+    path = os.path.join(rec.root, *(_path_part(p) for p in parts))
+    os.makedirs(path, exist_ok=True)
+    return path
+
+
+def _path_part(part: str) -> str:
+    if os.sep not in part:
+        return part
+    digest = hashlib.md5(os.path.abspath(part).encode()).hexdigest()[:12]
+    return f"{os.path.basename(part.rstrip(os.sep))}_{digest}"
+
+
+def artifact(spark: SparkSession, tag: str, build) -> DataFrame:
+    """Standing table ``build()``, written once per application as parquet
+    under the ``artifacts`` scratch subtree and read back by every consumer
+    (edge lists, signature tables: what a real pipeline keeps between jobs
+    instead of recomputing per query). Disk-backed on purpose, never a
+    cache or localCheckpoint: a host that drops cached blocks between keys
+    (bench.py does) would break the next consumer."""
+    arts = _app_record(spark).artifacts
+    if tag not in arts:
+        digest = hashlib.md5(tag.encode()).hexdigest()[:12]
+        path = scratch_dir(spark, "artifacts", f"{tag.split('|')[0]}_{digest}")
+        # Written plain: a REBALANCE hint for file sizing measured neutral
+        # at fixture scale, and its extra exchange is a real cost at scale.
+        build().write.mode("overwrite").parquet(path)
+        arts[tag] = spark.read.parquet(path)
+    return arts[tag]
+
+
+def purge_session_artifacts(spark: SparkSession) -> None:
+    """Forget and delete every standing artifact of the application, so
+    the next consumer pays its own full derivation. bench.py and perfbench
+    call this before every timed run, so the reported time charges the
+    build. Results are unaffected: every build is deterministic.
+
+    Two limits of the purge:
+
+    - DataFrames returned before a purge become invalid: they read the
+      deleted parquet, so re-run their builder instead of reusing them.
+    - It clears only the artifacts. Memos (Lloyd and codebook training,
+      the prefix-filter slot, the shipped package) and every scratch dir
+      outside the artifact subtree survive it."""
+    rec = _app_record(spark)
+    rec.artifacts.clear()
+    if rec.root is not None:
+        shutil.rmtree(os.path.join(rec.root, "artifacts"), ignore_errors=True)
 
 
 @functools.cache
@@ -68,8 +186,6 @@ def _package_zip() -> str:
     named by a digest of their contents, so processes running the same
     code share one file in the temp dir instead of leaving one each."""
     import glob
-    import hashlib
-    import tempfile
     import zipfile
 
     root = os.path.dirname(_PACKAGE_DIR)
@@ -101,16 +217,12 @@ def ship_package(spark: SparkSession) -> None:
     started outside the repository (or an executor JVM on another host)
     runs workers that cannot import ``cassandra_data_migrator_spark``.
     This zips the package's ``.py`` files and registers the zip with
-    ``sc.addPyFile`` once per ``applicationId``. The rule that follows:
-    a Python kernel is a module-level function of this package, run
-    through :func:`arrow_map`, which ships the package before it builds
-    the plan; cloudpickle sends such functions by reference, so a kernel
-    never needs an inlined copy of the code it calls."""
-    sc = spark.sparkContext
-    app = sc.applicationId
-    if app not in _SHIPPED_APPS:
-        sc.addPyFile(_package_zip())
-        _SHIPPED_APPS.add(app)
+    ``sc.addPyFile`` once per application (a :func:`memo`). The rule that
+    follows: a Python kernel is a module-level function of this package,
+    run through :func:`arrow_map`, which ships the package before it
+    builds the plan; cloudpickle sends such functions by reference, so a
+    kernel never needs an inlined copy of the code it calls."""
+    memo(spark, "ship_package", lambda: spark.sparkContext.addPyFile(_package_zip()))
 
 
 def arrow_map(df: DataFrame, fn, schema: StructType | str) -> DataFrame:

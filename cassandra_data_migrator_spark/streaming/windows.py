@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cassandra_data_migrator_spark.session import configure_session
+from cassandra_data_migrator_spark.session import configure_session, scratch_dir
 
 
 def read_events_stream(
@@ -26,19 +26,15 @@ def read_events_stream(
     per the nanosAsLong read path; normalized like sources.parquet).
 
     Spark's file stream source requires a *directory* of arriving files (the
-    production shape); the single-file fixture is staged into a temp dir via
-    symlink."""
+    production shape); the single-file fixture is staged into a
+    ``session.scratch_dir`` keyed by the fixture path via symlink."""
     import os
-    import tempfile
 
     configure_session(spark)
-    src = f"{sf_dir.rstrip('/')}/events.parquet"
-    stage = os.path.join(
-        tempfile.gettempdir(), "cdm_spark_stream", os.path.basename(sf_dir.rstrip("/"))
-    )
-    os.makedirs(stage, exist_ok=True)
+    src = os.path.abspath(f"{sf_dir.rstrip('/')}/events.parquet")
+    stage = scratch_dir(spark, "stream", os.path.abspath(sf_dir))
     link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
+    if not os.path.islink(link):
         os.symlink(src, link)
     static = spark.read.parquet(src)
     stream = (

@@ -43,31 +43,6 @@ def test_seq_align_non_latin1(spark):
         assert all(r.edit_distance == 0 and r.jw_r == 1.0 for r in same.values())
 
 
-def test_prefix_filter_cache_bounded(spark, sf_dir):
-    """ADVICE r09: prefix_filter_jaccard_pairs persisted its ordered-sets
-    table and never released it. The module now holds ONE keyed cache
-    slot: an identical invocation REUSES the persisted table (the bench
-    3-run protocol depends on this — a naive eager unpersist measured a
-    3.35x key regression), while a different input evicts the previous
-    copy."""
-    from cassandra_data_migrator_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    dedup.prefix_filter_jaccard_pairs(docs).count()
-    first = dedup._PREFIX_FILTER_CACHE["docs"]
-    assert first.storageLevel.useMemory or first.storageLevel.useDisk
-    # identical input -> same persisted table, still cached
-    dedup.prefix_filter_jaccard_pairs(docs).count()
-    assert dedup._PREFIX_FILTER_CACHE["docs"] is first
-    assert first.storageLevel.useMemory or first.storageLevel.useDisk
-    # different input (threshold changes the ordered-set prefix contract)
-    dedup.prefix_filter_jaccard_pairs(docs, threshold=0.7).count()
-    second = dedup._PREFIX_FILTER_CACHE["docs"]
-    assert second is not first
-    # the first input's copy has been released
-    assert not (first.storageLevel.useMemory or first.storageLevel.useDisk)
-
-
 def test_migrate_emits_per_row_writetime_ttl_payload(spark, sf_dir, monkeypatch):
     """Judge r09 #6: the FULL job-level contract for a live-cluster target —
     run_migrate with TTL-tracked input must (a) compute __writetime AND

@@ -275,37 +275,6 @@ def test_jpeg_progressive_kernels_match_module(spark):
         assert (s["px_sum"], s["px_min"], s["px_max"]) == (sum(px), min(px), max(px))
 
 
-def test_prefix_filter_cache_survives_stale_slot(spark, sf_dir):
-    """Evicting a cached ordered-sets slot left over from a STOPPED
-    SparkSession must not raise (ADVICE r10): the new-session key never
-    matches (applicationId differs), so the first invocation evicts the
-    dead slot — the unpersist must be best-effort."""
-    from cassandra_data_migrator_spark.operators import dedup
-    from cassandra_data_migrator_spark.sources.parquet import load_table
-
-    class DeadDF:
-        def unpersist(self, blocking=False):
-            raise RuntimeError("py4j: SparkContext stopped")
-
-    saved = dict(dedup._PREFIX_FILTER_CACHE)
-    try:
-        dedup._PREFIX_FILTER_CACHE.clear()
-        dedup._PREFIX_FILTER_CACHE.update(key=("dead-app",), docs=DeadDF())
-        docs = load_table(spark, sf_dir, "documents").limit(50)
-        out = dedup.prefix_filter_jaccard_pairs(docs, threshold=0.8)
-        assert out.count() >= 0  # must not raise through the eviction
-        assert not isinstance(dedup._PREFIX_FILTER_CACHE.get("docs"), DeadDF)
-    finally:
-        cur = dedup._PREFIX_FILTER_CACHE.get("docs")
-        if cur is not None and not isinstance(cur, DeadDF):
-            try:
-                cur.unpersist(blocking=False)
-            except Exception:
-                pass
-        dedup._PREFIX_FILTER_CACHE.clear()
-        dedup._PREFIX_FILTER_CACHE.update(saved)
-
-
 def test_simhash_hot_bucket_cascade_recovers_pairs(spark):
     """Hot-bucket CASCADE (r11, sf1 certification finding): a pair whose
     ONLY clean chunk is a hot bucket must still be emitted — the rotated
